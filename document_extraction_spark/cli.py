@@ -103,26 +103,19 @@ def validate(args) -> str | None:
 
 
 def attach_metrics(out, structured: bool):
-    """Attach the CLI's metrics as an ``Observation`` on the OUTPUT frame:
-    the aggregates accumulate inside the same job that writes the parquet,
-    so the CLI runs ONE scan total (the round-2 version re-read the result
-    from disk — a second full pass that scales with the corpus). Returns
-    (observed_df, observation); read ``observation.get`` only after the
-    write action completes."""
-    from pyspark.sql import Observation
-    from pyspark.sql import functions as F
+    """Attach the CLI's metrics to the OUTPUT frame with
+    ``extract_pipeline.observe_metrics``: the aggregates accumulate inside
+    the same job that writes the parquet, so the CLI runs ONE scan total.
+    Structured output keeps only the turn and parse-failure counts (its
+    ``parse_failed`` is the structured parse's). Returns (observed_df,
+    metrics); read ``metrics.get`` only after the write action completes."""
+    from document_extraction_spark.plans.extract_pipeline import (
+        METRIC_NAMES,
+        observe_metrics,
+    )
 
-    obs = Observation("cli_metrics")
-    metrics = [
-        F.count(F.lit(1)).alias("n_turns"),
-        F.sum(F.col("parse_failed").cast("long")).alias("n_parse_failed"),
-    ]
-    if not structured:
-        metrics += [
-            F.sum("bytes_in").alias("bytes_in"),
-            F.sum("bytes_out").alias("bytes_out"),
-        ]
-    return out.observe(obs, *metrics), obs
+    names = ("n_turns", "n_parse_failed") if structured else METRIC_NAMES
+    return observe_metrics(out, names=names)
 
 
 def run_cli(argv: list[str] | None = None) -> int:
@@ -158,9 +151,9 @@ def run_cli(argv: list[str] | None = None) -> int:
             payload_col="text",
             keep_cols=["conv_id", "turn_idx", "extract_parse_failed"],
         )
-    out, obs = attach_metrics(out, structured=bool(args.schema))
+    out, metrics = attach_metrics(out, structured=bool(args.schema))
     out.write.mode("overwrite").parquet(args.dst)
-    got = {k: (v if v is not None else 0) for k, v in obs.get.items()}
+    got = metrics.get
     if args.schema:
         print(json.dumps({"mode": "structured", **got}))
     else:

@@ -26,23 +26,24 @@ from __future__ import annotations
 
 import datetime as dt
 
+from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from document_extraction_spark.plans.extract_pipeline import build_extract_df
+from document_extraction_spark.plans.extract_pipeline import (
+    METRIC_NAMES,
+    METRICS_SCHEMA,
+    build_extract_df,
+    observe_metrics,
+)
 
 MANIFEST_SCHEMA = T.StructType(
     [
         T.StructField("run_id", T.StringType()),
         T.StructField("n_buckets", T.IntegerType()),
         T.StructField("bucket", T.IntegerType()),
-        T.StructField("n_turns", T.LongType()),
-        T.StructField("n_parse_failed", T.LongType()),
-        T.StructField("n_blocks_kept", T.LongType()),
-        T.StructField("n_blocks_dropped", T.LongType()),
-        T.StructField("bytes_in", T.LongType()),
-        T.StructField("bytes_out", T.LongType()),
+        *METRICS_SCHEMA.fields,
         T.StructField("committed_at", T.TimestampType()),
     ]
 )
@@ -53,9 +54,15 @@ def bucket_col(n_buckets: int):
 
 
 def read_manifest(spark: SparkSession, ckpt_path: str) -> DataFrame:
+    """The committed manifest rows; a checkpoint path that does not exist
+    yet reads as empty. Any other failure raises: an unreadable manifest
+    read as empty would bypass the ``n_buckets`` guard and re-extract every
+    bucket."""
     try:
         return spark.read.schema(MANIFEST_SCHEMA).parquet(ckpt_path)
-    except Exception:
+    except AnalysisException as ex:
+        if ex.getCondition() != "PATH_NOT_FOUND":
+            raise
         return spark.createDataFrame([], MANIFEST_SCHEMA)
 
 
@@ -102,8 +109,13 @@ def run_resumable(
         extracted = build_extract_df(
             wave_df.drop("bucket"), partitions=partitions_per_wave
         ).withColumn("bucket", bucket_col(n_buckets))
+        # the manifest metrics accumulate in the write itself: one
+        # conditional aggregate per bucket, so an empty bucket totals 0
+        observed, metrics = observe_metrics(
+            extracted, {b: f"bucket = {b}" for b in wave}
+        )
         (
-            extracted.sortWithinPartitions("conv_id", "turn_idx")
+            observed.sortWithinPartitions("conv_id", "turn_idx")
             .write.mode("overwrite")
             # pinned on the writer: relying on the session conf would wipe
             # previously committed buckets under the default static mode
@@ -111,41 +123,10 @@ def run_resumable(
             .partitionBy("bucket")
             .parquet(dst_path)
         )  # dynamic mode: only buckets present in this wave are replaced
-
-        try:
-            written = spark.read.parquet(dst_path)
-        except Exception:
-            # a wave whose buckets were all empty leaves no data files yet
-            written = None
-        stats = (
-            written.filter(F.col("bucket").isin(wave))
-            .groupBy("bucket")
-            .agg(
-                F.count(F.lit(1)).alias("n_turns"),
-                F.sum(F.col("parse_failed").cast("long")).alias("n_parse_failed"),
-                F.sum("n_blocks_kept").alias("n_blocks_kept"),
-                F.sum("n_blocks_dropped").alias("n_blocks_dropped"),
-                F.sum("bytes_in").alias("bytes_in"),
-                F.sum("bytes_out").alias("bytes_out"),
-            )
-            .collect()
-        ) if written is not None else []
         now = dt.datetime.now(dt.timezone.utc).replace(tzinfo=None)
-        by_bucket = {r["bucket"]: r for r in stats}
         manifest_rows = [
-            (
-                run_id,
-                n_buckets,
-                b,
-                by_bucket[b]["n_turns"] if b in by_bucket else 0,
-                by_bucket[b]["n_parse_failed"] if b in by_bucket else 0,
-                by_bucket[b]["n_blocks_kept"] if b in by_bucket else 0,
-                by_bucket[b]["n_blocks_dropped"] if b in by_bucket else 0,
-                by_bucket[b]["bytes_in"] if b in by_bucket else 0,
-                by_bucket[b]["bytes_out"] if b in by_bucket else 0,
-                now,
-            )
-            for b in wave  # empty buckets commit too (they are "done")
+            (run_id, n_buckets, b, *(got[n] for n in METRIC_NAMES), now)
+            for b, got in metrics.get.items()  # empty buckets commit too ("done")
         ]
         spark.createDataFrame(manifest_rows, MANIFEST_SCHEMA).coalesce(1).write.mode(
             "append"

@@ -16,6 +16,21 @@ from pyspark.sql import SparkSession
 # upstream chunking of oversized payloads (plans/extract_pipeline.py).
 ARROW_MAX_RECORDS_PER_BATCH = "2048"
 
+# A file scan charges each file its bytes plus openCostInBytes, and splits
+# are sized max(openCost, charged bytes / cores). Spark's 4 MB default
+# prices opening a file like reading 4 MB, but the extraction kernel spends
+# ~0.25 ms of Python per KB of payload text (~170 us per mixed turn of
+# ~0.7 KB, 4-vCPU x86), and a transcripts parquet file holds ~3 KB of text
+# per KB, so 4 MB of file is seconds of kernel work while a parquet open
+# costs milliseconds. Under 4 MB, 16k mixed turns in eight ~435 KB files
+# and a small ninth pack three files to a split: 3 tasks on 4 cores (6000 /
+# 6000 / 4014 rows). At 256 KB they reach the core count, 4 splits of ~4000
+# rows; 1k short documents in 4 files (4 x 250 rows) and 8k plain turns in
+# 64 files (4 x 2000) keep their splits. Any value from 64 KB to 1 MB gives
+# the same counts; 8 KB over-splits (5 unbalanced splits). Inputs of large
+# files split as before, since their bytes per core dwarf the open cost.
+FILE_OPEN_COST_BYTES = str(256 * 1024)
+
 
 def get_spark(
     app_name: str = "document_extraction_spark",
@@ -49,6 +64,7 @@ def get_spark(
             ARROW_MAX_RECORDS_PER_BATCH,
         )
         .config("spark.sql.sources.partitionOverwriteMode", "dynamic")
+        .config("spark.sql.files.openCostInBytes", FILE_OPEN_COST_BYTES)
         .config("spark.ui.enabled", "false")
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "24g"))
     )

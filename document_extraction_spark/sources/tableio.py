@@ -18,6 +18,7 @@ verbs, so moving the engine onto a real lakehouse is a constructor change.
 
 from __future__ import annotations
 
+from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 
 
@@ -80,12 +81,17 @@ class TableIO:
         return f"{self.catalog}.{name}" if self.catalog else f"{self.root}/{name}"
 
     def exists(self, name: str) -> bool:
+        """A parquet table is absent when its path does not exist or holds
+        no data files. Any other read failure raises: a corrupt table taken
+        as absent would be silently overwritten."""
         if self.catalog:
             return self.spark.catalog.tableExists(self._ident(name))
         try:
             self.spark.read.parquet(self._ident(name)).schema
             return True
-        except Exception:
+        except AnalysisException as ex:
+            if ex.getCondition() not in ("PATH_NOT_FOUND", "UNABLE_TO_INFER_SCHEMA"):
+                raise
             return False
 
     # -- verbs -------------------------------------------------------------

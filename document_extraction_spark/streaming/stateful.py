@@ -8,10 +8,11 @@ state store bounded at 10^12-turn scale: finished conversations age out)."""
 
 from __future__ import annotations
 
+from contextlib import contextmanager
 from typing import Any, Iterable, Iterator
 
 import pandas as pd
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
@@ -33,6 +34,26 @@ OUTPUT_SCHEMA = T.StructType(
 )
 
 STATE_TTL_MS = 60 * 60 * 1000  # 1h inactivity -> state eviction
+
+NO_DATA_BATCHES = "spark.sql.streaming.noDataMicroBatches.enabled"
+
+
+@contextmanager
+def drain_start(spark: SparkSession) -> Iterator[None]:
+    """Start an ``availableNow`` query of a processing-time-timeout operator
+    inside this block, so that it stops once its input is consumed.
+
+    Such an operator asks for another batch after every batch, data or not,
+    so the query never finds itself drained and runs no-data batches
+    forever. A query keeps the session conf it started with: started here,
+    with no-data batches off, it stops after its last data batch, and
+    timeouts fire only in batches that carry data."""
+    prev = spark.conf.get(NO_DATA_BATCHES)
+    spark.conf.set(NO_DATA_BATCHES, "false")
+    try:
+        yield
+    finally:
+        spark.conf.set(NO_DATA_BATCHES, prev)
 
 
 def _update(
@@ -66,7 +87,8 @@ def _update(
 
 
 def conversation_stats_stream(sdf: DataFrame) -> DataFrame:
-    """Streaming per-conversation running stats (update mode)."""
+    """Streaming per-conversation running stats (update mode). Start an
+    ``availableNow`` query of it inside ``drain_start``."""
     from document_extraction_spark.session import ensure_worker_package
 
     ensure_worker_package(sdf.sparkSession)

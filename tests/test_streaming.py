@@ -83,19 +83,23 @@ def test_windowed_turn_rates_with_watermark(spark, stream_src, tmp_path):
 
 
 def test_stateful_conversation_stats(spark, stream_src, tmp_path):
-    from document_extraction_spark.streaming.stateful import conversation_stats_stream
+    from document_extraction_spark.streaming.stateful import (
+        conversation_stats_stream,
+        drain_start,
+    )
 
     src, _ = stream_src
     sdf = XS.read_transcript_stream(spark, src)
-    q = (
-        conversation_stats_stream(sdf)
-        .writeStream.format("memory")
-        .queryName("convstats")
-        .outputMode("update")
-        .option("checkpointLocation", str(tmp_path / "ckpt3"))
-        .trigger(availableNow=True)
-        .start()
-    )
+    with drain_start(spark):
+        q = (
+            conversation_stats_stream(sdf)
+            .writeStream.format("memory")
+            .queryName("convstats")
+            .outputMode("update")
+            .option("checkpointLocation", str(tmp_path / "ckpt3"))
+            .trigger(availableNow=True)
+            .start()
+        )
     q.awaitTermination(300)
     got = {r["conv_id"]: r for r in spark.sql("SELECT * FROM convstats").collect()}
 
