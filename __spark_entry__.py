@@ -1972,22 +1972,11 @@ def x_stream_conv_stats(spark, sf_dir):
 
     from document_extraction_spark.sources.transcripts import write_transcripts_parquet
     from document_extraction_spark.streaming.extract_stream import read_transcript_stream
-    from document_extraction_spark.streaming.stateful import (
-        conversation_stats_stream,
-        drain_start,
-    )
+    from document_extraction_spark.streaming.stateful import start_conversation_stats
 
     src = tempfile.mkdtemp(prefix="dex_convstream_src_")
     write_transcripts_parquet(src, n_convs=6, seed=53, rows_per_file=40)
-    stats = conversation_stats_stream(read_transcript_stream(spark, src))
-    with drain_start(spark):
-        q = (
-            stats.writeStream.format("memory")
-            .queryName("conv_stats")
-            .outputMode("update")
-            .trigger(availableNow=True)
-            .start()
-        )
+    q = start_conversation_stats(read_transcript_stream(spark, src), "conv_stats")
     q.awaitTermination(300)
     # update mode may emit one row per key per micro-batch: keep the final
     # (max n_turns) row per conversation

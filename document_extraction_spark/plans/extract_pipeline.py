@@ -288,7 +288,6 @@ def run(
     partitions: int | None = None,
     sort_within: bool = True,
     collect_metrics: bool = True,
-    max_payload_chars: int | None = None,
 ) -> DataFrame | None:
     """Execute the full pipeline src -> dst (parquet dirs) in one pass: the
     write is the only job over the data.
@@ -299,9 +298,7 @@ def run(
     per-partition view of the written table, use ``metrics_by_partition``
     on ``spark.read.parquet(dst_path)``."""
     df = read_transcripts(spark, src_path)
-    extracted = build_extract_df(
-        df, partitions=partitions, max_payload_chars=max_payload_chars
-    )
+    extracted = build_extract_df(df, partitions=partitions)
     if sort_within:
         # clustered output files: cheap local sort, no extra shuffle
         extracted = extracted.sortWithinPartitions("conv_id", "turn_idx")

@@ -8,12 +8,13 @@ state store bounded at 10^12-turn scale: finished conversations age out)."""
 
 from __future__ import annotations
 
-from contextlib import contextmanager
+import threading
 from typing import Any, Iterable, Iterator
 
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import types as T
+from pyspark.sql.streaming import StreamingQuery
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 STATE_SCHEMA = T.StructType(
@@ -36,24 +37,7 @@ OUTPUT_SCHEMA = T.StructType(
 STATE_TTL_MS = 60 * 60 * 1000  # 1h inactivity -> state eviction
 
 NO_DATA_BATCHES = "spark.sql.streaming.noDataMicroBatches.enabled"
-
-
-@contextmanager
-def drain_start(spark: SparkSession) -> Iterator[None]:
-    """Start an ``availableNow`` query of a processing-time-timeout operator
-    inside this block, so that it stops once its input is consumed.
-
-    Such an operator asks for another batch after every batch, data or not,
-    so the query never finds itself drained and runs no-data batches
-    forever. A query keeps the session conf it started with: started here,
-    with no-data batches off, it stops after its last data batch, and
-    timeouts fire only in batches that carry data."""
-    prev = spark.conf.get(NO_DATA_BATCHES)
-    spark.conf.set(NO_DATA_BATCHES, "false")
-    try:
-        yield
-    finally:
-        spark.conf.set(NO_DATA_BATCHES, prev)
+_START_LOCK = threading.Lock()
 
 
 def _update(
@@ -87,8 +71,8 @@ def _update(
 
 
 def conversation_stats_stream(sdf: DataFrame) -> DataFrame:
-    """Streaming per-conversation running stats (update mode). Start an
-    ``availableNow`` query of it inside ``drain_start``."""
+    """Streaming per-conversation running stats (update mode). To drain an
+    input once, start it with ``start_conversation_stats``."""
     from document_extraction_spark.session import ensure_worker_package
 
     ensure_worker_package(sdf.sparkSession)
@@ -103,6 +87,37 @@ def conversation_stats_stream(sdf: DataFrame) -> DataFrame:
             timeoutConf=GroupStateTimeout.ProcessingTimeTimeout,
         )
     )
+
+
+def start_conversation_stats(sdf: DataFrame, query_name: str) -> StreamingQuery:
+    """Start ``conversation_stats_stream(sdf)`` as an ``availableNow`` query
+    into the in-memory table ``query_name``; it stops once its input is
+    consumed.
+
+    The processing-time timeout makes the operator ask for another batch
+    after every batch, data or not, so with no-data batches on, an
+    availableNow query of it never finds itself drained. A query keeps the
+    session conf it started with: this one starts with no-data batches off,
+    so it stops after its last data batch, and timeouts fire only in
+    batches that carry data. The setting is off for the whole session while
+    ``start()`` runs: a query that another thread starts at that moment
+    also starts without no-data batches. Calls of this function do not race
+    each other on the setting."""
+    writer = (
+        conversation_stats_stream(sdf)
+        .writeStream.format("memory")
+        .queryName(query_name)
+        .outputMode("update")
+        .trigger(availableNow=True)
+    )
+    spark = sdf.sparkSession
+    with _START_LOCK:
+        prev = spark.conf.get(NO_DATA_BATCHES)
+        spark.conf.set(NO_DATA_BATCHES, "false")
+        try:
+            return writer.start()
+        finally:
+            spark.conf.set(NO_DATA_BATCHES, prev)
 
 
 # --- transformWithStateInPandas (Spark 4 stateful processor API) ------------

@@ -23,21 +23,39 @@ def src(tmp_path_factory):
     return path, n
 
 
-@pytest.mark.parametrize("max_payload_chars", [None, 300])
-def test_run_totals_equal_reread(spark, src, tmp_path, max_payload_chars):
+def _reread_totals(spark, dst):
+    return (
+        P.metrics_by_partition(spark.read.parquet(dst))
+        .agg(*[F.sum(c).alias(c) for c in P.METRIC_NAMES])
+        .collect()[0]
+        .asDict()
+    )
+
+
+def test_run_totals_equal_reread(spark, src, tmp_path):
     path, n = src
     dst = str(tmp_path / "out")
-    got = P.run(spark, path, dst, max_payload_chars=max_payload_chars)
+    got = P.run(spark, path, dst)
     assert got.schema == P.METRICS_SCHEMA
     (row,) = got.collect()
-    reread = P.metrics_by_partition(spark.read.parquet(dst)).agg(
-        *[F.sum(c).alias(c) for c in P.METRIC_NAMES]
-    ).collect()[0]
-    assert row.asDict() == reread.asDict()
+    assert row.asDict() == _reread_totals(spark, dst)
     assert row["n_turns"] == n
     assert row["n_html"] + row["n_pdf"] + row["n_plain"] == n
     assert min(row["n_html"], row["n_pdf"], row["n_plain"]) > 0
-    assert (row["n_truncated"] > 0) == (max_payload_chars is not None)
+    assert row["n_truncated"] == 0
+
+
+def test_observed_truncation_equals_reread(spark, src, tmp_path):
+    """The truncation term, observed on a capped extraction's write."""
+    path, n = src
+    dst = str(tmp_path / "out_capped")
+    extracted = P.build_extract_df(spark.read.parquet(path), max_payload_chars=300)
+    observed, metrics = P.observe_metrics(extracted)
+    observed.write.mode("overwrite").parquet(dst)
+    got = metrics.get
+    assert got == _reread_totals(spark, dst)
+    assert got["n_turns"] == n
+    assert 0 < got["n_truncated"] < n
 
 
 def test_run_is_one_pass_that_never_reads_dst(spark, src, tmp_path):

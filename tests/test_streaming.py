@@ -82,24 +82,12 @@ def test_windowed_turn_rates_with_watermark(spark, stream_src, tmp_path):
     assert all(r["win"]["start"] is not None for r in rows)
 
 
-def test_stateful_conversation_stats(spark, stream_src, tmp_path):
-    from document_extraction_spark.streaming.stateful import (
-        conversation_stats_stream,
-        drain_start,
-    )
+def test_stateful_conversation_stats(spark, stream_src):
+    from document_extraction_spark.streaming.stateful import start_conversation_stats
 
     src, _ = stream_src
     sdf = XS.read_transcript_stream(spark, src)
-    with drain_start(spark):
-        q = (
-            conversation_stats_stream(sdf)
-            .writeStream.format("memory")
-            .queryName("convstats")
-            .outputMode("update")
-            .option("checkpointLocation", str(tmp_path / "ckpt3"))
-            .trigger(availableNow=True)
-            .start()
-        )
+    q = start_conversation_stats(sdf, "convstats")
     q.awaitTermination(300)
     got = {r["conv_id"]: r for r in spark.sql("SELECT * FROM convstats").collect()}
 
