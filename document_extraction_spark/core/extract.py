@@ -30,15 +30,20 @@ from document_extraction_spark.core import pdf_layout as P
 
 def _finalize_text(kind: str, blocks: list[str], parse_failed: bool,
                    raw: str) -> tuple[str, bool]:
-    """Shared tail: normalize kept blocks, join, degrade on failure.
+    """Shared tail: join kept blocks, normalize, degrade on failure.
+
+    One normalize over the joined blocks equals joining the non-empty
+    per-block normalizations: the line trim and the 3+ newline collapse
+    absorb empty blocks and whitespace at block edges, and NFC never
+    composes across a newline (pinned by a property test).
 
     Degrading to the normalized raw payload (instead of crashing) is the
     deliberate divergence from the reference's uncaught json.loads
     (extractor.py:120): no turn is silently lost."""
-    norm_blocks = [t for t in (N.normalize_one(b, fence=False) for b in blocks) if t]
-    if parse_failed or (not norm_blocks and kind != C.KIND_PLAIN):
+    text = N.normalize_one("\n\n".join(blocks), fence=False)
+    if parse_failed or (not text and kind != C.KIND_PLAIN):
         return N.normalize_one(raw), True
-    return "\n\n".join(norm_blocks), parse_failed
+    return text, parse_failed
 
 
 def _finalize(kind: str, blocks: list[str], n_kept: int, n_dropped: int,

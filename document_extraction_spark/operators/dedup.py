@@ -326,7 +326,9 @@ def ngram_jaccard_pairs(df: DataFrame, threshold: float = 0.6,
     """Near-dup pairs by exact n-gram Jaccard >= threshold via shingle
     self-join (the verification step of the MinHash pipeline; also usable
     directly at moderate scale)."""
-    sh = shingles(df, id_col, text_col, width)
+    # materialized once, referenced three times (sizes, a, b): the shingle
+    # kernel is a Python node, so each reference would re-run it
+    sh = shingles(df, id_col, text_col, width).localCheckpoint(eager=False)
     sizes = sh.groupBy("doc_id").agg(F.count(F.lit(1)).cast("long").alias("n_sh"))
     a, b = sh.alias("a"), sh.alias("b")
     inter = (
@@ -454,7 +456,11 @@ def near_dup_pairs_pipeline(
     """The composed scale-safe near-dup pipeline: MinHash signatures (map-only)
     -> LSH banding candidates (bucket equi-join) -> exact Jaccard verification
     keyed by the candidate pairs. This is the plan to run at 100 TB;
-    ``ngram_jaccard_pairs`` is its small-scale exactness cross-check."""
+    ``ngram_jaccard_pairs`` is its small-scale exactness cross-check.
+
+    ``df`` is read twice, by the signatures and by the verification, and
+    the two reads share no work. An expensive ``df`` (an extraction or a
+    shuffle) should come in materialized, as ``curate_documents`` does."""
     sig = minhash_signatures(df, id_col, text_col)
     cand = lsh_candidate_pairs(sig)
     return jaccard_verify_candidates(

@@ -24,8 +24,7 @@ runtime jar (SURVEY.md §7 "Iceberg absence").
 
 from __future__ import annotations
 
-import datetime as dt
-
+import pandas as pd
 from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -123,11 +122,17 @@ def run_resumable(
             .partitionBy("bucket")
             .parquet(dst_path)
         )  # dynamic mode: only buckets present in this wave are replaced
-        now = dt.datetime.now(dt.timezone.utc).replace(tzinfo=None)
-        manifest_rows = [
-            (run_id, n_buckets, b, *(got[n] for n in METRIC_NAMES), now)
-            for b, got in metrics.get.items()  # empty buckets commit too ("done")
-        ]
+        # from pandas, as run() builds its metrics row: a local relation,
+        # where a list of tuples becomes an RDD of one Python task per core;
+        # the tz-aware commit time reads back as UTC whatever the host's zone
+        now = pd.Timestamp.now(tz="UTC")
+        manifest_rows = pd.DataFrame(
+            [
+                (run_id, n_buckets, b, *(got[n] for n in METRIC_NAMES), now)
+                for b, got in metrics.get.items()  # empty buckets commit too ("done")
+            ],
+            columns=MANIFEST_SCHEMA.names,
+        )
         spark.createDataFrame(manifest_rows, MANIFEST_SCHEMA).coalesce(1).write.mode(
             "append"
         ).parquet(ckpt_path)

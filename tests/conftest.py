@@ -23,3 +23,24 @@ def spark():
     s = get_spark("tests", master="local[4]", shuffle_partitions=8)
     s.sparkContext.setLogLevel("ERROR")
     yield s
+
+
+@pytest.fixture
+def counted_reads(spark):
+    """``counted_reads(df) -> (df', acc)``: ``df'`` is ``df`` behind an
+    identity ``mapInPandas`` that adds each batch's row count to the Spark
+    accumulator ``acc``. After one action on a plan built over ``df'``,
+    ``acc.value`` is how many input rows that plan read; a subtree that
+    several consumers re-derive reads its input once per consumer."""
+
+    def wrap(df):
+        acc = spark.sparkContext.accumulator(0)
+
+        def count(batches):
+            for pdf in batches:
+                acc.add(len(pdf))
+                yield pdf
+
+        return df.mapInPandas(count, df.schema), acc
+
+    return wrap

@@ -34,3 +34,16 @@ def test_curation_near_dup_drop(spark):
     }
     assert 4 in out and 5 not in out     # pairwise near-dup: larger id dropped
     assert 0 in out
+
+
+def test_near_dup_curation_reads_each_document_once(spark, counted_reads, tmp_path):
+    """The exact-dedup frame feeds the MinHash signatures, the Jaccard
+    verification and the final anti-join; it is extracted and gated once,
+    so one write reads each input row once (three times if re-derived)."""
+    docs = _docs(spark)
+    counted, reads = counted_reads(docs)
+    out = str(tmp_path / "curated")
+    curate_documents(counted, min_quality=0.4, near_dup_threshold=0.5).write.parquet(out)
+    assert reads.value == docs.count()
+    expected = curate_documents(docs, min_quality=0.4, near_dup_threshold=0.5)
+    assert sorted(spark.read.parquet(out).collect()) == sorted(expected.collect())

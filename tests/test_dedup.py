@@ -47,6 +47,15 @@ def test_ngram_jaccard_values(spark, docs):
     assert (0, 4) not in out
 
 
+def test_ngram_jaccard_pairs_reads_each_row_once(spark, docs, counted_reads):
+    """The shingle frame feeds the sizes and both sides of the self-join;
+    the shingle kernel runs once per input row, not once per reference."""
+    counted, reads = counted_reads(docs)
+    got = sorted(DD.ngram_jaccard_pairs(counted, threshold=0.1).collect())
+    assert reads.value == docs.count()
+    assert got == sorted(DD.ngram_jaccard_pairs(docs, threshold=0.1).collect())
+
+
 def test_jaccard_verify_candidates_matches_full_join(spark, docs):
     """The scale path (LSH candidates -> keyed Jaccard verify) must equal the
     full shingle self-join wherever LSH recall is total — which holds on this

@@ -10,7 +10,11 @@ from hypothesis import strategies as st
 
 from document_extraction_spark.core import classify as C
 from document_extraction_spark.core import normalize as N
-from document_extraction_spark.core.extract import extract_batch_pdf, extract_one
+from document_extraction_spark.core.extract import (
+    _finalize_text,
+    extract_batch_pdf,
+    extract_one,
+)
 
 # arbitrary unicode incl. controls/newlines/backticks; surrogates excluded
 TEXT = st.text(
@@ -60,3 +64,39 @@ def test_batch_size_invariance(case):
     packed = extract_batch_pdf(pd.DataFrame({"text": ["<p>pad pad pad</p>", case, "x@1,2"]}))
     assert alone["text"].iloc[0] == packed["text"].iloc[1]
     assert alone["payload_kind"].iloc[0] == packed["payload_kind"].iloc[1]
+
+
+# block edges where a joined normalize could differ from per-block ones:
+# line breaks of every kind, unicode and ASCII spaces, combining marks and
+# Hangul jamo (NFC composers), fences, empty and whitespace-only blocks
+EDGY = st.lists(
+    st.sampled_from(
+        ["\r", "\n", "\r\n", " ", "\t", "\x0b", "\x0c", "\x1c", "\x85",
+         "\xa0", "\u2003", "\u2028", "\u2029", "\u3000", "\u0301", "\u0308",
+         "\u0327", "\u1100", "\u1161", "\u11a8", "e", "A", "```", "."]
+    ),
+    max_size=12,
+).map("".join)
+BLOCK = st.one_of(EDGY, TEXT, st.tuples(EDGY, TEXT, EDGY).map("".join))
+
+
+def _finalize_text_per_block(kind, blocks, parse_failed, raw):
+    """The per-block formulation of extract._finalize_text: normalize each
+    block, drop the empty ones, join."""
+    norm_blocks = [t for t in (N.normalize_one(b, fence=False) for b in blocks) if t]
+    if parse_failed or (not norm_blocks and kind != C.KIND_PLAIN):
+        return N.normalize_one(raw), True
+    return "\n\n".join(norm_blocks), parse_failed
+
+
+@given(
+    st.sampled_from([C.KIND_HTML, C.KIND_PDF, C.KIND_PLAIN]),
+    st.lists(BLOCK, max_size=8),
+    st.booleans(),
+    FENCY,
+)
+@settings(max_examples=600, deadline=None)
+def test_finalize_text_equals_per_block_normalize(kind, blocks, parse_failed, raw):
+    assert _finalize_text(kind, blocks, parse_failed, raw) == _finalize_text_per_block(
+        kind, blocks, parse_failed, raw
+    )

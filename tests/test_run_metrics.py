@@ -4,6 +4,7 @@ scan splits sized to the cores, and loud failures on unreadable tables."""
 from __future__ import annotations
 
 import os
+import time
 import uuid
 
 import pytest
@@ -86,17 +87,31 @@ def test_run_is_one_pass_that_never_reads_dst(spark, src, tmp_path):
     assert not [ln for ln in locations if dst in ln]
 
 
-def test_manifest_from_write_pass_equals_reread(spark, tmp_path):
-    """Manifest rows equal a per-bucket groupBy over the written output, and
-    a bucket with no turns commits zeros."""
+def test_manifest_from_write_pass_equals_reread(spark, tmp_path, monkeypatch):
+    """Manifest rows equal a per-bucket groupBy over the written output, a
+    bucket with no turns commits zeros, and ``committed_at`` is the UTC time
+    of the commit even when the host's zone is not UTC."""
     path = str(tmp_path / "src")
     write_transcripts_parquet(path, n_convs=3, seed=5, rows_per_file=100)
     dst, ckpt, n_buckets = str(tmp_path / "dst"), str(tmp_path / "ckpt"), 16
-    assert sorted(CK.run_resumable(spark, path, dst, ckpt, "r1", n_buckets=n_buckets)) == list(
-        range(n_buckets)
-    )
-    man = {r["bucket"]: r for r in CK.read_manifest(spark, ckpt).collect()}
+    t0 = time.time()
+    monkeypatch.setenv("TZ", "America/New_York")  # this process's local zone
+    time.tzset()
+    try:
+        committed = CK.run_resumable(spark, path, dst, ckpt, "r1", n_buckets=n_buckets)
+    finally:
+        monkeypatch.undo()
+        time.tzset()
+    t1 = time.time()
+    assert sorted(committed) == list(range(n_buckets))
+    man = {
+        r["bucket"]: r
+        for r in CK.read_manifest(spark, ckpt)
+        .withColumn("epoch_s", F.col("committed_at").cast("double"))
+        .collect()
+    }
     assert sorted(man) == list(range(n_buckets))
+    assert all(t0 - 1 <= m["epoch_s"] <= t1 + 1 for m in man.values()), (t0, t1)
 
     reread = {
         r["bucket"]: r
