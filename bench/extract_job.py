@@ -10,6 +10,7 @@ from __future__ import annotations
 
 import argparse
 import json
+import os
 import sys
 import time
 
@@ -42,9 +43,9 @@ def main() -> int:
     try:
         from document_extraction_spark.plans.extract_pipeline import run
     except ModuleNotFoundError:
-        sys.path.insert(0, "/root/repo")
-        from document_extraction_spark.session import _ship_package
-        _ship_package(spark)
+        sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+        from document_extraction_spark.session import ensure_worker_package
+        ensure_worker_package(spark)
         from document_extraction_spark.plans.extract_pipeline import run
 
     # parallelism comes from input splits (generator writes many small

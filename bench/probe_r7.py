@@ -10,7 +10,6 @@ import time
 
 sys.path.insert(0, os.path.join(os.path.dirname(os.path.abspath(__file__)), ".."))
 
-from pyspark.sql import Window  # noqa: E402
 from pyspark.sql import functions as F  # noqa: E402
 
 
@@ -126,57 +125,12 @@ def probe_conv(spark, sf):
     timed("FULL conv_paths", lambda: force(qs["q_conv_paths"](spark, sf_dir=sf)))
 
 
-def probe_mutual(spark, sf):
-    from document_extraction_spark.operators.mining import (
-        _checked_dim,
-        _hyperplanes,
-        _mutual_filter_agg,
-        cosine_arrow,
-        srp_signature,
-    )
-
-    e = spark.read.parquet(f"{sf}/embeddings.parquet")
-    left = e.where(F.col("vec_id") % 2 == 0)
-    right = e.where(F.col("vec_id") % 2 == 1)
-    n_planes, bands, dim = 16, 4, 64
-    per_band = n_planes // bands
-    planes = _hyperplanes(dim, n_planes, 1234)
-    vec_ok = _checked_dim(F.col("embedding"), dim)
-
-    def banded(df, id_out, vec_out):
-        band_cols = [
-            srp_signature(vec_ok, planes[b * per_band:(b + 1) * per_band]).alias(f"_b{b}")
-            for b in range(bands)
-        ]
-        sig = df.select(F.col("vec_id").alias(id_out), F.col("embedding").alias(vec_out), *band_cols)
-        return sig.select(
-            id_out, vec_out,
-            F.explode(F.array(*[
-                F.concat_ws(":", F.lit(str(b)), F.col(f"_b{b}").cast("string"))
-                for b in range(bands)
-            ])).alias("bucket"),
-        )
-
-    bl = banded(left, "left_id", "lvec")
-    br = banded(right, "right_id", "rvec")
-    timed("banding only", lambda: force(bl))
-    joined = bl.join(br, "bucket")
-    n = timed("bucket join count", lambda: joined.count())
-    print("  candidate rows:", n)
-    scored = joined.select(
-        "left_id", "right_id", cosine_arrow(F.col("lvec"), F.col("rvec")).alias("_raw")
-    )
-    timed("join + kernel cosine", lambda: force(scored))
-    timed("FULL (agg mutuality)", lambda: force(_mutual_filter_agg(scored, None)))
-
-
 PROBES = {
     "fuzzy": probe_fuzzy,
     "spans": probe_spans,
     "curation": probe_curation,
     "video": probe_video,
     "conv": probe_conv,
-    "mutual": probe_mutual,
 }
 
 

@@ -32,17 +32,7 @@ sys.path.insert(0, REPO)
 
 SPARK_SUBMIT = os.environ.get("SPARK_SUBMIT", "/opt/spark/bin/spark-submit")
 
-
-def build_pyfiles_zip(tmp: str) -> str:
-    staged = os.path.join(tmp, "stage", "document_extraction_spark")
-    shutil.copytree(
-        os.path.join(REPO, "document_extraction_spark"),
-        staged,
-        ignore=shutil.ignore_patterns("__pycache__"),
-    )
-    return shutil.make_archive(
-        os.path.join(tmp, "document_extraction_spark"), "zip", os.path.join(tmp, "stage")
-    )
+from document_extraction_spark.session import build_pyfiles_zip  # noqa: E402
 
 
 def bench_data_root() -> str:

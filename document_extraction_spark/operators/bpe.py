@@ -157,9 +157,6 @@ def bpe_encode(docs: DataFrame, merges: list[tuple[int, str, int]],
     leftmost non-overlapping scan as SQL replace, so the segmentation and
     its md5 are byte-identical (pinned vs :func:`bpe_encode_expr` in
     tests/test_dedup_kernels.py, and by the q_bpe_encode oracle)."""
-    from document_extraction_spark.session import ensure_worker_package
-
-    ensure_worker_package(docs.sparkSession)
     import re as _re
 
     id_type = docs.schema[id_col].dataType

@@ -51,9 +51,6 @@ def _doc_grams(df: DataFrame, n: int, id_col: str, text_col: str) -> DataFrame:
     emit nothing, exactly like exploding the HOF's empty array); every
     consumer (distinct, semi-join, count) is row-order-free.  HOF twin kept
     below for the kernel-equality differential test."""
-    from document_extraction_spark.session import ensure_worker_package
-
-    ensure_worker_package(df.sparkSession)
     id_type = df.schema[id_col].dataType
     schema = T.StructType([
         T.StructField("doc_id", id_type),
@@ -282,10 +279,6 @@ def semantic_decontaminate_arrow(
     fixtures; pinned equal in tests/test_drift_sampling_ops.py)."""
     import numpy as np
     import pandas as pd
-
-    from document_extraction_spark.session import ensure_worker_package
-
-    ensure_worker_package(corpus_emb.sparkSession)
 
     ev_pd = eval_emb.select(vec_col).limit(max_eval + 1).toPandas()
     if len(ev_pd) > max_eval:

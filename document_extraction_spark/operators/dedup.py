@@ -133,9 +133,6 @@ def shingles(df: DataFrame, id_col: str = "doc_id", text_col: str = "text",
     every consumer (sizes groupBy, intersection joins, distinct) is
     row-order-free; set equality vs the HOF path is pinned in
     tests/test_dedup_kernels.py."""
-    from document_extraction_spark.session import ensure_worker_package
-
-    ensure_worker_package(df.sparkSession)
     id_type = df.schema[id_col].dataType
     schema = T.StructType([
         T.StructField("doc_id", id_type),
@@ -186,9 +183,6 @@ def minhash_signatures(df: DataFrame, id_col: str = "doc_id",
     (:func:`minhash_signatures_hof`, pinned in tests/test_dedup_kernels.py
     and transitively by every oracle-verified LSH query)."""
     assert k <= 8, "two md5s provide 8 8-hex windows"
-    from document_extraction_spark.session import ensure_worker_package
-
-    ensure_worker_package(df.sparkSession)
     id_type = df.schema[id_col].dataType
     schema = T.StructType(
         [T.StructField("doc_id", id_type)]

@@ -84,9 +84,6 @@ def _bucket_counts(df: DataFrame, text_col: str) -> DataFrame:
     Arrow kernel counts buckets per batch in Python (exact integers, same
     md5) and ships only <= BUCKETS partial rows per batch into the final
     groupBy (guide §4.2 + §2.3: aggregate before you shuffle)."""
-    from document_extraction_spark.session import ensure_worker_package
-
-    ensure_worker_package(df.sparkSession)
     schema = T.StructType([
         T.StructField("bucket", T.LongType()),
         T.StructField("cnt", T.LongType()),
@@ -141,9 +138,6 @@ def dsir_log_weights(
     # — a whole document sits inside one Arrow batch, so the kernel output
     # already IS the groupBy(doc, bucket) result and that shuffle (|grams|
     # rows at sf1.0, petabytes at 100 TB) disappears outright (guide §2.3).
-    from document_extraction_spark.session import ensure_worker_package
-
-    ensure_worker_package(raw.sparkSession)
     id_type = raw.schema[id_col].dataType
     db_schema = T.StructType([
         T.StructField(id_col, id_type),

@@ -135,9 +135,6 @@ def blocked_levenshtein_pairs(
     # documents tokenize to nothing and are dropped (they'd collapse onto
     # the constant 'h:'/'t:' hot blocks).  Kernel-vs-HOF set equality is
     # pinned in tests/test_dedup_kernels.py.
-    from document_extraction_spark.session import ensure_worker_package
-
-    ensure_worker_package(docs.sparkSession)
     id_type = docs.schema[id_col].dataType
     base_schema = T.StructType([
         T.StructField("doc_id", id_type),

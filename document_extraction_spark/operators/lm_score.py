@@ -65,9 +65,6 @@ def _doc_trigram_counts(docs: DataFrame, text_col: str,
     |trigram-instances| explode (15M rows at sf1.0) and its shuffle never
     exist.  Counts are exact integers, so every downstream aggregate
     (corpus model re-derivation included) is unchanged."""
-    from document_extraction_spark.session import ensure_worker_package
-
-    ensure_worker_package(docs.sparkSession)
     id_type = docs.schema["doc_id"].dataType
     schema = T.StructType([
         T.StructField("doc_id", id_type),
@@ -137,9 +134,6 @@ def trigram_model(docs: DataFrame, text_col: str = "text",
     guide §2.3 aggregate-before-shuffle), c3 sums them, and c2 is derived
     from the materialized c3 (sum per 2-char context == the instance count
     the old second pass computed)."""
-    from document_extraction_spark.session import ensure_worker_package
-
-    ensure_worker_package(docs.sparkSession)
     schema = T.StructType([
         T.StructField("tg", T.StringType()),
         T.StructField("k", T.LongType()),
@@ -221,9 +215,6 @@ def lm_score(docs: DataFrame, text_col: str = "text",
         r["tg"]: (r["p_micro"], int(r["bits"].scaleb(5)))
         for r in cells.collect()
     }
-    from document_extraction_spark.session import ensure_worker_package
-
-    ensure_worker_package(docs.sparkSession)
     id_type = docs.schema["doc_id"].dataType
     schema = T.StructType([
         T.StructField("doc_id", id_type),

@@ -19,9 +19,12 @@ Distributed shape (scores computed ONCE — structurally, not by cache):
 
 At 100 TB neither side is broadcastable and the cross product is the cost:
 ``mutual_top1_srp`` swaps the exact scorer for banded SRP-bucketed
-candidates (similarity.py banding recipe — score only colliding buckets,
-(band, bucket) equi-join so NEITHER side broadcasts), then applies the SAME
-chained two-window mutuality filter, trading candidate recall for the
+candidates (similarity.py banding recipe — score only colliding buckets;
+both sides cogroup on (band, bucket) so NEITHER side broadcasts). One
+Arrow kernel per bucket emits each row's in-bucket argmax partial, and an
+aggregate combine over the partials gives each side's global argmax; a
+pair is mutual iff the two argmaxes coincide. The verdict equals the
+window filter's over the candidate set, trading candidate recall for the
 quadratic. At bands == n_planes (1 sign bit per band) the candidate set
 converges to all informative pairs and the output equals the exact path —
 test_mining_calibrate pins that equality on the sf0.001 embeddings.
@@ -37,7 +40,6 @@ from document_extraction_spark.operators.similarity import (
     _checked_dim,
     _hyperplanes,
     cosine,
-    cosine_pairs_arrow,  # noqa: F401  (kept: the pair-stream scorer twin, used by bench/probe_r7 and the kernel-equality tests)
     srp_signature,
 )
 
@@ -173,9 +175,13 @@ def _bucket_mutual_partials(lb: DataFrame, rb: DataFrame,
     :func:`_mutual_filter_agg` over the full candidate stream — duplicate
     collisions across bands carry identical raws and are absorbed.
 
-    ``chunk`` bounds kernel memory at chunk^2 doubles per block regardless
-    of bucket occupancy (a hot bucket degrades to more blocks, not more
-    resident memory), and 256^2 x 8 B blocks stay L2-resident.
+    Resident memory per bucket group is O(occupancy x dim): the cogroup
+    hands the kernel every left and right row of the bucket at once, as
+    Arrow tables and as (n, dim) float64 matrices.  ``chunk`` bounds only
+    the scoring block on top of that, at chunk^2 doubles (256^2 x 8 B
+    blocks stay L2-resident).  What bounds occupancy is the sizing rule in
+    :func:`mutual_top1_srp` (per-band bits ~ log2(|corpus|)); a hot
+    bucket still arrives whole.
 
     The kernel is ``applyInArrow`` (not pandas): Arrow list columns flatten
     zero-copy to an (n, dim) matrix (the cosine_pairs_arrow lesson), and a
@@ -185,10 +191,6 @@ def _bucket_mutual_partials(lb: DataFrame, rb: DataFrame,
     flipping verdicts for zero-norm vectors (caught by
     test_bucket_partials_match_filter_agg_on_adversarial_pairs)."""
     import pyarrow as pa
-
-    from document_extraction_spark.session import ensure_worker_package
-
-    ensure_worker_package(lb.sparkSession)
 
     def _mat(tbl: "pa.Table", vec: str, n: int) -> np.ndarray:
         va = tbl.column(vec).combine_chunks()
@@ -217,6 +219,11 @@ def _bucket_mutual_partials(lb: DataFrame, rb: DataFrame,
         rids = rids[ro]
         L = _mat(ltbl, "lvec", n)[lo]
         R = _mat(rtbl, "rvec", m)[ro]
+        if L.shape[1] != R.shape[1]:
+            raise ValueError(
+                f"_bucket_mutual_partials needs equal vector widths; got "
+                f"left {L.shape[1]}, right {R.shape[1]}"
+            )
         dim = L.shape[1]
         na = np.zeros(n)
         nb = np.zeros(m)
@@ -321,12 +328,18 @@ def mutual_top1_srp(
     min_cos: float | None = None,
 ) -> DataFrame:
     """The non-broadcastable-scale variant of :func:`mutual_top1_pairs`:
-    candidates come from a banded signed-random-projection (band, bucket)
-    EQUI-join — both sides shuffle on the bucket key, neither broadcasts,
-    so the plan survives two 100 TB corpora.  Each surviving candidate pair
-    is scored exactly once (dedup on (left_id, right_id) BEFORE the O(dim)
-    cosine), then the identical chained two-window mutuality filter runs
-    over the candidate scores.
+    candidates come from banded signed-random-projection (band, bucket)
+    keys, and both sides COGROUP on them — each shuffles on the bucket key,
+    neither broadcasts,
+    so the plan survives two 100 TB corpora.  Candidates never form a pair
+    stream: :func:`_bucket_mutual_partials` scores each bucket's |L|x|R|
+    block in one cogrouped Arrow kernel and emits, per (side, id), only
+    that bucket's ``max(struct(_raw, -other_id))`` winner.
+    :func:`_mutual_from_partials` then takes each side's max over its
+    bucket winners (the global argmax, since the struct order is total and
+    a pair colliding in several bands carries the same raw) and keeps the
+    pairs whose two argmaxes coincide: the verdict the window filter of
+    :func:`mutual_top1_pairs` gives over the full candidate set.
 
     Recall semantics: "top-1" is within the candidate set, so a pair whose
     true nearest neighbour never collides in any band can surface a

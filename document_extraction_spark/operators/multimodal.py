@@ -379,9 +379,6 @@ def decode_features(payloads: pd.Series) -> pd.DataFrame:
 
 def extract_media_features(media: DataFrame) -> DataFrame:
     """media table -> per-object feature rows, Arrow-batched."""
-    from document_extraction_spark.session import ensure_worker_package
-
-    ensure_worker_package(media.sparkSession)
 
     def kernel(batches: Iterable[pd.DataFrame]) -> Iterable[pd.DataFrame]:
         for pdf in batches:
@@ -421,10 +418,6 @@ def resize_images(media: DataFrame, width: int = 32, height: int = 32) -> DataFr
     re-encode as binary P6. Undecodable payloads keep the byte-stream
     resample stand-in (length-grouped, one 2-D fancy-index per group) so the
     operator still emits a fixed-size payload for every non-empty object."""
-
-    from document_extraction_spark.session import ensure_worker_package
-
-    ensure_worker_package(media.sparkSession)
 
     def kernel(batches: Iterable[pd.DataFrame]) -> Iterable[pd.DataFrame]:
         n = width * height
@@ -481,10 +474,6 @@ def sample_frames(media: DataFrame, n_frames: int = 4, frame_bytes: int = 64) ->
     evenly-spaced byte windows per media object with synthetic timestamps —
     a 1->N row fan-out through mapInPandas, the same plan shape as a real
     ffmpeg-backed sampler."""
-
-    from document_extraction_spark.session import ensure_worker_package
-
-    ensure_worker_package(media.sparkSession)
 
     def kernel(batches: Iterable[pd.DataFrame]) -> Iterable[pd.DataFrame]:
         for pdf in batches:
@@ -592,9 +581,6 @@ def audio_decode_summary(media: DataFrame) -> DataFrame:
     duration from frames/rate, and the exact sum of |sample| over all
     channels. With :func:`synth_audio_media_df`'s closed-form samples this
     is SQL-recomputable — the audio twin of :func:`media_decode_summary`."""
-    from document_extraction_spark.session import ensure_worker_package
-
-    ensure_worker_package(media.sparkSession)
 
     def kernel(batches: Iterable[pd.DataFrame]) -> Iterable[pd.DataFrame]:
         for pdf in batches:
@@ -646,9 +632,6 @@ def synth_audio_media_df(spark, documents: DataFrame) -> DataFrame:
     """Deterministic REAL-audio media table: each doc becomes a decodable
     16-bit PCM WAV clip with closed-form samples (executor-side generation,
     same shape as :func:`synth_image_media_df`)."""
-    from document_extraction_spark.session import ensure_worker_package
-
-    ensure_worker_package(spark)
 
     cols = [f.name for f in MEDIA_SCHEMA.fields]
 
@@ -683,9 +666,6 @@ def media_decode_summary(media: DataFrame) -> DataFrame:
     :func:`synth_image_media_df` generates pixels from a closed-form formula,
     a SQL oracle can recompute every value here WITHOUT decoding — making the
     whole generate->encode->decode path hash-verifiable cross-engine."""
-    from document_extraction_spark.session import ensure_worker_package
-
-    ensure_worker_package(media.sparkSession)
 
     def kernel(batches: Iterable[pd.DataFrame]) -> Iterable[pd.DataFrame]:
         for pdf in batches:
@@ -746,9 +726,6 @@ def synth_image_media_df(spark, documents: DataFrame) -> DataFrame:
     decoders are exercised by every downstream query. Generation is
     executor-side over mapInPandas (scales with partitions; nothing
     materializes on the driver)."""
-    from document_extraction_spark.session import ensure_worker_package
-
-    ensure_worker_package(spark)
 
     cols = [f.name for f in MEDIA_SCHEMA.fields]
 
@@ -820,9 +797,6 @@ def video_frame_summary(media: DataFrame, n_sample: int = 3) -> DataFrame:
     each sampled frame's dims + exact pixel sum. 1->N row fan-out through
     mapInPandas; with :func:`synth_video_media_df`'s closed-form pixels the
     output is SQL-recomputable (q_video_frames oracle)."""
-    from document_extraction_spark.session import ensure_worker_package
-
-    ensure_worker_package(media.sparkSession)
 
     def kernel(batches: Iterable[pd.DataFrame]) -> Iterable[pd.DataFrame]:
         for pdf in batches:
@@ -881,9 +855,6 @@ def synth_video_media_df(spark, documents: DataFrame) -> DataFrame:
     """Deterministic REAL-video media table: each doc becomes a clip of
     4 + id%5 concatenated P6 frames (closed-form pixels), duration 40 ms per
     frame (25 fps)."""
-    from document_extraction_spark.session import ensure_worker_package
-
-    ensure_worker_package(spark)
 
     cols = [f.name for f in MEDIA_SCHEMA.fields]
 

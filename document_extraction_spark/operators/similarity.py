@@ -55,9 +55,6 @@ def cosine_pairs_arrow(pairs: DataFrame, vec_a: str, vec_b: str,
     it); raises on ragged input."""
     import pyarrow as pa
 
-    from document_extraction_spark.session import ensure_worker_package
-
-    ensure_worker_package(pairs.sparkSession)
     keep = [f for f in pairs.schema.fields if f.name not in (vec_a, vec_b)]
     schema = T.StructType(keep + [T.StructField(out, T.DoubleType())])
     names = [f.name for f in keep] + [out]
@@ -196,10 +193,6 @@ def brute_force_topk_arrow(
     rows — negligible. Corpus never shuffles; nothing but candidates moves."""
     import numpy as np
     import pandas as pd
-
-    from document_extraction_spark.session import ensure_worker_package
-
-    ensure_worker_package(corpus.sparkSession)
 
     q_pd = queries.select(id_col, vec_col).limit(max_queries + 1).toPandas()
     if len(q_pd) > max_queries:
@@ -408,9 +401,6 @@ def ivf_topk(
         .toPandas()[vec_col]
         .to_numpy()
     )
-    from document_extraction_spark.session import ensure_worker_package
-
-    ensure_worker_package(corpus.sparkSession)
     centroids = _kmeans_centroids(np.stack(sample_pd), k=n_lists, seed=seed)
     assign = _assign_udf(centroids)
 

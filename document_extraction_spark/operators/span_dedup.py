@@ -69,9 +69,6 @@ def _gram_occurrences(base: DataFrame, width: int) -> DataFrame:
     whole point of this operator).  Same rows — md5 of the identical
     space-joined gram text — pinned vs the HOF twin in
     tests/test_dedup_kernels.py."""
-    from document_extraction_spark.session import ensure_worker_package
-
-    ensure_worker_package(base.sparkSession)
     id_type = base.schema["doc_id"].dataType
     schema = T.StructType([
         T.StructField("doc_id", id_type),

@@ -142,9 +142,6 @@ def build_extract_df(
         plan = plan.repartition(
             partitions, F.xxhash64("conv_id", "turn_idx", F.lit(salt))
         )
-    from document_extraction_spark.session import ensure_worker_package
-
-    ensure_worker_package(df.sparkSession)
     kernel = (
         extract_map_in_pandas
         if max_payload_chars is None
@@ -221,9 +218,6 @@ def split_oversized_turns(
             ]
             yield pd.DataFrame(out)[names]
 
-    from document_extraction_spark.session import ensure_worker_package
-
-    ensure_worker_package(df.sparkSession)
     return small.unionByName(big.mapInPandas(chunker, schema=out_schema))
 
 

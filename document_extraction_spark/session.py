@@ -8,6 +8,8 @@ handling, Arrow batching). See SURVEY.md §4.
 from __future__ import annotations
 
 import os
+import shutil
+import tempfile
 
 from pyspark.sql import SparkSession
 
@@ -30,6 +32,8 @@ ARROW_MAX_RECORDS_PER_BATCH = "2048"
 # the same counts; 8 KB over-splits (5 unbalanced splits). Inputs of large
 # files split as before, since their bytes per core dwarf the open cost.
 FILE_OPEN_COST_BYTES = str(256 * 1024)
+
+_PKG_DIR = os.path.dirname(os.path.abspath(__file__))
 
 
 def get_spark(
@@ -71,42 +75,42 @@ def get_spark(
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
-    _ship_package(spark)
+    ensure_worker_package(spark)
     return spark
 
 
+def build_pyfiles_zip(dest: str) -> str:
+    """Zip this package under ``dest`` for ``spark-submit --py-files`` or
+    ``addPyFile`` and return the zip's path. The zip root holds the package
+    directory itself; ``__pycache__`` is left out."""
+    stage = os.path.join(dest, "stage")
+    shutil.copytree(
+        _PKG_DIR,
+        os.path.join(stage, "document_extraction_spark"),
+        ignore=shutil.ignore_patterns("__pycache__"),
+    )
+    return shutil.make_archive(
+        os.path.join(dest, "document_extraction_spark"), "zip", stage
+    )
+
+
 def ensure_worker_package(spark: SparkSession) -> None:
-    """Idempotent: make this package importable on executor Python workers.
+    """Make this package importable on the session's executor Python
+    workers: the programmatic ``spark-submit --py-files pkg.zip`` of the
+    north rule. Idempotent per session.
 
-    Called defensively by every operator that runs Python on workers
-    (mapInPandas / pandas_udf), so the engine works under ANY SparkSession —
-    including harnesses that build their own session without --py-files."""
-    _ship_package(spark)
-
-
-def _ship_package(spark: SparkSession) -> None:
-    """Ship this package to executor Python workers (the programmatic
-    equivalent of ``spark-submit --py-files pkg.zip`` from the north rule).
-
-    Without this, ``mapInPandas`` kernels fail to unpickle on workers
-    whenever the driver's cwd isn't the repo root."""
-    import shutil
-    import tempfile
-
+    Without it, ``mapInPandas`` / ``applyInArrow`` / pandas UDF kernels fail
+    to unpickle on workers (``ModuleNotFoundError``) whenever the worker's
+    cwd is not the repo root. Operators do not call it. Two doors do:
+    :func:`get_spark` for the sessions it builds, and ``__spark_entry__``
+    for sessions the driver contract hands in (``entry`` and every
+    ``queries()`` callable). Code that builds a session any other way calls
+    this once, right after building it."""
     if getattr(spark, "_dex_pkg_shipped", False):
         return
-    pkg_dir = os.path.dirname(os.path.abspath(__file__))
-    if not os.path.isdir(pkg_dir):
-        # the package is ALREADY running from a zip (spark-submit --py-files):
-        # executors get the same zip through the submit mechanism, and there
-        # is no directory to re-stage — copytree on a zip path would crash
-        spark._dex_pkg_shipped = True
-        return
-    tmp = tempfile.mkdtemp(prefix="dex_pyfiles_")
-    zip_base = os.path.join(tmp, "document_extraction_spark")
-    # zip root must contain the package dir itself
-    staged = os.path.join(tmp, "stage", "document_extraction_spark")
-    shutil.copytree(pkg_dir, staged, ignore=shutil.ignore_patterns("__pycache__"))
-    zip_path = shutil.make_archive(zip_base, "zip", os.path.join(tmp, "stage"))
-    spark.sparkContext.addPyFile(zip_path)
+    # A package already running from a zip (spark-submit --py-files) has no
+    # directory to stage, and executors get that zip through the submit.
+    if os.path.isdir(_PKG_DIR):
+        tmp = tempfile.mkdtemp(prefix="dex_pyfiles_")
+        spark.sparkContext.addPyFile(build_pyfiles_zip(tmp))
     spark._dex_pkg_shipped = True

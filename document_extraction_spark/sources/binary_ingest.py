@@ -59,9 +59,6 @@ def binary_to_turns(bin_df: DataFrame, paginate: bool = True) -> DataFrame:
     (conv_id, turn_idx) pairs, which would corrupt downstream keyed dedup
     and reassembly.  Malformed byte sequences become U+FFFD
     (errors='replace') so any input is total and deterministic."""
-    from document_extraction_spark.session import ensure_worker_package
-
-    ensure_worker_package(bin_df.sparkSession)
 
     def kernel(batches: Iterable[pd.DataFrame]) -> Iterable[pd.DataFrame]:
         for pdf in batches:

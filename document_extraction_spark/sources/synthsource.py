@@ -186,9 +186,5 @@ class TranscriptsSynthStreamReader(DataSourceStreamReader):
 
 
 def register_synth_source(spark) -> None:
-    """Register the source (idempotent) and make sure executors can import
-    the package the reader closes over."""
-    from document_extraction_spark.session import ensure_worker_package
-
-    ensure_worker_package(spark)
+    """Register the source (idempotent)."""
     spark.dataSource.register(TranscriptsSynthDataSource)

@@ -73,9 +73,6 @@ def _update(
 def conversation_stats_stream(sdf: DataFrame) -> DataFrame:
     """Streaming per-conversation running stats (update mode). To drain an
     input once, start it with ``start_conversation_stats``."""
-    from document_extraction_spark.session import ensure_worker_package
-
-    ensure_worker_package(sdf.sparkSession)
     return (
         sdf.select("conv_id", "turn_idx", "text")
         .groupBy("conv_id")
@@ -195,9 +192,6 @@ def conversation_progress_stream(sdf: DataFrame) -> DataFrame:
             "which is not installed in this environment"
         ) from ex
 
-    from document_extraction_spark.session import ensure_worker_package
-
-    ensure_worker_package(sdf.sparkSession)
     processor = ConversationProgress()
     return (
         sdf.select("conv_id", "turn_idx", "role")

@@ -176,3 +176,18 @@ def test_bucket_partials_match_filter_agg_on_adversarial_pairs(spark):
     # surviving pair for right 10 is the NaN one — present in BOTH paths
     assert any(l == 0 and r == 10 for l, r, _ in got)
     assert partials[(1, 10)] == 0
+
+
+def test_bucket_partials_reject_unequal_vector_widths(spark):
+    """A bucket whose right vectors are wider than its left ones would drop
+    the extra components from every dot product and norm (narrower ones
+    would index past the end): the kernel must refuse, naming both widths."""
+    from document_extraction_spark.operators.mining import _bucket_mutual_partials
+
+    lb = spark.createDataFrame(
+        [(0, [1.0, 0.0], "b0")], "left_id long, lvec array<float>, bucket string")
+    rb = spark.createDataFrame(
+        [(10, [1.0, 0.0, 1.0], "b0")],
+        "right_id long, rvec array<float>, bucket string")
+    with pytest.raises(Exception, match=r"left 2, right 3"):
+        _bucket_mutual_partials(lb, rb).collect()
