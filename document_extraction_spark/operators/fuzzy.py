@@ -23,11 +23,14 @@ Plan shape at 100 TB:
   block is informative); mirroring the LSH hot-bucket cap (dedup.py).
 * ``prefix_chars`` bounds the per-comparison cost: distance runs on fixed
   prefixes, so one comparison is O(prefix²) regardless of payload size.
+  Up to 64 chars the verify runs the bit-parallel Myers kernel; longer
+  prefixes warn and fall back to Spark's ``levenshtein`` DP.
 """
 
 from __future__ import annotations
 
 import re
+import warnings
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -214,6 +217,13 @@ def blocked_levenshtein_pairs(
     if prefix_chars > 64:
         # Myers single-word kernel needs the pattern inside one uint64;
         # longer prefixes take the JVM DP (banded by max_distance)
+        warnings.warn(
+            f"blocked_levenshtein_pairs: prefix_chars={prefix_chars} exceeds "
+            "the 64-char Myers kernel, so the verify falls back to Spark's "
+            "levenshtein DP (~280 us per pair)",
+            UserWarning,
+            stacklevel=2,
+        )
         return (
             cand.repartition(n_parts, "doc_a", "doc_b")
             .withColumn(

@@ -7,9 +7,12 @@ handling, Arrow batching). See SURVEY.md §4.
 
 from __future__ import annotations
 
+import functools
 import os
 import shutil
+import sys
 import tempfile
+import zipimport
 
 from pyspark.sql import SparkSession
 
@@ -34,6 +37,48 @@ ARROW_MAX_RECORDS_PER_BATCH = "2048"
 FILE_OPEN_COST_BYTES = str(256 * 1024)
 
 _PKG_DIR = os.path.dirname(os.path.abspath(__file__))
+
+
+def _install_lazy_zip_invalidation() -> None:
+    """Make ``zipimporter.invalidate_caches`` re-read an archive only when
+    the file on disk changed since this importer last read it.
+
+    Every Python worker task starts with ``importlib.invalidate_caches()``
+    (pyspark ``worker_util.setup_spark_files``). Before CPython 3.13 that
+    makes each ``zipimporter`` re-read its archive's whole central
+    directory: ~17 importers over ``pyspark.zip``, the ``spark-core`` jar,
+    py4j and this package's zip, ~26.7k entries, 130-200 ms of CPU per
+    task on a reused worker before the kernel starts. The wrapper keys each
+    importer on its archive's ``(st_mtime_ns, st_size, st_ino)`` and calls
+    the stdlib method when the key differs or the stat fails, so a zip
+    rewritten or replaced on disk is still re-read, and a new ``addPyFile``
+    path gets a new importer anyway. CPython 3.13 already makes the method
+    lazy (it only drops the cache entry), so this installs nothing there
+    and can be deleted once 3.12 is no longer supported. Installing twice
+    keeps one wrapper."""
+    original = zipimport.zipimporter.invalidate_caches
+    if sys.version_info >= (3, 13) or getattr(original, "_dex_lazy_zip", False):
+        return
+
+    @functools.wraps(original)
+    def invalidate_caches(self):
+        try:
+            st = os.stat(self.archive)
+            key = (st.st_mtime_ns, st.st_size, st.st_ino)
+        except OSError:
+            key = None
+        if key is None or key != getattr(self, "_dex_zip_key", None):
+            original(self)
+            self._dex_zip_key = key
+
+    invalidate_caches._dex_lazy_zip = True
+    zipimport.zipimporter.invalidate_caches = invalidate_caches
+
+
+# Workers import this module when they unpickle their first engine kernel.
+# The next task's call keys every importer; the tasks after it re-read only
+# archives that changed.
+_install_lazy_zip_invalidation()
 
 
 def get_spark(

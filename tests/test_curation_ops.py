@@ -336,3 +336,26 @@ def test_canonical_url(spark):
     df = spark.createDataFrame(list(cases.items()), ["raw", "want"])
     for r in df.select("want", canonical_url(F.col("raw")).alias("got")).collect():
         assert r["got"] == r["want"]
+
+
+def test_blocked_levenshtein_long_prefix_warns(spark):
+    """A prefix longer than the 64-char Myers kernel must not fall back to
+    the JVM DP silently; the default 60-char prefix stays quiet."""
+    import warnings
+
+    import pytest
+
+    from document_extraction_spark.operators.fuzzy import blocked_levenshtein_pairs
+
+    docs = spark.createDataFrame(
+        [(0, "alpha beta gamma delta"), (1, "alpha beta gamma delte")],
+        ["doc_id", "text"],
+    )
+    with pytest.warns(UserWarning, match=r"prefix_chars=80.*levenshtein"):
+        slow = blocked_levenshtein_pairs(docs, max_distance=3, prefix_chars=80)
+    assert {(r["doc_a"], r["doc_b"]): r["dist"] for r in slow.collect()} == {
+        (0, 1): 1
+    }
+    with warnings.catch_warnings():
+        warnings.simplefilter("error")
+        blocked_levenshtein_pairs(docs, max_distance=3)
