@@ -7,11 +7,12 @@ Scale design (100 TB corpus):
 
 * **exact**: hash-groupBy on an md5 fingerprint — the shuffle carries only
   (32-byte key, doc_id), never the payload.
-* **MinHash + LSH**: shingle -> k min-hashes -> b bands -> candidate pairs
-  join on band buckets. Signatures are computed with array higher-order
-  functions (zero shuffle, map-only); the band bucket join is the only
-  shuffle and its key space is the bucket hash; skewed buckets
-  (stop-shingle pathologies) are handled by AQE skew-join splitting.
+* **MinHash + LSH**: a map-side band pass (shingles -> 8 min-hashes -> 4
+  band buckets, one row per band carrying the text: 4x the text crosses
+  the one exchange), then a verify pass over each sorted bucket run (one
+  run resident, exact Jaccard counts for its pairs, quadratic in bucket
+  size). The unfused minhash -> LSH join -> verify operators stay as its
+  equality oracle.
 * **SimHash**: 32-bit signature from per-token hash bit votes — also
   array-based, map-only.
 * **n-gram Jaccard**: exact verification of candidate pairs via shingle
@@ -33,11 +34,16 @@ same plan shape.
 
 from __future__ import annotations
 
+import hashlib
+import itertools
 import re
+from operator import itemgetter
 
+import numpy as np
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.sql.pandas.types import to_arrow_type
 
 from document_extraction_spark.functions.textstats import fingerprint
 
@@ -53,16 +59,17 @@ _JAVA_WS = re.compile(r"[ \t\n\x0b\f\r]+")
 # Hash-cache bound for the per-task shingle->md5-window memo; cleared when
 # exceeded so a boilerplate-free 100 TB task cannot grow it unboundedly.
 _MD5_CACHE_CAP = 2_000_000
+_PAIR_BATCH_ROWS = 8192  # near-dup verify output batch: hot-bucket pairs leave in slices
 
 
 def _py_shingles(text: str | None, width: int) -> list[str] | None:
-    """Python twin of :func:`shingle_array_df`'s per-document shingle set:
-    None for rows the Spark path filters (NULL / trim-empty text),
-    otherwise the distinct word-``width``-grams in first-occurrence order.
-    Twin semantics, piece by piece: SQL trim strips ' ' (0x20) only;
-    tokenization splits the LOWERED trimmed text on the Java-\\s class and
-    drops empty tokens; fewer than ``width`` tokens yield the single
-    whole-doc gram (array_join of the token list — '' when no tokens
+    """Per-document shingle set: None for NULL / trim-empty text, otherwise
+    the distinct word-``width``-grams in first-occurrence order.  Twin of
+    the SQL shingling the DuckDB oracles run (and of the HOF shingle array
+    in tests/dedup_hof.py), piece by piece: SQL trim strips ' ' (0x20)
+    only; tokenization splits the LOWERED trimmed text on the Java-\\s
+    class and drops empty tokens; fewer than ``width`` tokens yield the
+    single whole-doc gram (array_join of the token list — '' when no tokens
     survive, matching array_join over an empty array)."""
     if text is None:
         return None
@@ -75,6 +82,39 @@ def _py_shingles(text: str | None, width: int) -> list[str] | None:
             " ".join(toks[i : i + width]) for i in range(len(toks) - width + 1)
         ))
     return [" ".join(toks)]
+
+
+def _md5_windows(g: str, memo: dict[str, bytes]) -> bytes:
+    """md5(g) || md5('x'||g): 32 bytes, the eight big-endian 32-bit MinHash
+    windows, memoized per task in ``memo`` (cleared at ``_MD5_CACHE_CAP``
+    entries)."""
+    w = memo.get(g)
+    if w is None:
+        b = g.encode()
+        w = hashlib.md5(b).digest() + hashlib.md5(b"x" + b).digest()
+        if len(memo) >= _MD5_CACHE_CAP:
+            memo.clear()
+        memo[g] = w
+    return w
+
+
+def _py_minhash(sh: list[str], k: int, memo: dict[str, bytes]) -> list[str]:
+    """Signature i = min over the shingles of their i-th md5 window, as
+    8-hex.  The numeric min of a 32-bit window == the lexicographic min of
+    its fixed-width lowercase hex, so this equals the SQL
+    array_min(substring(md5(...))) form byte for byte."""
+    w = np.frombuffer(b"".join([_md5_windows(g, memo) for g in sh]), dtype=">u4")
+    return [f"{v:08x}" for v in w.reshape(-1, 8).min(axis=0)[:k].tolist()]
+
+
+def _band_keys(sig: list[str], bands: int) -> list[str]:
+    """Per band, md5 of its rows joined by '|' — the ``band{b}`` column of
+    :func:`lsh_candidate_pairs` (bucket ``f"{b}:{key}"``)."""
+    r = len(sig) // bands
+    return [
+        hashlib.md5("|".join(sig[b * r : (b + 1) * r]).encode()).hexdigest()
+        for b in range(bands)
+    ]
 
 
 def exact_dedup(df: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
@@ -105,34 +145,12 @@ def _tokens_df(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     )
 
 
-def shingle_array_df(df: DataFrame, id_col: str = "doc_id", text_col: str = "text",
-                     width: int = SHINGLE_WIDTH) -> DataFrame:
-    """(doc_id, sh: array<string>) — distinct word-``width``-gram shingles."""
-    step = _tokens_df(df, id_col, text_col)
-    tk = F.col("_tk")
-    grams = F.when(
-        F.size(tk) >= width,
-        F.transform(
-            F.sequence(F.lit(1), F.size(tk) - (width - 1)),
-            lambda i: F.array_join(F.slice(tk, i, width), " "),
-        ),
-    ).otherwise(F.array(F.array_join(tk, " ")))
-    return step.select("doc_id", F.array_distinct(grams).alias("sh"))
-
-
 def shingles(df: DataFrame, id_col: str = "doc_id", text_col: str = "text",
              width: int = SHINGLE_WIDTH) -> DataFrame:
-    """Exploded (doc_id, shingle) — for the exact-Jaccard verifier, which
-    genuinely needs the shingle join.
-
-    Arrow kernel (guide §4.2): the per-doc distinct gram set is built in
-    Python string ops inside mapInPandas instead of the interpreted
-    sequence->transform->slice->array_join HOF chain (same ~100-200x
-    interpreted-expression tax as the MinHash kernel below measured in
-    BENCH/DECON_SRP.json).  Emits the same (doc_id, shingle) row SET —
-    every consumer (sizes groupBy, intersection joins, distinct) is
-    row-order-free; set equality vs the HOF path is pinned in
-    tests/test_dedup_kernels.py."""
+    """Exploded (doc_id, shingle) rows of :func:`_py_shingles` — for the
+    exact-Jaccard joins. Row-SET equal to the SQL HOF shingling (pinned
+    against tests/dedup_hof.py in tests/test_dedup_kernels.py); every
+    consumer is row-order-free."""
     id_type = df.schema[id_col].dataType
     schema = T.StructType([
         T.StructField("doc_id", id_type),
@@ -160,29 +178,16 @@ def shingles(df: DataFrame, id_col: str = "doc_id", text_col: str = "text",
     ).mapInPandas(kernel, schema=schema)
 
 
-def shingles_hof(df: DataFrame, id_col: str = "doc_id", text_col: str = "text",
-                 width: int = SHINGLE_WIDTH) -> DataFrame:
-    """The pure-Column HOF twin of :func:`shingles` (pre-r7 path) — kept for
-    oracle plan parity and the kernel-equality differential tests."""
-    return shingle_array_df(df, id_col, text_col, width).select(
-        "doc_id", F.explode("sh").alias("shingle")
-    )
-
-
 def minhash_signatures(df: DataFrame, id_col: str = "doc_id",
                        text_col: str = "text", k: int = MINHASH_K) -> DataFrame:
-    """k min-hashes per doc WITHOUT exploding shingles — still zero-shuffle
-    map-only, now as an Arrow kernel (VERDICT r5/r6 ask: the HOF chain ran
-    two interpreted md5s + eight array_min(transform(substring)) passes per
-    document outside whole-stage codegen; this computes the identical
-    signature with hashlib + a per-task shingle->window memo at native
-    speed).  Signature i = min over shingles of the i-th 8-hex (32-bit)
-    window of md5(shingle) / md5('x'||shingle); Python's str min on
-    fixed-width lowercase hex == UTF8String lexicographic min == numeric
-    min, so the output is BYTE-IDENTICAL to the HOF twin
-    (:func:`minhash_signatures_hof`, pinned in tests/test_dedup_kernels.py
-    and transitively by every oracle-verified LSH query)."""
-    assert k <= 8, "two md5s provide 8 8-hex windows"
+    """(doc_id, h0..h{k-1}): k min-hashes per doc WITHOUT exploding
+    shingles, map-only, as an Arrow kernel (:func:`_py_minhash` with a
+    per-task shingle->window memo).  Signature i = min over shingles of the
+    i-th 8-hex (32-bit) window of md5(shingle) / md5('x'||shingle),
+    BYTE-IDENTICAL to the array-HOF form the DuckDB oracle mirrors (pinned
+    against tests/dedup_hof.py in tests/test_dedup_kernels.py)."""
+    if k > 8:
+        raise ValueError(f"two md5s provide 8 8-hex windows; got k={k}")
     id_type = df.schema[id_col].dataType
     schema = T.StructType(
         [T.StructField("doc_id", id_type)]
@@ -190,78 +195,21 @@ def minhash_signatures(df: DataFrame, id_col: str = "doc_id",
     )
 
     def kernel(batches):
-        import hashlib
         import pandas as pd
 
-        memo: dict[str, tuple[str, ...]] = {}
-
-        def windows(g: str) -> tuple[str, ...]:
-            w = memo.get(g)
-            if w is None:
-                h1 = hashlib.md5(g.encode("utf-8")).hexdigest()
-                h2 = hashlib.md5(("x" + g).encode("utf-8")).hexdigest()
-                w = tuple(
-                    (h1 if i < 4 else h2)[8 * (i % 4) : 8 * (i % 4) + 8]
-                    for i in range(8)
-                )
-                if len(memo) >= _MD5_CACHE_CAP:
-                    memo.clear()
-                memo[g] = w
-            return w
-
+        memo: dict[str, bytes] = {}
         for pdf in batches:
-            ids: list = []
-            mins: list[tuple[str, ...]] = []
-            for doc_id, text in zip(pdf["doc_id"], pdf["_txt"]):
-                sh = _py_shingles(text, SHINGLE_WIDTH)
-                if sh is None:
-                    continue
-                it = iter(sh)
-                best = list(windows(next(it)))
-                for g in it:
-                    w = windows(g)
-                    for i in range(8):
-                        if w[i] < best[i]:
-                            best[i] = w[i]
-                ids.append(doc_id)
-                mins.append(tuple(best[:k]))
-            if ids:
-                yield pd.DataFrame(
-                    {
-                        "doc_id": ids,
-                        **{f"h{i}": [m[i] for m in mins] for i in range(k)},
-                    }
-                )
+            sigs = [
+                (doc_id, *_py_minhash(sh, k, memo))
+                for doc_id, text in zip(pdf["doc_id"], pdf["_txt"])
+                if (sh := _py_shingles(text, SHINGLE_WIDTH)) is not None
+            ]
+            if sigs:
+                yield pd.DataFrame(sigs, columns=schema.names)
 
     return df.select(
         F.col(id_col).alias("doc_id"), F.col(text_col).alias("_txt")
     ).mapInPandas(kernel, schema=schema)
-
-
-def minhash_signatures_hof(df: DataFrame, id_col: str = "doc_id",
-                           text_col: str = "text", k: int = MINHASH_K) -> DataFrame:
-    """The pure-Column HOF twin of :func:`minhash_signatures` (pre-r7 path):
-    two md5s per shingle inside array higher-order functions, signature i =
-    array_min over the i-th 8-hex window.  Kept because its expression tree
-    is what the DuckDB oracle mirrors and as the differential pin for the
-    Arrow kernel."""
-    assert k <= 8, "two md5s provide 8 8-hex windows"
-    sh = shingle_array_df(df, id_col, text_col)
-    hashed = sh.select(
-        "doc_id",
-        F.transform("sh", lambda s: F.md5(s)).alias("_h1"),
-        F.transform("sh", lambda s: F.md5(F.concat(F.lit("x"), s))).alias("_h2"),
-    )
-    cols = []
-    for i in range(k):
-        src = "_h1" if i < 4 else "_h2"  # 32 hex chars => 4 windows per md5
-        start = 1 + 8 * (i % 4)
-        cols.append(
-            F.array_min(
-                F.transform(src, lambda x: F.substring(x, start, 8))
-            ).alias(f"h{i}")
-        )
-    return hashed.select("doc_id", *cols)
 
 
 def lsh_candidate_pairs(
@@ -314,12 +262,25 @@ def lsh_candidate_pairs(
     )
 
 
+def _jaccard_at(counts: DataFrame, threshold: float) -> DataFrame:
+    """(doc_a, doc_b, n_inter, n_a, n_b) -> (doc_a, doc_b, n_inter, jaccard),
+    keeping pairs whose Jaccard (double, rounded HALF_UP to 4) >= threshold."""
+    jaccard = F.round(
+        F.col("n_inter").cast("double")
+        / (F.col("n_a") + F.col("n_b") - F.col("n_inter")).cast("double"),
+        4,
+    )
+    return counts.select("doc_a", "doc_b", "n_inter", jaccard.alias("jaccard")).filter(
+        F.col("jaccard") >= threshold
+    )
+
+
 def ngram_jaccard_pairs(df: DataFrame, threshold: float = 0.6,
                         id_col: str = "doc_id", text_col: str = "text",
                         width: int = SHINGLE_WIDTH) -> DataFrame:
     """Near-dup pairs by exact n-gram Jaccard >= threshold via shingle
-    self-join (the verification step of the MinHash pipeline; also usable
-    directly at moderate scale)."""
+    self-join: every pair, no LSH, so the recall reference at moderate
+    scale."""
     # materialized once, referenced three times (sizes, a, b): the shingle
     # kernel is a Python node, so each reference would re-run it
     sh = shingles(df, id_col, text_col, width).localCheckpoint(eager=False)
@@ -332,19 +293,7 @@ def ngram_jaccard_pairs(df: DataFrame, threshold: float = 0.6,
     )
     sa = sizes.select(F.col("doc_id").alias("doc_a"), F.col("n_sh").alias("n_a"))
     sb = sizes.select(F.col("doc_id").alias("doc_b"), F.col("n_sh").alias("n_b"))
-    return (
-        inter.join(sa, "doc_a").join(sb, "doc_b")
-        .withColumn(
-            "jaccard",
-            F.round(
-                F.col("n_inter").cast("double")
-                / (F.col("n_a") + F.col("n_b") - F.col("n_inter")).cast("double"),
-                4,
-            ),
-        )
-        .filter(F.col("jaccard") >= threshold)
-        .select("doc_a", "doc_b", "n_inter", "jaccard")
-    )
+    return _jaccard_at(inter.join(sa, "doc_a").join(sb, "doc_b"), threshold)
 
 
 def jaccard_verify_candidates(
@@ -356,9 +305,9 @@ def jaccard_verify_candidates(
     width: int = SHINGLE_WIDTH,
     max_shingle_df: int | None = None,
 ) -> DataFrame:
-    """Exact n-gram Jaccard restricted to a candidate pair set — the SCALE
-    path of the dedup pipeline (MinHash-LSH generates candidates, this
-    verifies them).
+    """Exact n-gram Jaccard restricted to a candidate pair set. Over the
+    MinHash-LSH candidates, :func:`near_dup_pairs_pipeline` computes the
+    same rows in one pass; this stays as its oracle.
 
     Why not ``ngram_jaccard_pairs`` at scale: the full shingle self-join is
     keyed by ``shingle`` alone, so one corpus-common shingle ("click here to
@@ -425,19 +374,26 @@ def jaccard_verify_candidates(
     )
     sa = sizes.select(F.col("doc_id").alias("doc_a"), F.col("n_sh").alias("n_a"))
     sb = sizes.select(F.col("doc_id").alias("doc_b"), F.col("n_sh").alias("n_b"))
-    return (
-        inter.join(sa, "doc_a").join(sb, "doc_b")
-        .withColumn(
-            "jaccard",
-            F.round(
-                F.col("n_inter").cast("double")
-                / (F.col("n_a") + F.col("n_b") - F.col("n_inter")).cast("double"),
-                4,
-            ),
-        )
-        .filter(F.col("jaccard") >= threshold)
-        .select("doc_a", "doc_b", "n_inter", "jaccard")
-    )
+    return _jaccard_at(inter.join(sa, "doc_a").join(sb, "doc_b"), threshold)
+
+
+def _run_pair_counts(run: list[tuple]):
+    """(doc_a, doc_b, n_inter, n_a, n_b) for each pair a < b of one bucket
+    run of (bucket, doc_id, lower_keys, text) rows sorted by doc_id, except
+    pairs whose keys collide in a lower band: they are counted there."""
+    if len(run) < 2:
+        return
+    sets = [set(_py_shingles(r[3], SHINGLE_WIDTH)) for r in run]
+    for i, (_, a, ka, _) in enumerate(run):
+        for j in range(i + 1, len(run)):
+            _, b, kb, _ = run[j]
+            if a == b:
+                raise ValueError(
+                    f"near_dup_pairs_pipeline: doc_id {a!r} occurs twice in one "
+                    "LSH bucket; document ids must be unique"
+                )
+            if not any(p == q for p, q in zip(ka, kb)):
+                yield a, b, len(sets[i] & sets[j]), len(sets[i]), len(sets[j])
 
 
 def near_dup_pairs_pipeline(
@@ -445,21 +401,68 @@ def near_dup_pairs_pipeline(
     threshold: float = 0.6,
     id_col: str = "doc_id",
     text_col: str = "text",
-    max_shingle_df: int | None = None,
 ) -> DataFrame:
-    """The composed scale-safe near-dup pipeline: MinHash signatures (map-only)
-    -> LSH banding candidates (bucket equi-join) -> exact Jaccard verification
-    keyed by the candidate pairs. This is the plan to run at 100 TB;
-    ``ngram_jaccard_pairs`` is its small-scale exactness cross-check.
+    """The rows of ``jaccard_verify_candidates(df,
+    lsh_candidate_pairs(minhash_signatures(df)), threshold)``, reading
+    ``df`` once, in two Python passes around one exchange. The band pass
+    emits one ``(bucket, doc_id, lower_keys, text)`` row per document and
+    band, so the text crosses the exchange once per band (4x). Sorted by
+    (bucket, doc_id), each bucket is one run; the verify pass streams the
+    runs across batch boundaries, holding one bucket run at a time, not a
+    partition, and counts each pair's shingle intersection in the lowest
+    band where it collides. Pair work is quadratic in bucket size, as with
+    a bucket self-join. A doc_id twice in one run raises ``ValueError``."""
+    id_type = df.schema[id_col].dataType
+    id_arrow, id_sql = to_arrow_type(id_type), id_type.simpleString()
+    band_schema = f"bucket string, doc_id {id_sql}, lower_keys array<string>, text string"
+    pair_schema = (f"doc_a {id_sql}, doc_b {id_sql}, n_inter bigint not null, "
+                   "n_a bigint not null, n_b bigint not null")
 
-    ``df`` is read twice, by the signatures and by the verification, and
-    the two reads share no work. An expensive ``df`` (an extraction or a
-    shuffle) should come in materialized, as ``curate_documents`` does."""
-    sig = minhash_signatures(df, id_col, text_col)
-    cand = lsh_candidate_pairs(sig)
-    return jaccard_verify_candidates(
-        df, cand, threshold, id_col, text_col, max_shingle_df=max_shingle_df
+    def band(batches):
+        import pyarrow as pa
+
+        memo: dict[str, bytes] = {}
+        for rb in batches:
+            ids, texts = rb.column("doc_id"), rb.column("text")
+            take, buckets, lower = [], [], []
+            for i, (doc_id, text) in enumerate(zip(ids.to_pylist(), texts.to_pylist())):
+                sh = None if doc_id is None else _py_shingles(text, SHINGLE_WIDTH)
+                if sh is not None:
+                    keys = _band_keys(_py_minhash(sh, MINHASH_K, memo), LSH_BANDS)
+                    take += [i] * LSH_BANDS
+                    buckets += [f"{b}:{key}" for b, key in enumerate(keys)]
+                    lower += [keys[:b] for b in range(LSH_BANDS)]
+            idx = pa.array(take, pa.int32())
+            yield pa.RecordBatch.from_arrays(
+                [pa.array(buckets, pa.string()), ids.take(idx),
+                 pa.array(lower, pa.list_(pa.string())), texts.take(idx)],
+                names=["bucket", "doc_id", "lower_keys", "text"],
+            )
+
+    def verify(batches):
+        import pyarrow as pa
+
+        rows = (r for rb in batches for r in zip(*(c.to_pylist() for c in rb.columns)))
+        pairs = itertools.chain.from_iterable(
+            _run_pair_counts(list(run))
+            for _, run in itertools.groupby(rows, key=itemgetter(0))
+        )
+        while chunk := list(itertools.islice(pairs, _PAIR_BATCH_ROWS)):
+            a, b, *counts = zip(*chunk)
+            yield pa.RecordBatch.from_arrays(
+                [pa.array(a, id_arrow), pa.array(b, id_arrow)]
+                + [pa.array(c, pa.int64()) for c in counts],
+                names=["doc_a", "doc_b", "n_inter", "n_a", "n_b"],
+            )
+
+    counts = (
+        df.select(F.col(id_col).alias("doc_id"), F.col(text_col).alias("text"))
+        .mapInArrow(band, band_schema)
+        .repartition("bucket")
+        .sortWithinPartitions("bucket", "doc_id")
+        .mapInArrow(verify, pair_schema)
     )
+    return _jaccard_at(counts, threshold)
 
 
 def dedup_clusters(pairs: DataFrame, max_iters: int = 20,

@@ -11,14 +11,15 @@ kernel is the only Python stage; every gate is a codegen'd Column
 expression; dedup adds the one fingerprint shuffle. Nothing collects
 to the driver.
 
-Near-dup removal cuts that plan once, at the exact-dedup frame. Three
-consumers read it: the MinHash signatures, the Jaccard verification (both
-inside ``near_dup_pairs_pipeline``) and the final ``left_anti`` join. Spark
-does not share a subtree between them, so without the cut each would re-run
-the scan, the extraction kernel, the gates and the fingerprint window: three
-kernel passes per input row instead of one. ``localCheckpoint(eager=False)``
-persists the frame while its first consumer computes it, as
-``operators/dedup`` already does for the frames its own plans re-read.
+Near-dup removal cuts that plan once, at the exact-dedup frame. Two
+consumers read it: ``near_dup_pairs_pipeline`` and the final ``left_anti``
+join. Spark does not share a subtree between them, so without the cut each
+would re-run the scan, the extraction kernel, the gates and the fingerprint
+window: two kernel passes per input row instead of one. Under AQE,
+``localCheckpoint(eager=False)`` is not lazy: defining it runs the shuffle
+stages beneath it (the fingerprint exchange) as jobs while the plan is
+built. Only the stage above that exchange waits for the first consumer,
+which computes and persists it.
 
 At 100 TB the gate order matters and is deliberate: quality/lang filters are
 map-only and run BEFORE the dedup shuffle, so the exchange only carries rows
@@ -111,7 +112,7 @@ def curate_documents(
         return exact_deduped
     from document_extraction_spark.operators.dedup import near_dup_pairs_pipeline
 
-    # three consumers below: extract and gate each document once
+    # two consumers below: extract and gate each document once
     exact_deduped = exact_deduped.localCheckpoint(eager=False)
     pairs = near_dup_pairs_pipeline(
         exact_deduped, threshold=near_dup_threshold, id_col=id_col, text_col="text"

@@ -1,5 +1,8 @@
 from __future__ import annotations
 
+import contextlib
+from collections import Counter
+
 import pytest
 
 from document_extraction_spark.operators import dedup as DD
@@ -135,3 +138,130 @@ def test_lsh_max_bucket_size_drops_hot_bucket(spark):
     pairs = {(r["doc_a"], r["doc_b"]) for r in capped.collect()}
     assert all(a >= 100 for a, _ in pairs)  # clique gone, odd pair intact
     assert (100, 101) in pairs
+
+
+def _chain_pairs(df, threshold):
+    """The unfused three-operator chain: the fused pipeline's oracle."""
+    sig = DD.minhash_signatures(df)
+    return DD.jaccard_verify_candidates(df, DD.lsh_candidate_pairs(sig), threshold)
+
+
+def _fused_equals_chain(df, threshold):
+    got = sorted(tuple(r) for r in DD.near_dup_pairs_pipeline(df, threshold).collect())
+    assert got == sorted(tuple(r) for r in _chain_pairs(df, threshold).collect())
+    return got
+
+
+def _hot_bucket_docs(spark):
+    """40 identical documents (one bucket per band holding all 40) among 60
+    distinct ones, plus a near-dup of the clique text."""
+    import random
+
+    rng = random.Random(0)
+    words = [f"w{i}" for i in range(400)]
+    rows = [(i, "the same boilerplate footer repeated on every page here") for i in range(40)]
+    rows += [(100 + i, " ".join(rng.choice(words) for _ in range(12))) for i in range(60)]
+    rows.append((200, "the same boilerplate footer repeated on every page there"))
+    return spark.createDataFrame(rows, "doc_id long, text string")
+
+
+@pytest.fixture(scope="module")
+def corpus_docs(spark, testdata_dir):
+    from test_dedup_kernels import EDGE_ROWS
+
+    base = spark.read.parquet(f"{testdata_dir}/sf0.001/documents.parquet")
+    edge = spark.createDataFrame(EDGE_ROWS, "doc_id long, text string")
+    return base.select("doc_id", "text").unionByName(edge)
+
+
+@contextlib.contextmanager
+def _arrow_batch_rows(spark, n):
+    """Arrow batches of ``n`` rows (the default when None): at 2, every
+    bucket run of 3 or more rows spans a batch boundary."""
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    if n:
+        spark.conf.set(key, str(n))
+    try:
+        yield
+    finally:
+        spark.conf.unset(key)
+
+
+@pytest.mark.parametrize("batch_rows", [None, 2])
+@pytest.mark.parametrize("threshold", [0.0, 0.6])
+def test_fused_pairs_equal_chain_on_corpus(spark, corpus_docs, threshold, batch_rows):
+    """sf0.001 documents plus the NULL / empty / whitespace / sub-width /
+    NBSP edge rows."""
+    with _arrow_batch_rows(spark, batch_rows):
+        assert _fused_equals_chain(corpus_docs, threshold)
+
+
+@pytest.mark.parametrize("batch_rows", [None, 2])
+def test_fused_pairs_equal_chain_on_hot_bucket(spark, batch_rows):
+    """A bucket at more than 10x the mean occupancy: the 40-document
+    clique is verified whole, each pair once."""
+    docs = _hot_bucket_docs(spark)
+    occ = Counter(
+        (b, key)
+        for r in docs.collect()
+        for b, key in enumerate(
+            DD._band_keys(DD._py_minhash(DD._py_shingles(r["text"], 3), 8, {}), 4)
+        )
+    )
+    assert max(occ.values()) > 10 * (sum(occ.values()) / len(occ))
+    with _arrow_batch_rows(spark, batch_rows):
+        got = _fused_equals_chain(docs, 0.5)
+    assert sum(1 for a, b, _, _ in got if b < 40) == 40 * 39 // 2
+
+
+def test_fused_pairs_at_exact_threshold(spark):
+    """Jaccard 2/3 rounds to 0.6667 and 3/5 is 0.6: each pair is kept at a
+    threshold equal to its rounded ratio. Both pairs collide in two bands
+    (2 and 3, and 0 and 2)."""
+    docs = spark.createDataFrame(
+        [
+            (1, "alpha bravo charlie delta"),
+            (2, "alpha bravo charlie delta echo"),
+            (3, "alpha bravo charlie delta echo foxtrot golf"),
+        ],
+        "doc_id long, text string",
+    )
+    assert {(a, b): j for a, b, _, j in _fused_equals_chain(docs, 0.6667)} == {(1, 2): 0.6667}
+    got = {(a, b): j for a, b, _, j in _fused_equals_chain(docs, 0.6)}
+    assert got == {(1, 2): 0.6667, (2, 3): 0.6}
+
+
+def test_fused_pair_colliding_in_every_band_is_emitted_once(spark):
+    docs = spark.createDataFrame(
+        [(1, "an identical document in all four bands"),
+         (2, "an identical document in all four bands")],
+        "doc_id long, text string",
+    )
+    assert _fused_equals_chain(docs, 0.6) == [(1, 2, 5, 1.0)]
+
+
+def test_fused_pairs_reject_duplicate_doc_id(spark):
+    docs = spark.createDataFrame(
+        [(7, "one text under a repeated id"), (7, "one text under a repeated id")],
+        "doc_id long, text string",
+    )
+    with pytest.raises(Exception, match="doc_id 7 occurs twice"):
+        DD.near_dup_pairs_pipeline(docs, 0.6).collect()
+
+
+def test_near_dup_curation_write_runs_at_most_8_jobs(spark, corpus_docs, tmp_path):
+    """Building and writing one near-dup curation runs at most 8 Spark jobs."""
+    import uuid
+
+    from document_extraction_spark.plans.curation import curate_documents
+
+    sc = spark.sparkContext
+    gid = f"curate-{uuid.uuid4().hex}"
+    sc.setJobGroup(gid, "curate")
+    try:
+        out = curate_documents(corpus_docs, near_dup_threshold=0.6)
+        out.write.parquet(str(tmp_path / "curated"))
+    finally:
+        sc.setJobGroup(None, None)
+    jobs = sc.statusTracker().getJobIdsForGroup(gid)
+    assert 0 < len(jobs) <= 8

@@ -38,17 +38,19 @@ def _rows(df):
 
 
 def test_minhash_kernel_equals_hof(docs):
+    from dedup_hof import minhash_signatures_hof
     from document_extraction_spark.operators import dedup as DD
 
     assert _rows(DD.minhash_signatures(docs)) == _rows(
-        DD.minhash_signatures_hof(docs)
+        minhash_signatures_hof(docs)
     )
 
 
 def test_shingles_kernel_equals_hof(docs):
+    from dedup_hof import shingles_hof
     from document_extraction_spark.operators import dedup as DD
 
-    assert _rows(DD.shingles(docs)) == _rows(DD.shingles_hof(docs))
+    assert _rows(DD.shingles(docs)) == _rows(shingles_hof(docs))
 
 
 def test_doc_grams_kernel_equals_hof(docs):
