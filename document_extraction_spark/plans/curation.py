@@ -35,6 +35,55 @@ from document_extraction_spark.functions import textstats as TS
 from document_extraction_spark.plans.extract_pipeline import build_extract_df
 
 
+# (SparkContext, min_quality, langs) -> the gate Columns built for them
+_GATE_COLUMNS: dict[tuple, tuple] = {}
+
+
+def _gate_columns(sc, min_quality: float, langs: tuple[str, ...]) -> tuple:
+    """The gate projections of :func:`curate_documents`, built once per
+    SparkContext: (token array, [token count, lowered tokens], the four
+    stopword hit counts, [quality, lang, fingerprint], the keep predicate).
+
+    Built inline they cost ~2,300 py4j round trips a call: the largest part
+    of building a curation plan, and the part that swings most with host
+    load. A Column is an immutable unresolved expression, so the same
+    objects serve every plan of the context; a new context rebuilds them.
+
+    The token array, its lowered form and the four hit counts are
+    projection outputs because Catalyst only shares a subexpression that a
+    projection names: inlined, the interpreted tokenize and filter HOFs ran
+    up to 9x per row. The ``_from`` variants apply the expression tails of
+    ``quality_score`` and ``lang_guess``, so every gate value is theirs."""
+    key = (sc, min_quality, langs)
+    cols = _GATE_COLUMNS.get(key)
+    if cols is None:
+        cols = (
+            TS.tokens(F.col("text")).alias("_tk"),
+            [
+                F.size("_tk").cast("long").alias("_ntok"),
+                F.transform("_tk", lambda t: F.lower(t)).alias("_tkl"),
+            ],
+            [
+                TS.stopword_hits_from_lower_tokens(F.col("_tkl"), lang).alias(f"_h_{lang}")
+                for lang in TS.STOPWORDS
+            ],
+            [
+                TS.quality_score_from(
+                    F.col("_ntok"), TS.punct_count(F.col("text")), F.col("text")
+                ).alias("quality"),
+                TS.lang_guess_from_hits(
+                    {lang: F.col(f"_h_{lang}") for lang in TS.STOPWORDS}
+                ).alias("lang"),
+                TS.fingerprint(F.col("text")).alias("_fp"),
+            ],
+            (F.col("quality") >= min_quality) & F.col("lang").isin(*langs),
+        )
+        if any(k[0] is not sc for k in _GATE_COLUMNS):
+            _GATE_COLUMNS.clear()  # a stopped context's Columns are dead
+        _GATE_COLUMNS[key] = cols
+    return cols
+
+
 def curate_documents(
     docs: DataFrame,
     min_quality: float = 0.5,
@@ -61,46 +110,15 @@ def curate_documents(
         F.col("conv_id").cast("long").alias(id_col),
         F.col("text"),
     )
-    # r7 gate restructure (the dedup.py plan-shape note): quality_score and
-    # lang_guess both tokenize, and lang_guess's argmax references each
-    # language's hit count twice — inlined, the interpreted tokenize+filter
-    # HOFs re-ran up to 9x per row.  Naming the token array, its lowered
-    # form, and the four hit counts as projection outputs evaluates each
-    # ONCE; the _from variants apply the identical expression tails, so
-    # every gate value (and the oracle hash) is unchanged.
-    with_toks = extracted.select(
-        id_col,
-        "text",
-        TS.tokens(F.col("text")).alias("_tk"),
-    )
-    with_hits = with_toks.select(
-        id_col,
-        "text",
-        F.size("_tk").cast("long").alias("_ntok"),
-        F.transform("_tk", lambda t: F.lower(t)).alias("_tkl"),
-    ).select(
-        id_col,
-        "text",
-        "_ntok",
-        *[
-            TS.stopword_hits_from_lower_tokens(F.col("_tkl"), lang).alias(f"_h_{lang}")
-            for lang in TS.STOPWORDS
-        ],
+    tk, hits_in, hits, gates, keep = _gate_columns(
+        docs.sparkSession.sparkContext, float(min_quality), tuple(langs)
     )
     gated = (
-        with_hits.select(
-            id_col,
-            "text",
-            TS.quality_score_from(
-                F.col("_ntok"), TS.punct_count(F.col("text")), F.col("text")
-            ).alias("quality"),
-            TS.lang_guess_from_hits(
-                {lang: F.col(f"_h_{lang}") for lang in TS.STOPWORDS}
-            ).alias("lang"),
-            TS.fingerprint(F.col("text")).alias("_fp"),
-        )
-        .filter(F.col("quality") >= min_quality)
-        .filter(F.col("lang").isin(*langs))
+        extracted.select(id_col, "text", tk)
+        .select(id_col, "text", *hits_in)
+        .select(id_col, "text", "_ntok", *hits)
+        .select(id_col, "text", *gates)
+        .filter(keep)
     )
     w = Window.partitionBy("_fp").orderBy(id_col)
     exact_deduped = (

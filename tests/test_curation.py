@@ -36,6 +36,19 @@ def test_curation_near_dup_drop(spark):
     assert 0 in out
 
 
+def test_gate_columns_built_once_per_context(spark):
+    from document_extraction_spark.plans import curation
+
+    sc = spark.sparkContext
+    first = curation._gate_columns(sc, 0.4, ("en",))
+    assert curation._gate_columns(sc, 0.4, ("en",)) is first
+    assert curation._gate_columns(sc, 0.5, ("en",)) is not first
+    docs = _docs(spark)
+    assert sorted(curate_documents(docs, min_quality=0.4).collect()) == sorted(
+        curate_documents(docs, min_quality=0.4).collect()
+    )
+
+
 def test_near_dup_curation_reads_each_document_once(spark, counted_reads, tmp_path):
     """The exact-dedup frame feeds the MinHash signatures, the Jaccard
     verification and the final anti-join; it is extracted and gated once,
