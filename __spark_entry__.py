@@ -619,13 +619,12 @@ def q_simhash(spark, sf_dir):
 
 
 def q_ann_topk(spark, sf_dir):
-    """Exact cosine top-k baseline. Round-5: runs the Arrow matmul kernel
-    (per-batch BLAS + per-batch top-k survivors + one small window rank) —
-    pinned row-equal to the HOF broadcast path in tests/test_similarity.py;
-    the interpreted-HOF cosine costs ~10 us/pair (BENCH/DECON_SRP.json)."""
+    """Exact cosine top-k baseline: the Arrow/BLAS kernel (per-batch matmul
+    + per-batch top-k survivors + one small window rank), pinned row-equal
+    to an inline HOF-cosine oracle in tests/test_similarity.py."""
     emb = _t(spark, sf_dir, "embeddings")
     queries = emb.filter(F.col("vec_id") < 5)
-    return SIM.brute_force_topk_arrow(emb, queries, k=10).orderBy("query_id", "rank")
+    return SIM.brute_force_topk(emb, queries, k=10).orderBy("query_id", "rank")
 
 
 def q_embedding_near_dup(spark, sf_dir):
@@ -1461,18 +1460,17 @@ def q_semantic_decontaminate(spark, sf_dir):
     benchmark leakage the n-gram path (q_decontaminate) misses. Every
     vec_id % 17 == 0 embedding plays the eval set.
 
-    Round-5: runs the EXACT Arrow/matmul kernel (one BLAS matmul per corpus
-    batch, eval matrix in the closure) — ~100x the interpreted-HOF
-    broadcast-NLJ's throughput at identical output (pinned row-equal in
-    tests/test_drift_sampling_ops.py; measured in BENCH/DECON_SRP.json)."""
+    Runs the exact Arrow/BLAS kernel (one matmul per corpus batch, eval
+    matrix in the closure), pinned row-equal to an inline HOF-cosine oracle
+    in tests/test_drift_sampling_ops.py."""
     from document_extraction_spark.operators.decontaminate import (
-        semantic_decontaminate_arrow,
+        semantic_decontaminate,
     )
 
     emb = _t(spark, sf_dir, "embeddings")
     evalset = emb.filter(F.col("vec_id") % 17 == 0)
     corpus = emb.filter(F.col("vec_id") % 17 != 0)
-    out = semantic_decontaminate_arrow(corpus, evalset, threshold=0.5)
+    out = semantic_decontaminate(corpus, evalset, threshold=0.5)
     return out.withColumn(
         "contaminated", F.col("contaminated").cast("int")
     ).orderBy("doc_id")

@@ -1,5 +1,5 @@
-"""Semantic-decontamination prefilter bench (VERDICT r4 ask #5): exact
-broadcast-NLJ vs banded-SRP prefilter on a blown-up eval suite.
+"""Semantic-decontamination prefilter bench (VERDICT r4 ask #5): the exact
+BLAS kernel vs the banded-SRP prefilter on a blown-up eval suite.
 
 The exact path costs |corpus| x |eval| cosines — linear in the EVAL SUITE
 size, which is the quantity that grows as more benchmarks are added. This
@@ -42,7 +42,6 @@ def main() -> int:
     from document_extraction_spark import get_spark
     from document_extraction_spark.operators.decontaminate import (
         semantic_decontaminate,
-        semantic_decontaminate_arrow,
     )
 
     spark = get_spark(
@@ -83,12 +82,8 @@ def main() -> int:
     semantic_decontaminate(
         corpus_big.limit(500), eval_big.limit(50), threshold=0.9
     ).count()
-    semantic_decontaminate_arrow(
-        corpus_big.limit(500), eval_big.limit(50), threshold=0.9
-    ).count()
 
     exact_sec, exact_flagged = timed(semantic_decontaminate)
-    arrow_sec, arrow_flagged = timed(semantic_decontaminate_arrow)
     pre_sec, pre_flagged = timed(
         semantic_decontaminate,
         prefilter_planes=args.planes, prefilter_bands=args.bands, dim=64
@@ -100,17 +95,15 @@ def main() -> int:
         "n_corpus": n_corpus,
         "n_eval": n_eval,
         "planted": 50,
-        "exact_hof_nlj": {"sec": exact_sec, "flagged": exact_flagged},
-        "exact_arrow_matmul": {"sec": arrow_sec, "flagged": arrow_flagged},
+        "exact_arrow_matmul": {"sec": exact_sec, "flagged": exact_flagged},
         "srp_prefilter": {
             "sec": pre_sec,
             "flagged": pre_flagged,
             "planes": args.planes,
             "bands": args.bands,
         },
-        "speedup_prefilter_vs_hof": round(exact_sec / pre_sec, 2) if pre_sec else None,
-        "speedup_arrow_vs_hof": round(exact_sec / arrow_sec, 2) if arrow_sec else None,
-        "flags_equal": exact_flagged == pre_flagged == arrow_flagged,
+        "speedup_prefilter_vs_exact": round(exact_sec / pre_sec, 2) if pre_sec else None,
+        "flags_equal": exact_flagged == pre_flagged,
     }
     with open(os.path.join(REPO, "BENCH", "DECON_SRP.json"), "w") as f:
         json.dump(result, f, indent=2)

@@ -155,7 +155,7 @@ def bpe_encode(docs: DataFrame, merges: list[tuple[int, str, int]],
     and its subexpression elimination).  The kernel runs the identical
     string pipeline once per doc in Python — str.replace is the same
     leftmost non-overlapping scan as SQL replace, so the segmentation and
-    its md5 are byte-identical (pinned vs :func:`bpe_encode_expr` in
+    its md5 are byte-identical (pinned vs the expression form in
     tests/test_dedup_kernels.py, and by the q_bpe_encode oracle)."""
     import re as _re
 
@@ -221,28 +221,6 @@ def bpe_encode(docs: DataFrame, merges: list[tuple[int, str, int]],
     return docs.where(F.col(text_col).isNotNull()).select(
         F.col(id_col).alias("_id"), F.col(text_col).alias("_txt")
     ).mapInPandas(kernel, schema=schema)
-
-
-def bpe_encode_expr(docs: DataFrame, merges: list[tuple[int, str, int]],
-                    id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
-    """Pure-Column expression twin of :func:`bpe_encode` (pre-r7 path) —
-    the tree the DuckDB oracle mirrors; kernel equality pinned in
-    tests/test_dedup_kernels.py."""
-    tk = F.filter(
-        tokens(F.lower(F.col(text_col))), lambda w: w.rlike("^[a-z]+$")
-    )
-    wrapped = F.transform(tk, lambda w: F.regexp_replace(w, "(.)", "<$1>"))
-    enc = F.array_join(wrapped, " ")
-    for _rank, pair, _n in merges:
-        merged = "<" + pair.replace("<", "").replace(">", "") + ">"
-        enc = F.replace(enc, F.lit(pair), F.lit(merged))
-    return docs.where(F.col(text_col).isNotNull()).select(
-        F.col(id_col),
-        F.size(tk).cast("long").alias("n_words"),
-        (F.length(enc) - F.length(F.replace(enc, F.lit("<"), F.lit(""))))
-        .cast("long").alias("n_symbols"),
-        F.md5(enc).alias("enc_hash"),
-    )
 
 
 def bpe_segment_counts(docs: DataFrame, rounds: int = ROUNDS,

@@ -10,10 +10,9 @@ benchmark stays uncontaminated.
 
 Plan shape, and why it holds at 100 TB:
 
-* Per-document n-grams are built **map-only** with higher-order array
-  functions (``word_ngrams``: sequence -> transform -> slice), deduplicated
-  per document with ``array_distinct`` BEFORE the explode — so the exploded
-  gram stream carries each (doc, gram) once, never raw token positions.
+* Per-document n-grams are built **map-only** by one Arrow kernel
+  (:func:`_doc_grams`), deduplicated per document BEFORE they leave it — so
+  the gram stream carries each (doc, gram) once, never raw token positions.
 * The benchmark side is tiny by construction (eval sets are MBs against a
   100 TB corpus), so its distinct-gram set is **broadcast**: the corpus-side
   stream is filtered by a broadcast hash semi-join — zero shuffle of corpus
@@ -30,11 +29,12 @@ from __future__ import annotations
 
 import re
 
+import numpy as np
+import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from document_extraction_spark.functions.textstats import tokens, word_ngrams
 
 # Python twin of the Java \s class behind textstats.tokens (Python re's \s
 # would additionally match Unicode whitespace — see operators/dedup.py)
@@ -49,8 +49,8 @@ def _doc_grams(df: DataFrame, n: int, id_col: str, text_col: str) -> DataFrame:
     document; the kernel builds the same distinct gram set with Python
     string ops.  Emits the identical row SET (NULL text and <n-token docs
     emit nothing, exactly like exploding the HOF's empty array); every
-    consumer (distinct, semi-join, count) is row-order-free.  HOF twin kept
-    below for the kernel-equality differential test."""
+    consumer (distinct, semi-join, count) is row-order-free.  Pinned
+    row-equal to the HOF form in tests/test_dedup_kernels.py."""
     id_type = df.schema[id_col].dataType
     schema = T.StructType([
         T.StructField("doc_id", id_type),
@@ -80,17 +80,6 @@ def _doc_grams(df: DataFrame, n: int, id_col: str, text_col: str) -> DataFrame:
     return df.select(
         F.col(id_col).alias("_id"), F.col(text_col).alias("_txt")
     ).mapInPandas(kernel, schema=schema)
-
-
-def _doc_grams_hof(df: DataFrame, n: int, id_col: str, text_col: str) -> DataFrame:
-    """Pure-Column HOF twin of :func:`_doc_grams` (pre-r7 path) — the
-    expression tree the DuckDB oracle mirrors; kernel equality pinned in
-    tests/test_dedup_kernels.py."""
-    toks = tokens(F.lower(F.col(text_col)))
-    return df.select(
-        F.col(id_col).alias("doc_id"),
-        F.explode(F.array_distinct(word_ngrams(toks, n))).alias("gram"),
-    )
 
 
 def contaminated_ngram_counts(
@@ -156,19 +145,19 @@ def semantic_decontaminate(
     paraphrased/reworded benchmark leakage that n-gram overlap
     (:func:`decontaminate`) misses.
 
-    Plan shape at 100 TB: the eval side is tiny by construction ->
-    **broadcast** nested-loop against the corpus scan, cosine evaluated
-    JVM-side (array HOFs, no Python), then ONE groupBy(doc) max — the same
-    broadcast-small-side shape as the n-gram path, swapped into vector
-    space. Corpus embeddings stream through; nothing collects.
+    Plan shape at 100 TB: the eval side is tiny by construction, so it is
+    collected to the driver (at most ``similarity.MAX_BROADCAST_ROWS``
+    rows) as a dense float64 matrix that rides the ``mapInPandas`` closure;
+    each corpus Arrow batch computes its max cosine as ONE BLAS matmul
+    (``similarity._cosine_matrix``). Corpus embeddings stream through, never
+    shuffle, and nothing but (doc_id, max_cos) comes back.
 
-    That broadcast-NLJ costs |corpus| x |eval| cosines. When the eval suite
-    is large (hundreds of benchmarks), set ``prefilter_planes`` (VERDICT r4
-    ask #5) to gate the cosine behind banded signed-random-projection
-    bucketing (the :func:`similarity.srp_near_dup_pairs` scheme,
-    ``prefilter_bands`` bands of ``prefilter_planes/prefilter_bands`` sign
-    bits): a corpus row is scored only against eval vectors colliding in at
-    least one band, shrinking the pair stream by the band collision rate.
+    That kernel costs |corpus| x |eval| cosines. Setting ``prefilter_planes``
+    (VERDICT r4 ask #5) instead gates the cosine behind banded
+    signed-random-projection bucketing (the
+    :func:`similarity.srp_near_dup_pairs` scheme, ``prefilter_bands`` bands
+    of ``prefilter_planes/prefilter_bands`` sign bits): a corpus row is
+    scored only against eval vectors colliding in at least one band.
     Banding bounds the miss probability at (1 - p^r)^b per true pair
     (p = 1 - acos(cos)/pi); at threshold 0.9 with 16 planes / 8 bands that
     is < 0.3%. The prefilter is approximate BY DESIGN: rows with no
@@ -176,32 +165,44 @@ def semantic_decontaminate(
     so ``max_cos`` is a lower-bound witness, not an exact maximum.
 
     Output: (doc_id, max_cos, contaminated) for every corpus row, cosine
-    rounded to 4 decimals at the edge (engine-stable). ``eval_emb`` must
-    carry ``id_col`` too when the prefilter is on (candidate dedup across
-    bands is keyed by it)."""
-    from document_extraction_spark.operators.similarity import cosine
-
-    c = corpus_emb.select(F.col(id_col).alias("doc_id"), F.col(vec_col).alias("cv"))
-    if prefilter_planes is None:
-        e = eval_emb.select(F.col(vec_col).alias("ev"))
-        scored = c.join(F.broadcast(e)).select(
-            "doc_id", cosine(F.col("cv"), F.col("ev")).alias("_cos")
-        )
-        return (
-            scored.groupBy("doc_id")
-            .agg((F.round(F.max("_cos"), 4) + F.lit(0.0)).alias("max_cos"))
-            .select(
-                "doc_id",
-                "max_cos",
-                (F.col("max_cos") >= threshold).alias("contaminated"),
-            )
-        )
-
+    rounded to 4 decimals at the edge (engine-stable). Without the
+    prefilter a zero-norm vector has no cosine: a corpus row with no
+    non-zero-norm eval partner gets ``max_cos`` NULL and contaminated=false.
+    ``eval_emb`` must carry ``id_col`` too when the prefilter is on
+    (candidate dedup across bands is keyed by it)."""
     from document_extraction_spark.operators.similarity import (
         _checked_dim,
+        _collect_broadcast_side,
+        _cosine_matrix,
         _hyperplanes,
+        _vectors,
+        cosine,
         srp_signature,
     )
+
+    contaminated = F.coalesce(F.col("max_cos") >= threshold, F.lit(False))
+    if prefilter_planes is None:
+        emat = _vectors(
+            _collect_broadcast_side(
+                eval_emb.select(vec_col), "eval rows", "the SRP prefilter"
+            ),
+            vec_col,
+        )
+
+        def kernel(batches):
+            for pdf in batches:
+                # fmax skips the NaN of a zero norm without an all-NaN
+                # warning; a row with no cosine at all stays NaN -> NULL
+                sims = _cosine_matrix(_vectors(pdf, vec_col), emat)
+                mx = np.fmax.reduce(sims, axis=1)
+                yield pd.DataFrame({"doc_id": pdf[id_col].values, "_max": mx})
+
+        scored = corpus_emb.select(id_col, vec_col).mapInPandas(
+            kernel, schema="doc_id long, _max double"
+        )
+        return scored.select(
+            "doc_id", (F.round("_max", 4) + F.lit(0.0)).alias("max_cos")
+        ).select("doc_id", "max_cos", contaminated.alias("contaminated"))
 
     if prefilter_planes % prefilter_bands != 0:
         raise ValueError(
@@ -240,72 +241,9 @@ def semantic_decontaminate(
         .agg((F.round(F.max("_cos"), 4) + F.lit(0.0)).alias("max_cos"))
     )
     return (
-        c.select("doc_id")
+        corpus_emb.select(F.col(id_col).alias("doc_id"))
         .distinct()
         .join(per_doc, "doc_id", "left")
-        .select(
-            "doc_id",
-            "max_cos",
-            F.coalesce(F.col("max_cos") >= threshold, F.lit(False)).alias(
-                "contaminated"
-            ),
-        )
+        .select("doc_id", "max_cos", contaminated.alias("contaminated"))
     )
 
-
-def semantic_decontaminate_arrow(
-    corpus_emb: DataFrame,
-    eval_emb: DataFrame,
-    threshold: float = 0.9,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    max_eval: int = 100_000,
-) -> DataFrame:
-    """EXACT semantic decontamination through an Arrow-batched matmul kernel
-    — same output contract as :func:`semantic_decontaminate` (no prefilter),
-    ~100x faster on the same pair count.
-
-    Why: the broadcast-NLJ path evaluates the cosine with array higher-order
-    functions, which Spark interprets per row OUTSIDE whole-stage codegen —
-    measured ~10 us per pair (BENCH/DECON_SRP.json). This kernel collects
-    the (small, would-be-broadcast) eval side to a dense float64 matrix that
-    rides the ``mapInPandas`` closure, and each corpus Arrow batch computes
-    max-cosine as ONE BLAS matmul: |corpus| x |eval| x dim flops at numpy
-    speed, corpus never shuffles, nothing but (doc_id, max_cos) comes back.
-
-    Numerics: same IEEE-double ops as the HOF path; the BLAS dot's summation
-    ORDER differs, so the 4th-decimal rounding could in principle differ for
-    a cosine within ~1e-15 of a 0.00005 boundary (never observed on the
-    fixtures; pinned equal in tests/test_drift_sampling_ops.py)."""
-    import numpy as np
-    import pandas as pd
-
-    ev_pd = eval_emb.select(vec_col).limit(max_eval + 1).toPandas()
-    if len(ev_pd) > max_eval:
-        raise ValueError(
-            f"semantic_decontaminate_arrow holds the eval set in memory: more "
-            f"than {max_eval} eval rows. Use the SRP prefilter path instead."
-        )
-    emat = np.stack(ev_pd[vec_col].to_numpy()).astype(np.float64)
-    enorm = np.sqrt((emat * emat).sum(axis=1))
-
-    def kernel(batches):
-        for pdf in batches:
-            cmat = np.stack(pdf[vec_col].to_numpy()).astype(np.float64)
-            cnorm = np.sqrt((cmat * cmat).sum(axis=1))
-            sims = cmat @ emat.T
-            denom = np.outer(cnorm, enorm)
-            with np.errstate(divide="ignore", invalid="ignore"):
-                sims = sims / denom
-            mx = np.nanmax(np.where(denom > 0, sims, np.nan), axis=1)
-            yield pd.DataFrame({"doc_id": pdf[id_col].values, "_max": mx})
-
-    scored = corpus_emb.select(id_col, vec_col).mapInPandas(
-        kernel, schema="doc_id long, _max double"
-    )
-    return scored.select(
-        "doc_id",
-        (F.round("_max", 4) + F.lit(0.0)).alias("max_cos"),
-    ).select(
-        "doc_id", "max_cos", (F.col("max_cos") >= threshold).alias("contaminated")
-    )

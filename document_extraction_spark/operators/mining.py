@@ -7,10 +7,9 @@ include every hub vector's spurious matches; requiring both directions
 removes them with no threshold to tune.
 
 Distributed shape (scores computed ONCE — structurally, not by cache):
-- one broadcast cross product left x right scored with the repo's standard
-  cosine formulation (operators/similarity.py — rank on the raw double,
-  vec_id tiebreak, round only at the edge: the q_ann_topk-proven
-  exactness recipe);
+- one broadcast cross product left x right scored with the JVM
+  ``similarity.cosine`` Column (rank on the raw double, vec_id tiebreak,
+  round only at the edge);
 - mutuality needs NO self-join: a pair (l, r) is mutual iff the SAME
   scored row has row_number 1 under both partitionings, so the two
   argmax windows chain over one scored child (plan-shape pinned: exactly
@@ -23,8 +22,10 @@ candidates (similarity.py banding recipe — score only colliding buckets;
 both sides cogroup on (band, bucket) so NEITHER side broadcasts). One
 Arrow kernel per bucket emits each row's in-bucket argmax partial, and an
 aggregate combine over the partials gives each side's global argmax; a
-pair is mutual iff the two argmaxes coincide. The verdict equals the
-window filter's over the candidate set, trading candidate recall for the
+pair is mutual iff the two argmaxes coincide. The kernel scores with a
+per-dimension loop that is bit-identical to ``similarity.cosine`` (not the
+BLAS ``similarity._cosine_matrix``), so the verdict equals the window
+filter's over the candidate set, trading candidate recall for the
 quadratic. At bands == n_planes (1 sign bit per band) the candidate set
 converges to all informative pairs and the output equals the exact path —
 test_mining_calibrate pins that equality on the sf0.001 embeddings.
@@ -91,43 +92,6 @@ def _mutual_filter(scored: DataFrame, min_cos: float | None) -> DataFrame:
     return out
 
 
-def _mutual_filter_agg(scored: DataFrame, min_cos: float | None) -> DataFrame:
-    """Aggregate-form mutuality — same verdict as :func:`_mutual_filter`,
-    built for candidate streams too large to window-sort: each side's
-    argmax is ``max(struct(_raw, -other_id))`` (ties on _raw pick the
-    SMALLEST other id, exactly row_number's orderBy(_raw desc, id) —
-    struct max compares fields left to right, and Spark orders NaN above
-    every double in both sorts and max, so the verdict is identical), and
-    a pair is mutual iff the two argmax rows coincide.  Hash aggregation
-    does map-side partial combine, so a |candidates|-row stream collapses
-    to |corpus|-row tables BEFORE any exchange — the two full
-    sort-shuffles of the window form (25M rows each at sf1.0) become two
-    tiny aggregations plus one broadcast-able semi-join.  Duplicate
-    candidate rows (a pair colliding in several bands) carry identical
-    _raw and are absorbed by the max, so no upstream pair-dedup shuffle
-    is needed either.  ``scored`` is materialized once (localCheckpoint —
-    the dedup.py candidates recipe) because both directions aggregate it."""
-    s = scored.localCheckpoint(eager=False)
-    best_l = s.groupBy("left_id").agg(
-        F.max(F.struct(F.col("_raw"), (-F.col("right_id")).alias("_nr"))).alias("m")
-    )
-    best_r = s.groupBy("right_id").agg(
-        F.max(F.struct(F.col("_raw"), (-F.col("left_id")).alias("_nl"))).alias("m")
-    )
-    bl = best_l.select(
-        "left_id",
-        (-F.col("m._nr")).alias("right_id"),
-        F.col("m._raw").alias("_raw"),
-    )
-    br = best_r.select((-F.col("m._nl")).alias("left_id"), "right_id")
-    out = bl.join(br, ["left_id", "right_id"], "left_semi").select(
-        "left_id", "right_id", F.round("_raw", 4).alias("cos")
-    )
-    if min_cos is not None:
-        out = out.where(F.col("cos") >= min_cos)
-    return out
-
-
 def _ieee_totkey(x: np.ndarray) -> np.ndarray:
     """Map a float64 array to int64 keys whose ``<`` order is EXACTLY
     ``java.lang.Double.compare`` — the comparator Spark's double sorts,
@@ -159,21 +123,25 @@ def _bucket_mutual_partials(lb: DataFrame, rb: DataFrame,
     of Arrow traffic at sf1.0 — measured, the dominant cost of the r7
     mapInArrow pair scorer this replaces).
 
-    Arithmetic is the identical IEEE sequence as :func:`similarity.cosine`
-    / ``cosine_pairs_arrow``: per-dimension outer-product accumulation
-    from 0.0 (``dot += L[:,k] x R[:,k]`` — element (i,j)'s add chain is the
-    HOF fold's k-th step for every pair at once), then
+    Arithmetic is the identical IEEE sequence as the JVM
+    :func:`similarity.cosine` Column: per-dimension outer-product
+    accumulation from 0.0 (``dot += L[:,k] x R[:,k]`` — element (i,j)'s add
+    chain is the HOF fold's k-th step for every pair at once), then
     ``dot / (sqrt(na) * sqrt(nb))`` in the same association — raw doubles
-    bit-identical to the pair kernel (pinned in test_dedup_kernels).
+    bit-identical to it (pinned in test_dedup_kernels), which is why this
+    loop is not the faster BLAS ``similarity._cosine_matrix``: the argmax
+    ranks on the raw double, so ``mutual_top1_srp`` must equal
+    ``mutual_top1_pairs`` bit for bit.
 
     Each emitted partial is the bucket's ``max(struct(_raw, -other_id))``
     winner for one (side, id): NaN-high and smallest-other-id tie-break
     replicated exactly by ``argmax`` over :func:`_ieee_totkey` keys with
     ids sorted ascending (first-max wins).  Because that struct-max order
     is total, the global argmax is the max of per-bucket winners, so the
-    downstream combine over these partials returns the verdict of
-    :func:`_mutual_filter_agg` over the full candidate stream — duplicate
-    collisions across bands carry identical raws and are absorbed.
+    downstream combine over these partials returns the verdict of the
+    window filter :func:`_mutual_filter` over the deduplicated candidate
+    pairs — duplicate collisions across bands carry identical raws and are
+    absorbed (pinned in test_mining_calibrate).
 
     Resident memory per bucket group is O(occupancy x dim): the cogroup
     hands the kernel every left and right row of the bucket at once, as
@@ -183,12 +151,13 @@ def _bucket_mutual_partials(lb: DataFrame, rb: DataFrame,
     :func:`mutual_top1_srp` (per-band bits ~ log2(|corpus|)); a hot
     bucket still arrives whole.
 
-    The kernel is ``applyInArrow`` (not pandas): Arrow list columns flatten
-    zero-copy to an (n, dim) matrix (the cosine_pairs_arrow lesson), and a
-    NaN ``_raw`` crosses back as a VALUE — the pandas path would collapse
-    NaN to null (pandas' null sentinel IS NaN), and a null raw sorts
-    SMALLEST in the downstream struct max where Spark ranks NaN LARGEST,
-    flipping verdicts for zero-norm vectors (caught by
+    The kernel is ``applyInArrow`` (not pandas): Arrow list columns are one
+    contiguous values buffer plus offsets and flatten zero-copy to an
+    (n, dim) matrix, where pandas boxes every array cell into its own
+    ndarray; and a NaN ``_raw`` crosses back as a VALUE — the pandas path
+    would collapse NaN to null (pandas' null sentinel IS NaN), and a null
+    raw sorts SMALLEST in the downstream struct max where Spark ranks NaN
+    LARGEST, flipping verdicts for zero-norm vectors (caught by
     test_bucket_partials_match_filter_agg_on_adversarial_pairs)."""
     import pyarrow as pa
 
@@ -283,14 +252,18 @@ def _bucket_mutual_partials(lb: DataFrame, rb: DataFrame,
 
 def _mutual_from_partials(partials: DataFrame,
                           min_cos: float | None) -> DataFrame:
-    """Combine per-bucket argmax partials into the mutual-top-1 verdict —
-    the tail of :func:`_mutual_filter_agg` with the |candidates|-row
-    aggregation input replaced by |L|+|R| rows per bucket: same
-    ``max(struct(_raw, -other))`` argmax per side (max over bucket winners
-    == global max, the order is total), same coincide-semi-join, same
-    round-at-the-edge.  ``partials`` is materialized once (localCheckpoint
-    — both directions consume the cogroup output, and a map-only lineage
-    would re-run the scoring kernel per consumer: the dedup.py recipe)."""
+    """Combine per-bucket argmax partials into the mutual-top-1 verdict:
+    each side's argmax is ``max(struct(_raw, -other))`` over its bucket
+    winners (ties on _raw pick the SMALLEST other id, exactly the window
+    filter's orderBy(_raw desc, id); struct max compares fields left to
+    right and Spark orders NaN above every double in both; max over bucket
+    winners == global max, the order is total), a pair is mutual iff the
+    two argmax rows coincide (a semi-join), and the score is rounded at the
+    edge.  Hash aggregation combines map-side, so the |L|+|R| rows per
+    bucket collapse to |corpus|-row tables before any exchange.
+    ``partials`` is materialized once (localCheckpoint — both directions
+    consume the cogroup output, and a map-only lineage would re-run the
+    scoring kernel per consumer: the dedup.py recipe)."""
     p = partials.localCheckpoint(eager=False)
     best_l = p.where(F.col("_side") == 0).groupBy(
         F.col("id").alias("left_id")
@@ -398,9 +371,8 @@ def mutual_top1_srp(
     # vectors at sf1.0 — this moves ~40 MB), and the mutuality aggregation
     # reads |L|+|R| rows per bucket instead of 25.6M candidates (guide
     # §2.3/§8: decide on light rows, never re-shuffle payloads).  Scoring
-    # arithmetic and argmax tie-breaks are bit-identical to the pair
-    # kernel / HOF cosine (see _bucket_mutual_partials), so the output is
-    # unchanged.
+    # arithmetic and argmax tie-breaks are bit-identical to the HOF cosine
+    # and the window filter (see _bucket_mutual_partials).
     partials = _bucket_mutual_partials(
         banded(left, "left_id", "lvec"), banded(right, "right_id", "rvec")
     )

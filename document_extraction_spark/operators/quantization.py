@@ -25,10 +25,11 @@ exact float ranking is pinned separately in pytest (recall@k), which is the
 right split: the ORACLE proves determinism, the TEST proves quality.
 
 Distributed shape: quantization is map-only (per-vector max-abs — no corpus
-statistics, codes stream out with no extra pass); scoring is the
-brute-force broadcast shape of similarity.brute_force_topk (corpus never
-shuffles; at scale swap the HOF dot for the Arrow matmul kernel exactly as
-similarity.brute_force_topk_arrow does, or bucket with the SRP machinery).
+statistics, codes stream out with no extra pass); scoring broadcasts the
+query codes against the corpus codes, as similarity.brute_force_topk does
+with float vectors (corpus never shuffles), but with BIGINT array-HOF dots:
+the BLAS kernel there sums doubles in its own order, which would break the
+exactness this ranking exists for. At scale, bucket with the SRP machinery.
 """
 
 from __future__ import annotations

@@ -1,13 +1,37 @@
 """Similarity search over an embedding column (``array<float>``).
 
-* :func:`cosine` — pure Column expression (``zip_with`` + ``aggregate``),
-  JVM-side, no Python.
-* :func:`brute_force_topk` — exact baseline: broadcast the (small) query set
-  against the corpus, windowed top-k. The corpus side never shuffles.
+* :func:`brute_force_topk` — exact top-k: the (small) query set is collected
+  to the driver and scored against each corpus Arrow batch by one BLAS
+  matmul. The corpus side never shuffles.
 * :func:`srp_lsh_topk` — the scale path: signed-random-projection LSH.
   Candidates are generated by a bucket join on sign-bit prefixes (corpus
   hashed once, queries hashed the same way), then exactly re-ranked. At
   100 TB this turns an O(Q x N) cross product into Q x (bucket size).
+* :func:`ivf_topk` / :func:`srp_near_dup_pairs` /
+  :func:`embedding_near_dup_pairs` — IVF ANN and blocked near-dup pairs.
+
+The engine has three cosines, one per plan shape:
+
+* :func:`cosine` — a JVM Column (``zip_with`` + ``aggregate``, double math)
+  for PAIR STREAMS (bucket joins, blocked self-joins, re-ranks): the pairs
+  already sit in a JVM row, so scoring them there moves no vector across
+  the Python boundary.  It is interpreted outside whole-stage codegen,
+  ~10 us/pair (BENCH/DECON_SRP.json), and under ANSI a zero-norm vector
+  raises DIVIDE_BY_ZERO.
+* :func:`_cosine_matrix` — one BLAS matmul per Arrow batch for the two
+  BROADCAST kernels (:func:`brute_force_topk`,
+  ``decontaminate.semantic_decontaminate``), whose small side is a dense
+  matrix on the driver; NaN where a norm is 0, so zero vectors are skipped.
+  It sums in BLAS order, so raw doubles differ from :func:`cosine` in the
+  last ulps; the outputs round to 4 decimals before anyone compares them.
+  A bit-exact per-dimension loop measured 6.5x slower (2.40 s vs 0.37 s at
+  10000 x 1176, 64-dim, one thread; 58 ms vs 9 ms at the sf0.1
+  decontamination shape of 1882 x 118; a re-run measured 9-30x,
+  BENCH/COSINE_FOLD.json) with 0 mismatches after ``round(., 4)`` on 4
+  shapes.
+* ``mining._bucket_mutual_partials`` — a per-dimension loop, the same IEEE
+  operation sequence as :func:`cosine`, because ``mutual_top1_srp`` ranks on
+  the RAW double and must equal ``mutual_top1_pairs`` bit for bit.
 
 The random hyperplanes are derived from a seeded NumPy generator and inlined
 as literal arrays — deterministic, no state on executors.
@@ -19,7 +43,9 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
+
+# Most rows a broadcast kernel collects to the driver (queries, eval vectors).
+MAX_BROADCAST_ROWS = 100_000
 
 
 def _dot(a, b):
@@ -31,109 +57,40 @@ def _dot(a, b):
 
 
 def cosine(a, b):
-    """Cosine similarity between two array<float> columns (double math)."""
+    """Cosine similarity between two array<float> columns (double math):
+    per-element double products folded left to right from 0.0, then
+    ``dot / (sqrt(na) * sqrt(nb))``."""
     return _dot(a, b) / (F.sqrt(_dot(a, a)) * F.sqrt(_dot(b, b)))
 
 
-def cosine_pairs_arrow(pairs: DataFrame, vec_a: str, vec_b: str,
-                       out: str = "_raw") -> DataFrame:
-    """Score a (…, vec_a, vec_b) pair stream with the bit-exact cosine via
-    ``mapInArrow``: every non-vector column passes through untouched and a
-    double ``out`` column replaces the two vectors.
-
-    Why mapInArrow and not the :func:`cosine_arrow` pandas_udf (r7
-    measurement at sf1.0, 25.6M candidate rows): the pandas path boxes
-    every array cell into its own ndarray object (51M allocations); Arrow
-    list columns are one contiguous values buffer + offsets, so the kernel
-    reshapes them ZERO-COPY into an (n, dim) matrix (guide §4.2) — the
-    scoring stage dropped ~40%.  (A flat element_at chain was also tried
-    and measured 7x WORSE than the HOF: a 192-leaf expression tree knocks
-    the whole join stage out of codegen.)  Arithmetic is the identical
-    IEEE sequence as :func:`cosine`: per-element double products
-    accumulated left-to-right from 0.0, then dot/(sqrt(na)*sqrt(nb)).
-    Assumes rectangular vectors (callers' _checked_dim banding enforces
-    it); raises on ragged input."""
-    import pyarrow as pa
-
-    keep = [f for f in pairs.schema.fields if f.name not in (vec_a, vec_b)]
-    schema = T.StructType(keep + [T.StructField(out, T.DoubleType())])
-    names = [f.name for f in keep] + [out]
-
-    def kernel(batches):
-        for rb in batches:
-            n = rb.num_rows
-            if n == 0:
-                continue
-            va = rb.column(rb.schema.get_field_index(vec_a))
-            vb = rb.column(rb.schema.get_field_index(vec_b))
-            A = np.asarray(va.flatten()).astype(np.float64, copy=False)
-            B = np.asarray(vb.flatten()).astype(np.float64, copy=False)
-            if A.size % n or B.size != A.size:
-                raise ValueError(
-                    f"cosine_pairs_arrow needs rectangular vectors; got "
-                    f"{A.size}/{B.size} values for {n} rows"
-                )
-            A = A.reshape(n, -1)
-            B = B.reshape(n, -1)
-            dot = np.zeros(n)
-            na = np.zeros(n)
-            nb = np.zeros(n)
-            for k in range(A.shape[1]):
-                ak = A[:, k]
-                bk = B[:, k]
-                dot += ak * bk
-                na += ak * ak
-                nb += bk * bk
-            with np.errstate(divide="ignore", invalid="ignore"):
-                raw = dot / (np.sqrt(na) * np.sqrt(nb))
-            yield pa.RecordBatch.from_arrays(
-                [rb.column(rb.schema.get_field_index(f.name)) for f in keep]
-                + [pa.array(raw, pa.float64())],
-                names=names,
-            )
-
-    return pairs.mapInArrow(kernel, schema=schema)
+def _cosine_matrix(a: np.ndarray, b: np.ndarray) -> np.ndarray:
+    """(len(a), len(b)) float64 cosines as ONE BLAS matmul, NaN where either
+    row has norm 0 (the :func:`cosine` Column raises DIVIDE_BY_ZERO there
+    under ANSI; a kernel skips NaN instead, so a zero vector is never
+    ranked or flagged).  The matmul sums in its own order, so values agree
+    with :func:`cosine` up to the last ulps: compare them rounded."""
+    na = np.sqrt((a * a).sum(axis=1))
+    nb = np.sqrt((b * b).sum(axis=1))
+    denom = np.outer(na, nb)
+    with np.errstate(divide="ignore", invalid="ignore"):
+        return np.where(denom > 0, (a @ b.T) / denom, np.nan)
 
 
-def cosine_arrow(a, b):
-    """Arrow-kernel cosine over two ``array<float>`` columns, BIT-EXACT to
-    :func:`cosine`: per pair it performs the identical IEEE-754 operation
-    sequence — each element cast to double, products accumulated strictly
-    left-to-right from a 0.0 seed (the NumPy loop runs over the DIMENSION,
-    so every vectorized ``acc += a_k * b_k`` step is the HOF aggregate's
-    k-th sequential add for all rows at once), then
-    ``dot / (sqrt(na) * sqrt(nb))`` in the same association.  Same floats
-    in, same double out, so round(·, 4) edges and rank-on-raw windows are
-    unchanged (pinned by test_mining_calibrate's SRP==exact equality).
+def _collect_broadcast_side(df: DataFrame, what: str, instead: str) -> pd.DataFrame:
+    """Collect the small side of a broadcast kernel to the driver in ONE
+    job: take ``MAX_BROADCAST_ROWS + 1`` rows and fail on overflow, instead
+    of a count() job followed by toPandas()."""
+    pdf = df.limit(MAX_BROADCAST_ROWS + 1).toPandas()
+    if len(pdf) > MAX_BROADCAST_ROWS:
+        raise ValueError(
+            f"more than {MAX_BROADCAST_ROWS} {what} to hold on the driver; "
+            f"use {instead} instead"
+        )
+    return pdf
 
-    Why it exists: the HOF ``aggregate(zip_with(...))`` chain is interpreted
-    expression evaluation outside whole-stage codegen (~10 us/pair,
-    BENCH/DECON_SRP.json); this kernel moves each Arrow batch through three
-    fused NumPy passes (guide §4.2) — the per-pair scoring cost of the
-    candidate-heavy mining/similarity paths drops by orders of magnitude.
-    Assumes rectangular input (every array the same length), which the
-    callers' ``_checked_dim`` banding already enforces."""
-    from pyspark.sql.functions import pandas_udf
 
-    @pandas_udf("double")
-    def _cos(va: pd.Series, vb: pd.Series) -> pd.Series:
-        if len(va) == 0:
-            return pd.Series([], dtype="float64")
-        A = np.stack(va.to_numpy()).astype(np.float64)
-        B = np.stack(vb.to_numpy()).astype(np.float64)
-        n = A.shape[0]
-        dot = np.zeros(n)
-        na = np.zeros(n)
-        nb = np.zeros(n)
-        for k in range(A.shape[1]):
-            ak = A[:, k]
-            bk = B[:, k]
-            dot += ak * bk
-            na += ak * ak
-            nb += bk * bk
-        return pd.Series(dot / (np.sqrt(na) * np.sqrt(nb)))
-
-    return _cos(a, b)
+def _vectors(pdf: pd.DataFrame, vec_col: str) -> np.ndarray:
+    return np.stack(pdf[vec_col].to_numpy()).astype(np.float64)
 
 
 def brute_force_topk(
@@ -143,76 +100,28 @@ def brute_force_topk(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
 ) -> DataFrame:
-    """Exact top-k: broadcast queries x corpus, cosine, window rank.
+    """Exact top-k: (query_id, vec_id, cos, rank), self-matches excluded.
+    A zero-norm vector has no cosine: a zero-norm query gets no rows and a
+    zero-norm corpus row is never ranked.
 
-    Output: (query_id, vec_id, cos, rank). Self-matches excluded."""
-    q = queries.select(
-        F.col(id_col).alias("query_id"), F.col(vec_col).alias("qvec")
+    The query set (at most ``MAX_BROADCAST_ROWS``) rides the mapInPandas
+    closure as a float64 matrix, and each corpus Arrow batch scores its
+    |batch| x |queries| cosines with :func:`_cosine_matrix`.  Per batch only
+    the per-query top-k SURVIVORS are emitted (every element tied with the
+    batch's k-th value included, so the global window's vec_id tie-break
+    sees the same candidate set the full cross product would); the final
+    exact window rank runs over ~batches x queries x k rows.  The corpus
+    never shuffles; nothing but candidates moves."""
+    q_pd = _collect_broadcast_side(
+        queries.select(id_col, vec_col), "queries", "srp_lsh_topk / ivf_topk"
     )
-    c = corpus.select(F.col(id_col).alias("vec_id"), F.col(vec_col).alias("cvec"))
-    scored = (
-        c.crossJoin(F.broadcast(q))
-        .filter(F.col("vec_id") != F.col("query_id"))
-        # two-step projection: the O(dim) cosine evaluates once per pair
-        # (Catalyst does not CSE a repeated aggregate subtree — see
-        # operators/dedup.py plan-shape note)
-        .select(
-            "query_id",
-            "vec_id",
-            cosine(F.col("qvec"), F.col("cvec")).alias("_raw"),
-        )
-        .select("query_id", "vec_id", F.round("_raw", 4).alias("cos"), "_raw")
-    )
-    w = Window.partitionBy("query_id").orderBy(F.col("_raw").desc(), F.col("vec_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .drop("_raw")
-    )
-
-
-def brute_force_topk_arrow(
-    corpus: DataFrame,
-    queries: DataFrame,
-    k: int = 10,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    max_queries: int = 100_000,
-) -> DataFrame:
-    """Exact top-k through an Arrow matmul kernel — same output contract as
-    :func:`brute_force_topk` (pinned row-equal in tests/test_similarity.py),
-    ~100x its throughput: the array-HOF cosine runs interpreted outside
-    whole-stage codegen at ~10 us/pair (BENCH/DECON_SRP.json), while this
-    kernel computes each corpus Arrow batch's |batch| x |queries| cosines as
-    ONE BLAS matmul with the query matrix riding the mapInPandas closure.
-
-    Per batch only the per-query top-k SURVIVORS are emitted (every element
-    tied with the batch's k-th value included, so the global window's
-    vec_id tie-break sees the same candidate set the full cross product
-    would); the final exact window rank runs over ~batches x queries x k
-    rows — negligible. Corpus never shuffles; nothing but candidates moves."""
-    import numpy as np
-    import pandas as pd
-
-    q_pd = queries.select(id_col, vec_col).limit(max_queries + 1).toPandas()
-    if len(q_pd) > max_queries:
-        raise ValueError(
-            f"brute_force_topk_arrow holds the query set in memory: more than "
-            f"{max_queries} queries. Use srp_lsh_topk / ivf_topk instead."
-        )
     qids = q_pd[id_col].to_numpy()
-    qmat = np.stack(q_pd[vec_col].to_numpy()).astype(np.float64)
-    qnorm = np.sqrt((qmat * qmat).sum(axis=1))
+    qmat = _vectors(q_pd, vec_col)
 
     def kernel(batches):
         for pdf in batches:
             cids = pdf[id_col].to_numpy()
-            cmat = np.stack(pdf[vec_col].to_numpy()).astype(np.float64)
-            cnorm = np.sqrt((cmat * cmat).sum(axis=1))
-            sims = cmat @ qmat.T
-            denom = np.outer(cnorm, qnorm)
-            with np.errstate(divide="ignore", invalid="ignore"):
-                sims = np.where(denom > 0, sims / denom, np.nan)
+            sims = _cosine_matrix(_vectors(pdf, vec_col), qmat)
             sims[cids.reshape(-1, 1) == qids.reshape(1, -1)] = np.nan  # self
             out_q, out_v, out_s = [], [], []
             for j in range(sims.shape[1]):
@@ -412,20 +321,12 @@ def ivf_topk(
 
     # per-query probe lists: n_probe nearest centroids, computed driver-side
     # on the (small, broadcast) query set. Guarded: this collect is sized for
-    # ANN query workloads (top-k per query), not corpus-vs-corpus joins —
-    # use embedding_near_dup_pairs / lsh bucketing for all-pairs workloads.
-    # ONE driver job for the query set: collect max_queries+1 rows and fail
-    # on overflow, instead of a separate count() job followed by toPandas()
-    max_queries = 100_000
-    q_pd = (
-        queries.select(id_col, vec_col).limit(max_queries + 1).toPandas()
+    # ANN query workloads (top-k per query), not corpus-vs-corpus joins.
+    q_pd = _collect_broadcast_side(
+        queries.select(id_col, vec_col),
+        "queries",
+        "srp_lsh_topk / embedding_near_dup_pairs for corpus-scale workloads",
     )
-    if len(q_pd) > max_queries:
-        raise ValueError(
-            f"ivf_topk collects the query set to the driver: more than "
-            f"{max_queries} queries. Split the query set or use srp_lsh_topk "
-            "/ embedding_near_dup_pairs for corpus-scale workloads."
-        )
     qmat = np.stack(q_pd[vec_col].to_numpy())
     qmat = qmat / np.maximum(np.linalg.norm(qmat, axis=1, keepdims=True), 1e-12)
     probes = (qmat @ centroids.T).argsort(axis=1)[:, ::-1][:, :n_probe]

@@ -108,26 +108,6 @@ def _gram_occurrences(base: DataFrame, width: int) -> DataFrame:
     return base.select("doc_id", "_tk").mapInPandas(kernel, schema=schema)
 
 
-def _gram_occurrences_hof(base: DataFrame, width: int) -> DataFrame:
-    """Pure-Column HOF twin of :func:`_gram_occurrences` (pre-r7 path) —
-    the expression tree the DuckDB oracle mirrors; kernel equality pinned
-    in tests/test_dedup_kernels.py."""
-    tk = F.col("_tk")
-    return (
-        base.filter(F.size(tk) >= width)
-        .select(
-            "doc_id",
-            tk,
-            F.explode(F.sequence(F.lit(1), F.size(tk) - (width - 1))).alias("p"),
-        )
-        .select(
-            "doc_id",
-            "p",
-            F.md5(F.array_join(F.slice(tk, F.col("p"), width), " ")).alias("ghash"),
-        )
-    )
-
-
 def duplicate_spans(df: DataFrame, id_col: str = "doc_id", text_col: str = "text",
                     width: int = SPAN_WIDTH,
                     min_occurrences: int = MIN_OCCURRENCES,

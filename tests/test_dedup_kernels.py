@@ -1,8 +1,9 @@
 """r7 optimization round: the Arrow/numpy kernels that replaced interpreted
-HOF expression chains are pinned ROW-EQUAL to their pure-Column twins (the
-q_ann_topk two-impl recipe, VERDICT r6 ask #1).  Every pair runs over the
-sf0.001 tables plus adversarial edge rows (NULL text, trim-empty text,
-sub-width docs, Unicode whitespace where Java \\s and Python \\s diverge).
+HOF expression chains are pinned ROW-EQUAL to their pure-Column twins
+(tests/dedup_hof.py), the mining kernel BIT-EQUAL to the HOF cosine.  Every
+pair runs over the sf0.001 tables plus adversarial edge rows (NULL text,
+trim-empty text, sub-width docs, Unicode whitespace where Java \\s and
+Python \\s diverge).
 """
 
 from __future__ import annotations
@@ -54,82 +55,54 @@ def test_shingles_kernel_equals_hof(docs):
 
 
 def test_doc_grams_kernel_equals_hof(docs):
+    from dedup_hof import doc_grams_hof
     from document_extraction_spark.operators import decontaminate as DC
 
     for n in (2, 3):
         assert _rows(DC._doc_grams(docs, n, "doc_id", "text")) == _rows(
-            DC._doc_grams_hof(docs, n, "doc_id", "text")
+            doc_grams_hof(docs, n, "doc_id", "text")
         )
 
 
 def test_bpe_encode_kernel_equals_expr(docs):
-    from document_extraction_spark.operators.bpe import (
-        bpe_encode,
-        bpe_encode_expr,
-        bpe_train,
-    )
+    from dedup_hof import bpe_encode_expr
+    from document_extraction_spark.operators.bpe import bpe_encode, bpe_train
 
     merges, _ = bpe_train(docs, rounds=4)
     assert merges
     assert _rows(bpe_encode(docs, merges)) == _rows(bpe_encode_expr(docs, merges))
 
 
-def test_cosine_arrow_bit_exact(spark, testdata_dir):
-    """cosine_arrow must match the HOF cosine BIT-FOR-BIT (not just to
-    rounding): the mining windows rank on the raw double."""
-    from document_extraction_spark.operators.similarity import cosine, cosine_arrow
+def test_bucket_partials_raw_bit_exact_to_hof_cosine(spark, testdata_dir):
+    """The mining bucket kernel's per-dimension loop must match the HOF
+    cosine BIT-FOR-BIT (not just to rounding): the mutual argmax ranks on
+    the raw double.  One bucket per (i, i+1) pair, so each left partial
+    carries exactly that pair's raw."""
+    from document_extraction_spark.operators.mining import _bucket_mutual_partials
+    from document_extraction_spark.operators.similarity import cosine
 
     emb = spark.read.parquet(f"{testdata_dir}/sf0.001/embeddings.parquet")
-    pairs = (
-        emb.select(F.col("vec_id").alias("ia"), F.col("embedding").alias("va"))
-        .join(
-            emb.select(
-                (F.col("vec_id") + 1).alias("ib"), F.col("embedding").alias("vb")
-            ),
-            F.col("ia") == F.col("ib"),
-        )
+    lb = emb.select(
+        F.col("vec_id").alias("left_id"),
+        F.col("embedding").alias("lvec"),
+        F.col("vec_id").cast("string").alias("bucket"),
     )
-    got = pairs.select(
-        "ia",
-        cosine(F.col("va"), F.col("vb")).alias("hof"),
-        cosine_arrow(F.col("va"), F.col("vb")).alias("arrow"),
-    ).collect()
-    assert got
-    for r in got:
-        assert r["hof"] == r["arrow"], (r["ia"], r["hof"], r["arrow"])
-
-
-def test_cosine_pairs_arrow_bit_exact(spark, testdata_dir):
-    """The mapInArrow pair scorer must match the HOF cosine BIT-FOR-BIT
-    (the mining argmax aggregates compare the raw double)."""
-    from document_extraction_spark.operators.similarity import (
-        cosine,
-        cosine_pairs_arrow,
-    )
-
-    emb = spark.read.parquet(f"{testdata_dir}/sf0.001/embeddings.parquet")
-    pairs = (
-        emb.select(F.col("vec_id").alias("ia"), F.col("embedding").alias("va"))
-        .join(
-            emb.select(
-                (F.col("vec_id") + 1).alias("ib"), F.col("embedding").alias("vb")
-            ),
-            F.col("ia") == F.col("ib"),
-        )
+    rb = emb.select(
+        F.col("vec_id").alias("right_id"),
+        F.col("embedding").alias("rvec"),
+        (F.col("vec_id") - 1).cast("string").alias("bucket"),
     )
     hof = {
-        r["ia"]: r["c"]
-        for r in pairs.select(
-            "ia", cosine(F.col("va"), F.col("vb")).alias("c")
-        ).collect()
+        r["left_id"]: r["c"]
+        for r in lb.join(rb, "bucket")
+        .select("left_id", cosine(F.col("lvec"), F.col("rvec")).alias("c"))
+        .collect()
     }
-    arrow = {
-        r["ia"]: r["_raw"]
-        for r in cosine_pairs_arrow(
-            pairs.select("ia", "va", "vb"), "va", "vb"
-        ).collect()
+    kernel = {
+        r["id"]: r["_raw"]
+        for r in _bucket_mutual_partials(lb, rb).where("_side = 0").collect()
     }
-    assert hof and arrow == hof
+    assert hof and kernel == hof
 
 
 def test_dsir_kernel_counts_equal_hof(docs):
@@ -160,12 +133,13 @@ def test_dsir_kernel_counts_equal_hof(docs):
 
 
 def test_span_gram_occurrences_kernel_equals_hof(docs):
+    from dedup_hof import gram_occurrences_hof
     from document_extraction_spark.operators import span_dedup as SPD
     from document_extraction_spark.operators.dedup import _tokens_df
 
     base = _tokens_df(docs, "doc_id", "text")
     assert _rows(SPD._gram_occurrences(base, SPD.SPAN_WIDTH)) == _rows(
-        SPD._gram_occurrences_hof(base, SPD.SPAN_WIDTH)
+        gram_occurrences_hof(base, SPD.SPAN_WIDTH)
     )
 
 

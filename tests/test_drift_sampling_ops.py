@@ -189,30 +189,63 @@ def test_semantic_decontaminate_srp_prefilter_flags_identical(spark):
 
 
 def test_semantic_decontaminate_arrow_equals_hof(spark, testdata_dir):
-    """The matmul (mapInPandas) exact kernel must reproduce the HOF
-    broadcast-NLJ path row-for-row — same max_cos at the 4-decimal rounding
-    edge, same flags — on the real embeddings fixture at the oracle query's
-    threshold."""
+    """The exact matmul (mapInPandas) kernel must reproduce an inline
+    oracle — the broadcast nested-loop join scored by the JVM cosine
+    Column — row for row: same max_cos at the 4-decimal rounding edge, same
+    flags, on the real embeddings fixture at the oracle query's threshold."""
     from pyspark.sql import functions as F
 
     from document_extraction_spark.operators.decontaminate import (
         semantic_decontaminate,
-        semantic_decontaminate_arrow,
     )
+    from document_extraction_spark.operators.similarity import cosine
 
     emb = spark.read.parquet(f"{testdata_dir}/sf0.01/embeddings.parquet")
     evalset = emb.filter(F.col("vec_id") % 17 == 0)
     corpus = emb.filter(F.col("vec_id") % 17 != 0)
+    max_cos = F.round(F.max(cosine(F.col("cv"), F.col("ev"))), 4) + F.lit(0.0)
     hof = sorted(
-        map(tuple, semantic_decontaminate(corpus, evalset, threshold=0.5).collect())
-    )
-    arrow = sorted(
         map(
             tuple,
-            semantic_decontaminate_arrow(corpus, evalset, threshold=0.5).collect(),
+            corpus.select(
+                F.col("vec_id").alias("doc_id"), F.col("embedding").alias("cv")
+            )
+            .join(F.broadcast(evalset.select(F.col("embedding").alias("ev"))))
+            .groupBy("doc_id")
+            .agg(max_cos.alias("max_cos"))
+            .select(
+                "doc_id", "max_cos", (F.col("max_cos") >= 0.5).alias("contaminated")
+            )
+            .collect(),
         )
     )
+    arrow = sorted(
+        map(tuple, semantic_decontaminate(corpus, evalset, threshold=0.5).collect())
+    )
     assert hof == arrow and len(hof) > 0
+
+
+def test_semantic_decontaminate_zero_norm_rows(spark):
+    """A zero-norm vector has no cosine: a zero-norm corpus row reports
+    max_cos NULL and contaminated FALSE (never NULL), and a zero-norm eval
+    row among non-zero ones is skipped, not allowed to blank the row."""
+    from document_extraction_spark.operators.decontaminate import (
+        semantic_decontaminate,
+    )
+
+    schema = "vec_id long, embedding array<float>"
+    corpus = spark.createDataFrame(
+        [(0, [0.0, 0.0]), (1, [1.0, 0.0]), (2, [0.0, 1.0])], schema
+    )
+    for evals in ([(100, [1.0, 0.1])],
+                  [(100, [1.0, 0.1]), (101, [0.0, 0.0]), (102, [-1.0, 0.0])]):
+        got = {
+            r["doc_id"]: (r["max_cos"], r["contaminated"])
+            for r in semantic_decontaminate(
+                corpus, spark.createDataFrame(evals, schema), threshold=0.9
+            ).collect()
+        }
+        assert got == {0: (None, False), 1: (0.995, True), 2: (0.0995, False)}
 
 
 def test_semantic_decontaminate_prefilter_validation(spark):

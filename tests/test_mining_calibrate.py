@@ -121,18 +121,20 @@ def test_srp_hub_property_holds(spark):
 
 
 def test_bucket_partials_match_filter_agg_on_adversarial_pairs(spark):
-    """r7 kernel pin: the cogrouped per-bucket argmax partials + combine
-    (the path mutual_top1_srp now runs) must return the verdict of the
-    aggregate mutuality filter over the SAME candidate pairs — including
-    the nasty cases: a zero vector (NaN cosine — Spark's struct max ranks
-    NaN above everything), duplicate right vectors (raw ties break to the
-    SMALLEST other id), and a pair colliding in two bands (absorbed)."""
+    """The cogrouped per-bucket argmax partials + combine (the path
+    mutual_top1_srp runs) must return the verdict of the window mutuality
+    filter over the SAME candidate pairs — including the nasty cases: a
+    zero vector (NaN cosine — Spark ranks NaN above every double in both
+    the window sort and the struct max), duplicate right vectors (raw ties
+    break to the SMALLEST other id), and a pair colliding in two bands
+    (absorbed)."""
+    import numpy as np
+
     from document_extraction_spark.operators.mining import (
         _bucket_mutual_partials,
-        _mutual_filter_agg,
+        _mutual_filter,
         _mutual_from_partials,
     )
-    from document_extraction_spark.operators.similarity import cosine_pairs_arrow
 
     # (id, vec, bucket): bucket b0 holds a zero left vector and duplicate
     # rights; pair (4, 14) collides in BOTH b1 and b2.
@@ -159,12 +161,23 @@ def test_bucket_partials_match_filter_agg_on_adversarial_pairs(spark):
 
     got = rows(_mutual_from_partials(_bucket_mutual_partials(lb, rb), None))
 
-    # reference scoring via the r7 pair-stream kernel (numpy NaN on zero
-    # norms — the HOF cosine would raise under ANSI division-by-zero)
-    scored = cosine_pairs_arrow(
-        lb.join(rb, "bucket").select("left_id", "right_id", "lvec", "rvec"),
-        "lvec", "rvec")
-    want = rows(_mutual_filter_agg(scored, None))
+    # reference scoring in numpy: the HOF cosine's per-dimension fold, NaN
+    # on zero norms (the HOF itself raises under ANSI division-by-zero)
+    cand = lb.join(rb, "bucket").select("left_id", "right_id", "lvec", "rvec").collect()
+    L = np.array([r["lvec"] for r in cand], np.float64)
+    R = np.array([r["rvec"] for r in cand], np.float64)
+    dot, na, nb = np.zeros(len(cand)), np.zeros(len(cand)), np.zeros(len(cand))
+    for k in range(L.shape[1]):
+        dot += L[:, k] * R[:, k]
+        na += L[:, k] * L[:, k]
+        nb += R[:, k] * R[:, k]
+    with np.errstate(divide="ignore", invalid="ignore"):
+        raw = dot / (np.sqrt(na) * np.sqrt(nb))
+    scored = spark.createDataFrame(
+        [(r["left_id"], r["right_id"], float(x)) for r, x in zip(cand, raw)],
+        "left_id long, right_id long, _raw double",
+    ).withColumn("cos", F.round("_raw", 4))
+    want = rows(_mutual_filter(scored.dropDuplicates(["left_id", "right_id"]), None))
 
     assert got == want and len(want) > 0
     # kernel tie-break: left 2's duplicate-raw tie (rights 10 == 12) must

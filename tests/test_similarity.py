@@ -1,7 +1,10 @@
 from __future__ import annotations
 
+import warnings
+
 import numpy as np
 import pytest
+from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from document_extraction_spark.operators import similarity as SIM
@@ -27,21 +30,80 @@ def test_brute_force_topk_exact(spark, emb):
     assert all(r["vec_id"] != 0 for r in out)  # self excluded
 
 
+def _hof_topk(corpus, queries, k):
+    """Inline oracle: the broadcast cross product scored by the JVM cosine
+    Column, ranked by a window on the raw double."""
+    q = queries.select(
+        F.col("vec_id").alias("query_id"), F.col("embedding").alias("qvec")
+    )
+    c = corpus.select("vec_id", F.col("embedding").alias("cvec"))
+    raw = SIM.cosine(F.col("qvec"), F.col("cvec")).alias("_raw")
+    scored = (
+        c.crossJoin(F.broadcast(q))
+        .filter(F.col("vec_id") != F.col("query_id"))
+        .select("query_id", "vec_id", raw)
+    )
+    w = Window.partitionBy("query_id").orderBy(F.col("_raw").desc(), F.col("vec_id"))
+    return (
+        scored.select("query_id", "vec_id", F.round("_raw", 4).alias("cos"), "_raw")
+        .withColumn("rank", F.row_number().over(w))
+        .filter(F.col("rank") <= k)
+        .drop("_raw")
+    )
+
+
 def test_brute_force_arrow_equals_hof(spark, emb, testdata_dir):
-    """The Arrow matmul top-k must reproduce the HOF path row-for-row —
-    ranks, 4-decimal cosines, tie-breaks — on the synthetic fixture AND the
-    real embeddings table (multi-query, multi-partition)."""
-    a = sorted(map(tuple, SIM.brute_force_topk(
-        emb, emb.filter(F.col("vec_id") < 3), k=5).collect()))
-    b = sorted(map(tuple, SIM.brute_force_topk_arrow(
-        emb, emb.filter(F.col("vec_id") < 3), k=5).collect()))
+    """The Arrow/BLAS top-k must reproduce the HOF-cosine oracle row for
+    row — ranks, 4-decimal cosines, tie-breaks — on the synthetic fixture
+    AND the real embeddings table (multi-query, multi-partition)."""
+    q = emb.filter(F.col("vec_id") < 3)
+    a = sorted(map(tuple, _hof_topk(emb, q, k=5).collect()))
+    b = sorted(map(tuple, SIM.brute_force_topk(emb, q, k=5).collect()))
     assert a == b and len(a) == 15
     real = spark.read.parquet(f"{testdata_dir}/sf0.01/embeddings.parquet")
     q = real.filter(F.col("vec_id") < 5)
-    a2 = sorted(map(tuple, SIM.brute_force_topk(real, q, k=10).collect()))
-    b2 = sorted(map(tuple,
-                    SIM.brute_force_topk_arrow(real.repartition(7), q, k=10).collect()))
+    a2 = sorted(map(tuple, _hof_topk(real, q, k=10).collect()))
+    b2 = sorted(
+        map(tuple, SIM.brute_force_topk(real.repartition(7), q, k=10).collect())
+    )
     assert a2 == b2 and len(a2) == 50
+
+
+def test_brute_force_topk_skips_zero_norm_vectors(spark):
+    """A zero-norm vector has no cosine (the HOF raises DIVIDE_BY_ZERO under
+    ANSI): a zero-norm query gets no rows and a zero-norm corpus row is
+    never ranked — and nothing raises."""
+    df = spark.createDataFrame(
+        [(0, [0.0, 0.0]), (1, [1.0, 0.0]), (2, [0.0, 1.0]), (3, [1.0, 1.0])],
+        "vec_id long, embedding array<float>",
+    )
+    out = SIM.brute_force_topk(df, df.filter(F.col("vec_id") < 2), k=5).collect()
+    assert sorted((r["query_id"], r["vec_id"], r["rank"]) for r in out) == [
+        (1, 2, 2), (1, 3, 1)
+    ]
+    with warnings.catch_warnings():
+        warnings.simplefilter("error")
+        m = SIM._cosine_matrix(np.array([[0.0, 0.0], [1.0, 0.0]]),
+                               np.array([[1.0, 0.0], [0.0, 0.0]]))
+    assert np.isnan(m[0]).all() and np.isnan(m[:, 1]).all() and m[1, 0] == 1.0
+
+
+def test_broadcast_side_collect_is_guarded(spark, emb, monkeypatch):
+    """Every kernel that holds its small side on the driver refuses more
+    than MAX_BROADCAST_ROWS rows there, before running any scoring job."""
+    from document_extraction_spark.operators.decontaminate import (
+        semantic_decontaminate,
+    )
+
+    monkeypatch.setattr(SIM, "MAX_BROADCAST_ROWS", 3)
+    four = emb.filter(F.col("vec_id") < 4)
+    with pytest.raises(ValueError, match="more than 3 queries"):
+        SIM.brute_force_topk(emb, four, k=5)
+    with pytest.raises(ValueError, match="more than 3 queries"):
+        SIM.ivf_topk(emb, four, k=5, n_lists=4, sample_n=40)
+    with pytest.raises(ValueError, match="more than 3 eval rows"):
+        semantic_decontaminate(emb, four)
+    SIM.brute_force_topk(emb, emb.filter(F.col("vec_id") < 3), k=5)  # 3 is fine
 
 
 def test_srp_lsh_subset_of_exact_ranking(spark, emb):
