@@ -192,13 +192,6 @@ def _paragraph_offsets(text: str) -> tuple[list[int], list[int]]:
     return starts, ends
 
 
-def extract_map_in_pandas(batches: Iterable[pd.DataFrame]) -> Iterable[pd.DataFrame]:
-    """The ``mapInPandas`` entry point (bound to the output schema in
-    plans/extract_pipeline.py)."""
-    for pdf in batches:
-        yield extract_batch_pdf(pdf)
-
-
 def make_extract_kernel(max_chars: int | None):
     """Kernel factory carrying the oversized-payload policy to executors."""
 

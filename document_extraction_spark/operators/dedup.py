@@ -12,7 +12,11 @@ Scale design (100 TB corpus):
   the one exchange), then a verify pass over each sorted bucket run (one
   run resident, exact Jaccard counts for its pairs, quadratic in bucket
   size). The unfused minhash -> LSH join -> verify operators stay as its
-  equality oracle.
+  equality oracle. The bucket format ``"{band}:{md5 of the band's
+  components joined by '|'}"`` has two owners: :func:`minhash_band_buckets`
+  builds it as a Column for :func:`lsh_candidate_pairs` and the
+  incremental_dedup index, and :func:`_band_keys` builds it per row in the
+  fused kernel; a test pins the two equal.
 * **SimHash**: 32-bit signature from per-token hash bit votes — also
   array-based, map-only.
 * **n-gram Jaccard**: exact verification of candidate pairs via shingle
@@ -108,13 +112,27 @@ def _py_minhash(sh: list[str], k: int, memo: dict[str, bytes]) -> list[str]:
 
 
 def _band_keys(sig: list[str], bands: int) -> list[str]:
-    """Per band, md5 of its rows joined by '|' — the ``band{b}`` column of
-    :func:`lsh_candidate_pairs` (bucket ``f"{b}:{key}"``)."""
+    """Per band, md5 of its rows joined by '|' — the per-row twin of
+    :func:`minhash_band_buckets` (bucket ``f"{b}:{key}"``)."""
     r = len(sig) // bands
     return [
         hashlib.md5("|".join(sig[b * r : (b + 1) * r]).encode()).hexdigest()
         for b in range(bands)
     ]
+
+
+def minhash_band_buckets(k: int = MINHASH_K, bands: int = LSH_BANDS):
+    """array<string> Column of the LSH band buckets over ``h0..h{k-1}``:
+    ``"{b}:{md5 of band b's k//bands components joined by '|'}"``.  The
+    one Column owner of the MinHash bucket format; :func:`_band_keys` is
+    its per-row twin (pinned equal in tests/test_dedup.py)."""
+    r = k // bands
+    return F.array(*[
+        F.concat_ws(":", F.lit(str(b)), F.md5(F.concat_ws(
+            "|", *[F.col(f"h{b * r + i}") for i in range(r)]
+        )))
+        for b in range(bands)
+    ])
 
 
 def exact_dedup(df: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
@@ -226,24 +244,13 @@ def lsh_candidate_pairs(
     worst case from quadratic-in-hottest-bucket to cap^2 * n_buckets.
     Dropped buckets lose recall only for pairs whose OTHER bands also
     overflow (AQE skew-join still splits merely-warm buckets)."""
-    rows_per_band = k // bands
-    band_cols = [
-        F.md5(
-            F.concat_ws("|", *[F.col(f"h{b * rows_per_band + r}") for r in range(rows_per_band)])
-        ).alias(f"band{b}")
-        for b in range(bands)
-    ]
-    banded = sig.select("doc_id", *band_cols)
     # r7: materialize the bucket table ONCE — both sides of the self-join
     # (and the optional cap's groupBy) reference it, and a map-only lineage
     # has no exchange for Spark to reuse, so without the cut the whole
     # upstream signature pass ran once PER REFERENCE (guide §5; measured
     # 2x the MinHash kernel at sf1.0)
-    buckets = banded.select(
-        "doc_id",
-        F.explode(F.array(*[
-            F.concat_ws(":", F.lit(str(b)), F.col(f"band{b}")) for b in range(bands)
-        ])).alias("bucket"),
+    buckets = sig.select(
+        "doc_id", F.explode(minhash_band_buckets(k, bands)).alias("bucket")
     ).localCheckpoint(eager=False)
     if max_bucket_size is not None:
         keep = (
@@ -465,8 +472,7 @@ def near_dup_pairs_pipeline(
     return _jaccard_at(counts, threshold)
 
 
-def dedup_clusters(pairs: DataFrame, max_iters: int = 20,
-                   stats: dict | None = None) -> DataFrame:
+def dedup_clusters(pairs: DataFrame, max_iters: int = 20) -> DataFrame:
     """Connected components over near-dup pairs -> (doc_id, cluster_id).
 
     cluster_id = the smallest doc_id reachable through the pair graph
@@ -494,9 +500,7 @@ def dedup_clusters(pairs: DataFrame, max_iters: int = 20,
     label_sum = F.sum(F.col("label").cast("decimal(38,0)")).alias("s")
     prev_sum = labels.agg(label_sum).collect()[0]["s"]
     converged = False
-    rounds = 0
     for _ in range(max_iters):
-        rounds += 1
         neighbor_min = (
             edges.join(labels, edges.v == labels.node)
             .groupBy(edges.u)
@@ -527,8 +531,6 @@ def dedup_clusters(pairs: DataFrame, max_iters: int = 20,
             converged = True
             break
         prev_sum = cur_sum
-    if stats is not None:
-        stats["rounds"] = rounds  # bench instrumentation (cc_scale.py)
     if not converged:
         # min-label propagation moves one hop per round: a chain-shaped
         # component with radius > max_iters would silently get wrong ids
@@ -539,8 +541,7 @@ def dedup_clusters(pairs: DataFrame, max_iters: int = 20,
     return labels.select(F.col("node").alias("doc_id"), F.col("label").alias("cluster_id"))
 
 
-def dedup_clusters_star(pairs: DataFrame, max_iters: int = 30,
-                        stats: dict | None = None) -> DataFrame:
+def dedup_clusters_star(pairs: DataFrame, max_iters: int = 30) -> DataFrame:
     """Connected components by alternating LARGE-STAR / SMALL-STAR rounds —
     the published MapReduce CC algorithm (Kiveris et al., "Connected
     Components in MapReduce and Beyond", ACM SoCC 2014). Same output
@@ -602,9 +603,7 @@ def dedup_clusters_star(pairs: DataFrame, max_iters: int = 30,
     # jobs per round over materialized frames is the honest check.
     prev_e, prev_count = e, e.count()
     converged = False
-    rounds = 0
     for _ in range(max_iters):
-        rounds += 1
         # large-star
         s = sym(e)
         m = neigh_min(s)
@@ -633,8 +632,6 @@ def dedup_clusters_star(pairs: DataFrame, max_iters: int = 30,
             converged = True
             break
         prev_e, prev_count = e, count
-    if stats is not None:
-        stats["rounds"] = rounds  # bench instrumentation (cc_scale.py)
     if not converged:
         raise RuntimeError(
             f"dedup_clusters_star did not converge in {max_iters} rounds — "

@@ -36,6 +36,7 @@ from pyspark.sql import functions as F
 from document_extraction_spark.operators.dedup import (
     LSH_BANDS,
     MINHASH_K,
+    minhash_band_buckets,
     minhash_signatures,
 )
 
@@ -45,22 +46,11 @@ BP_LEN = 1  # hex chars of the bucket hash used as the partition key
 def _band_buckets(sig: DataFrame, k: int = MINHASH_K, bands: int = LSH_BANDS,
                   bp_len: int = BP_LEN) -> DataFrame:
     """(doc_id, h0..h{k-1}, bucket, bp) — one row per band. Bucket format
-    matches dedup.lsh_candidate_pairs ("{band}:{md5 of the band's
+    is dedup.minhash_band_buckets ("{band}:{md5 of the band's
     components}"); bp is the partition key (first hex chars of the hash)."""
-    rows_per_band = k // bands
-    band_cols = F.array(*[
-        F.concat_ws(
-            ":",
-            F.lit(str(b)),
-            F.md5(F.concat_ws("|", *[
-                F.col(f"h{b * rows_per_band + r}") for r in range(rows_per_band)
-            ])),
-        )
-        for b in range(bands)
-    ])
     return (
         sig.select("doc_id", *[f"h{i}" for i in range(k)],
-                   F.explode(band_cols).alias("bucket"))
+                   F.explode(minhash_band_buckets(k, bands)).alias("bucket"))
         # bp comes from the md5 part AFTER the "{band}:" prefix — substring
         # at a fixed offset would degenerate for bands >= 10 (two-digit band
         # prefixes shift the hash, collapsing those bands' partitions and

@@ -18,16 +18,18 @@ Distributed shape (scores computed ONCE — structurally, not by cache):
 
 At 100 TB neither side is broadcastable and the cross product is the cost:
 ``mutual_top1_srp`` swaps the exact scorer for banded SRP-bucketed
-candidates (similarity.py banding recipe — score only colliding buckets;
+candidates (``similarity.srp_band_buckets`` — score only colliding buckets;
 both sides cogroup on (band, bucket) so NEITHER side broadcasts). One
 Arrow kernel per bucket emits each row's in-bucket argmax partial, and an
 aggregate combine over the partials gives each side's global argmax; a
 pair is mutual iff the two argmaxes coincide. The kernel scores with a
-per-dimension loop that is bit-identical to ``similarity.cosine`` (not the
-BLAS ``similarity._cosine_matrix``), so the verdict equals the window
-filter's over the candidate set, trading candidate recall for the
-quadratic. At bands == n_planes (1 sign bit per band) the candidate set
-converges to all informative pairs and the output equals the exact path —
+per-dimension loop that is bit-identical to ``similarity.cosine`` wherever
+both norms are non-zero (not the BLAS ``similarity._cosine_matrix``), so
+the verdict equals the window filter's over the candidate set, trading
+candidate recall for the quadratic. At a zero norm the loop gives NaN,
+ranked highest, where the Column gives NULL, which is never paired. At
+bands == n_planes (1 sign bit per band) the candidate set converges to all
+informative pairs and the output equals the exact path —
 test_mining_calibrate pins that equality on the sf0.001 embeddings.
 """
 
@@ -38,10 +40,8 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from document_extraction_spark.operators.similarity import (
-    _checked_dim,
-    _hyperplanes,
     cosine,
-    srp_signature,
+    srp_band_buckets,
 )
 
 
@@ -54,7 +54,8 @@ def mutual_top1_pairs(
 ) -> DataFrame:
     """(left_id, right_id, cos): pairs where each side is the other's
     top-1.  ``min_cos`` (on the rounded score) optionally drops weak mutual
-    pairs — disjoint corpora can be mutually-nearest yet unrelated."""
+    pairs — disjoint corpora can be mutually-nearest yet unrelated.  A
+    zero-norm vector has no cosine (NULL, ranked last) and is never paired."""
     l = left.select(
         F.col(id_col).alias("left_id"), F.col(vec_col).alias("lvec")
     )
@@ -78,13 +79,14 @@ def _mutual_filter(scored: DataFrame, min_cos: float | None) -> DataFrame:
     """Chained two-window mutuality over one scored child (columns
     left_id, right_id, _raw, cos): a pair is mutual iff the SAME row has
     row_number 1 under both partitionings — no self-join, the scored
-    subtree is read once."""
+    subtree is read once.  A NULL score sorts last, so a rank-1 NULL means
+    that side has no score at all; it is dropped."""
     w_l = Window.partitionBy("left_id").orderBy(F.col("_raw").desc(), "right_id")
     w_r = Window.partitionBy("right_id").orderBy(F.col("_raw").desc(), "left_id")
     out = (
         scored.withColumn("rk_l", F.row_number().over(w_l))
         .withColumn("rk_r", F.row_number().over(w_r))
-        .where((F.col("rk_l") == 1) & (F.col("rk_r") == 1))
+        .where((F.col("rk_l") == 1) & (F.col("rk_r") == 1) & F.col("_raw").isNotNull())
         .select("left_id", "right_id", "cos")
     )
     if min_cos is not None:
@@ -332,34 +334,9 @@ def mutual_top1_srp(
     like LSH band tuning in dedup.py; BENCH/MINING_SRP.json pins the
     recall/cost trade per setting on the sf0.1 embeddings.
     """
-    if n_planes % bands != 0:
-        raise ValueError(f"bands ({bands}) must divide n_planes ({n_planes})")
-    per_band = n_planes // bands
-    planes = _hyperplanes(dim, n_planes, seed)
-    vec_ok = _checked_dim(F.col(vec_col), dim)
-
-    def banded(df: DataFrame, id_out: str, vec_out: str) -> DataFrame:
-        band_cols = [
-            srp_signature(
-                vec_ok, planes[b * per_band : (b + 1) * per_band]
-            ).alias(f"_b{b}")
-            for b in range(bands)
-        ]
-        sig = df.select(
-            F.col(id_col).alias(id_out), F.col(vec_col).alias(vec_out), *band_cols
-        )
-        return sig.select(
-            id_out,
-            vec_out,
-            F.explode(
-                F.array(*[
-                    F.concat_ws(
-                        ":", F.lit(str(b)), F.col(f"_b{b}").cast("string")
-                    )
-                    for b in range(bands)
-                ])
-            ).alias("bucket"),
-        )
+    buckets = F.explode(
+        srp_band_buckets(vec_col, n_planes, bands, dim, seed)
+    ).alias("bucket")
 
     # Candidates never materialize as a pair STREAM at all: the two banded
     # sides cogroup on the bucket key (both shuffle on bucket, neither
@@ -374,6 +351,11 @@ def mutual_top1_srp(
     # arithmetic and argmax tie-breaks are bit-identical to the HOF cosine
     # and the window filter (see _bucket_mutual_partials).
     partials = _bucket_mutual_partials(
-        banded(left, "left_id", "lvec"), banded(right, "right_id", "rvec")
+        left.select(
+            F.col(id_col).alias("left_id"), F.col(vec_col).alias("lvec"), buckets
+        ),
+        right.select(
+            F.col(id_col).alias("right_id"), F.col(vec_col).alias("rvec"), buckets
+        ),
     )
     return _mutual_from_partials(partials, min_cos)

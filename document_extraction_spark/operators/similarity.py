@@ -16,8 +16,8 @@ The engine has three cosines, one per plan shape:
   for PAIR STREAMS (bucket joins, blocked self-joins, re-ranks): the pairs
   already sit in a JVM row, so scoring them there moves no vector across
   the Python boundary.  It is interpreted outside whole-stage codegen,
-  ~10 us/pair (BENCH/DECON_SRP.json), and under ANSI a zero-norm vector
-  raises DIVIDE_BY_ZERO.
+  ~10 us/pair (BENCH/DECON_SRP.json), and NULL where a norm is 0, so no
+  zero vector passes a threshold or ranks in a top-k.
 * :func:`_cosine_matrix` — one BLAS matmul per Arrow batch for the two
   BROADCAST kernels (:func:`brute_force_topk`,
   ``decontaminate.semantic_decontaminate``), whose small side is a dense
@@ -33,8 +33,14 @@ The engine has three cosines, one per plan shape:
   operation sequence as :func:`cosine`, because ``mutual_top1_srp`` ranks on
   the RAW double and must equal ``mutual_top1_pairs`` bit for bit.
 
-The random hyperplanes are derived from a seeded NumPy generator and inlined
-as literal arrays — deterministic, no state on executors.
+Banded SRP buckets have one owner, :func:`srp_band_buckets`: the
+``"{band}:{signature}"`` key format and its argument checks (bands divide
+the planes, embeddings have ``dim`` elements).  :func:`srp_near_dup_pairs`,
+``mining.mutual_top1_srp`` and the ``decontaminate.semantic_decontaminate``
+prefilter all explode it, so equal vectors land in equal buckets across
+operators.  The random hyperplanes are derived from a seeded NumPy
+generator and inlined as literal arrays — deterministic, no state on
+executors.
 """
 
 from __future__ import annotations
@@ -59,16 +65,16 @@ def _dot(a, b):
 def cosine(a, b):
     """Cosine similarity between two array<float> columns (double math):
     per-element double products folded left to right from 0.0, then
-    ``dot / (sqrt(na) * sqrt(nb))``."""
-    return _dot(a, b) / (F.sqrt(_dot(a, a)) * F.sqrt(_dot(b, b)))
+    ``dot / (sqrt(na) * sqrt(nb))``; NULL where either norm is 0."""
+    return F.try_divide(_dot(a, b), F.sqrt(_dot(a, a)) * F.sqrt(_dot(b, b)))
 
 
 def _cosine_matrix(a: np.ndarray, b: np.ndarray) -> np.ndarray:
     """(len(a), len(b)) float64 cosines as ONE BLAS matmul, NaN where either
-    row has norm 0 (the :func:`cosine` Column raises DIVIDE_BY_ZERO there
-    under ANSI; a kernel skips NaN instead, so a zero vector is never
-    ranked or flagged).  The matmul sums in its own order, so values agree
-    with :func:`cosine` up to the last ulps: compare them rounded."""
+    row has norm 0 (where the :func:`cosine` Column is NULL; a kernel skips
+    NaN, so a zero vector is never ranked or flagged).  The matmul sums in
+    its own order, so values agree with :func:`cosine` up to the last ulps:
+    compare them rounded."""
     na = np.sqrt((a * a).sum(axis=1))
     nb = np.sqrt((b * b).sum(axis=1))
     denom = np.outer(na, nb)
@@ -202,6 +208,25 @@ def srp_signature(vec_col, planes: list[list[float]]):
     return sig
 
 
+def srp_band_buckets(vec_col: str, n_planes: int, bands: int, dim: int,
+                     seed: int = 1234):
+    """array<string> Column of the banded SRP buckets of column ``vec_col``:
+    ``"{b}:{signature of band b's n_planes/bands hyperplanes}"``.  The
+    column name stays unresolved, so one Column serves both sides of a
+    join."""
+    if n_planes % bands != 0:
+        raise ValueError(f"bands ({bands}) must divide n_planes ({n_planes})")
+    per_band = n_planes // bands
+    planes = _hyperplanes(dim, n_planes, seed)
+    vec_ok = _checked_dim(F.col(vec_col), dim)
+    return F.array(*[
+        F.concat_ws(":", F.lit(str(b)), srp_signature(
+            vec_ok, planes[b * per_band : (b + 1) * per_band]
+        ).cast("string"))
+        for b in range(bands)
+    ])
+
+
 def srp_lsh_topk(
     corpus: DataFrame,
     queries: DataFrame,
@@ -242,9 +267,11 @@ def srp_lsh_topk(
         .select("query_id", "vec_id", F.round("_raw", 4).alias("cos"), "_raw")
     )
     w = Window.partitionBy("query_id").orderBy(F.col("_raw").desc(), F.col("vec_id"))
+    # a NULL (zero-norm) cosine sorts last and is dropped after the window,
+    # as brute_force_topk never ranks it
     return (
         scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
+        .filter((F.col("rank") <= k) & F.col("_raw").isNotNull())
         .drop("_raw")
     )
 
@@ -356,7 +383,7 @@ def ivf_topk(
     w = Window.partitionBy("query_id").orderBy(F.col("_raw").desc(), F.col("vec_id"))
     return (
         scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
+        .filter((F.col("rank") <= k) & F.col("_raw").isNotNull())
         .drop("_raw")
     )
 
@@ -388,27 +415,10 @@ def srp_near_dup_pairs(
     The only shuffles are the bucket join and distinct, keyed by bucket —
     never an all-pairs product.
     """
-    if n_planes % bands != 0:
-        raise ValueError(f"bands ({bands}) must divide n_planes ({n_planes})")
-    per_band = n_planes // bands
-    planes = _hyperplanes(dim, n_planes, seed)
-    vec_ok = _checked_dim(F.col(vec_col), dim)
-    band_cols = [
-        srp_signature(vec_ok, planes[b * per_band : (b + 1) * per_band]).alias(
-            f"_b{b}"
-        )
-        for b in range(bands)
-    ]
-    sig = df.select(F.col(id_col).alias("vec_id"), F.col(vec_col).alias("vec"), *band_cols)
-    buckets = sig.select(
-        "vec_id",
-        "vec",
-        F.explode(
-            F.array(*[
-                F.concat_ws(":", F.lit(str(b)), F.col(f"_b{b}").cast("string"))
-                for b in range(bands)
-            ])
-        ).alias("bucket"),
+    buckets = df.select(
+        F.col(id_col).alias("vec_id"),
+        F.col(vec_col).alias("vec"),
+        F.explode(srp_band_buckets(vec_col, n_planes, bands, dim, seed)).alias("bucket"),
     )
     a, b_ = buckets.alias("a"), buckets.alias("b")
     cand = (

@@ -36,10 +36,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from document_extraction_spark.core import classify as C
-from document_extraction_spark.core.extract import (
-    extract_map_in_pandas,
-    make_extract_kernel,
-)
+from document_extraction_spark.core.extract import make_extract_kernel
 
 SPAN_TYPE = T.ArrayType(
     T.StructType(
@@ -142,12 +139,9 @@ def build_extract_df(
         plan = plan.repartition(
             partitions, F.xxhash64("conv_id", "turn_idx", F.lit(salt))
         )
-    kernel = (
-        extract_map_in_pandas
-        if max_payload_chars is None
-        else make_extract_kernel(max_payload_chars)
+    kernel_out = plan.mapInPandas(
+        make_extract_kernel(max_payload_chars), schema=KERNEL_SCHEMA
     )
-    kernel_out = plan.mapInPandas(kernel, schema=KERNEL_SCHEMA)
     # assemble the spans struct view JVM-side (zip of the offset arrays with
     # the row's payload_kind) — whole-stage-codegen'd, no Python cost
     spans = F.zip_with(

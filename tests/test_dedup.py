@@ -165,6 +165,28 @@ def _hot_bucket_docs(spark):
     return spark.createDataFrame(rows, "doc_id long, text string")
 
 
+def test_minhash_band_buckets_equal_band_keys(spark, testdata_dir):
+    """The Column bucket format (index, incremental probe, LSH join) and
+    the fused kernel's per-row ``_band_keys`` agree on every sf0.001
+    document."""
+    docs = spark.read.parquet(f"{testdata_dir}/sf0.001/documents.parquet")
+    got = {
+        r["doc_id"]: r["keys"]
+        for r in DD.minhash_signatures(docs)
+        .select("doc_id", DD.minhash_band_buckets().alias("keys"))
+        .collect()
+    }
+    want = {
+        r["doc_id"]: [
+            f"{b}:{key}"
+            for b, key in enumerate(DD._band_keys(DD._py_minhash(sh, 8, {}), 4))
+        ]
+        for r in docs.select("doc_id", "text").collect()
+        if (sh := DD._py_shingles(r["text"], 3)) is not None
+    }
+    assert len(got) == 500 and got == want
+
+
 @pytest.fixture(scope="module")
 def corpus_docs(spark, testdata_dir):
     from test_dedup_kernels import EDGE_ROWS

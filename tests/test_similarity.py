@@ -8,6 +8,7 @@ from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from document_extraction_spark.operators import similarity as SIM
+from document_extraction_spark.operators.mining import mutual_top1_pairs, mutual_top1_srp
 
 
 @pytest.fixture(scope="module")
@@ -70,8 +71,8 @@ def test_brute_force_arrow_equals_hof(spark, emb, testdata_dir):
 
 
 def test_brute_force_topk_skips_zero_norm_vectors(spark):
-    """A zero-norm vector has no cosine (the HOF raises DIVIDE_BY_ZERO under
-    ANSI): a zero-norm query gets no rows and a zero-norm corpus row is
+    """A zero-norm vector has no cosine (the JVM cosine Column is NULL
+    there): a zero-norm query gets no rows and a zero-norm corpus row is
     never ranked — and nothing raises."""
     df = spark.createDataFrame(
         [(0, [0.0, 0.0]), (1, [1.0, 0.0]), (2, [0.0, 1.0]), (3, [1.0, 1.0])],
@@ -198,8 +199,91 @@ def test_srp_rejects_dim_mismatch(spark, emb):
         SIM.srp_lsh_topk(emb, emb.limit(2), dim=64).collect()
 
 
-def test_srp_near_dup_rejects_bad_bands(spark, emb):
-    import pytest as _pytest
+@pytest.mark.parametrize(
+    "op",
+    [
+        lambda e: SIM.srp_near_dup_pairs(e, n_planes=8, bands=3, dim=16),
+        lambda e: mutual_top1_srp(e, e, n_planes=8, bands=3, dim=16),
+    ],
+    ids=["srp_near_dup_pairs", "mutual_top1_srp"],
+)
+def test_srp_near_dup_rejects_bad_bands(spark, emb, op):
+    with pytest.raises(ValueError, match="must divide"):
+        op(emb)
 
-    with _pytest.raises(ValueError, match="must divide"):
-        SIM.srp_near_dup_pairs(emb, n_planes=8, bands=3, dim=16)
+
+def test_srp_band_buckets_equal_numpy_sign_bits(spark, testdata_dir):
+    """Each key is "{band}:{signature}", the signature summing 2**i over
+    the band's planes i with a non-negative dot product.  The dot folds the
+    double products left to right from 0.0, as np.cumsum does, so the signs
+    agree bit for bit on the sf0.01 embeddings."""
+    n_planes, bands, dim = 16, 4, 64
+    emb = spark.read.parquet(f"{testdata_dir}/sf0.01/embeddings.parquet")
+    got = {
+        r["vec_id"]: r["keys"]
+        for r in emb.select(
+            "vec_id",
+            SIM.srp_band_buckets("embedding", n_planes, bands, dim).alias("keys"),
+        ).collect()
+    }
+    pdf = emb.select("vec_id", "embedding").toPandas()
+    vecs = np.stack(pdf["embedding"].to_numpy()).astype(np.float64)
+    planes = np.array(SIM._hyperplanes(dim, n_planes))
+    dots = np.cumsum(vecs[:, None, :] * planes[None, :, :], axis=2)[:, :, -1]
+    per = n_planes // bands
+    sigs = (dots >= 0).reshape(len(vecs), bands, per) @ (2 ** np.arange(per))
+    want = {
+        int(i): [f"{b}:{int(sig)}" for b, sig in enumerate(row)]
+        for i, row in zip(pdf["vec_id"], sigs)
+    }
+    assert len(got) == 500 and got == want
+
+
+def _zero_norm_rows(spark, op):
+    """(ids, score, flagged) per output row of ``op`` over a corpus whose
+    vector 0 has norm 0 (and, for decontamination, an eval set whose
+    vector 101 has norm 0); every threshold is 0.0."""
+    from document_extraction_spark.operators.decontaminate import (
+        semantic_decontaminate,
+    )
+
+    schema = "vec_id long, embedding array<float>"
+    df = spark.createDataFrame([(0, [0.0, 0.0]), (1, [1.0, 0.0]), (2, [0.0, 1.0])], schema)
+    if op == "srp_near_dup_pairs":
+        out = SIM.srp_near_dup_pairs(df, threshold=0.0, n_planes=4, bands=4, dim=2)
+    elif op == "embedding_near_dup_pairs":
+        out = SIM.embedding_near_dup_pairs(df.withColumn("label", F.lit(0)), threshold=0.0)
+    elif op == "srp_lsh_topk":
+        out = SIM.srp_lsh_topk(df, df, k=3, n_planes=4, dim=2)
+    elif op == "ivf_topk":
+        out = SIM.ivf_topk(df, df, k=3, n_lists=2, n_probe=2)
+    elif op == "mutual_top1_pairs":
+        out = mutual_top1_pairs(df, df)
+    else:
+        evals = spark.createDataFrame([(100, [1.0, 0.1]), (101, [0.0, 0.0])], schema)
+        out = semantic_decontaminate(
+            df, evals, threshold=0.0, prefilter_planes=4, prefilter_bands=4, dim=2
+        )
+        return [({r["doc_id"]}, r["max_cos"], r["contaminated"]) for r in out.collect()]
+    ids = [c for c in out.columns if c.startswith("id_") or c.endswith("_id")]
+    return [({r[c] for c in ids}, r["cos"], True) for r in out.collect()]
+
+
+@pytest.mark.parametrize(
+    "op",
+    [
+        "srp_near_dup_pairs",
+        "embedding_near_dup_pairs",
+        "semantic_decontaminate_prefilter",
+        "srp_lsh_topk",
+        "ivf_topk",
+        "mutual_top1_pairs",
+    ],
+)
+def test_pair_stream_cosine_skips_zero_norm_vectors(spark, op):
+    """The JVM cosine is NULL where a norm is 0: every pair-stream operator
+    finishes, and no zero-norm row carries a score, passes a threshold or
+    is flagged."""
+    rows = _zero_norm_rows(spark, op)
+    assert all(score is not None for ids, score, flagged in rows if flagged)
+    assert all(score is None and not flagged for ids, score, flagged in rows if 0 in ids)
