@@ -28,8 +28,12 @@ from document_extraction_spark.operators import multimodal as MM
 from document_extraction_spark.operators import similarity as SIM
 from document_extraction_spark.operators import span_dedup as SPD
 from document_extraction_spark.operators import structured as ST
-from document_extraction_spark.plans.extract_pipeline import build_extract_df
+from document_extraction_spark.plans.extract_pipeline import (
+    build_extract_df,
+    documents_as_turns,
+)
 from document_extraction_spark.session import ensure_worker_package
+from document_extraction_spark.streaming.extract_stream import await_drained
 
 
 def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -74,15 +78,7 @@ def entry(spark: SparkSession) -> DataFrame:
     """Flagship: deterministic extraction over the sf0.001 documents corpus
     (classify -> strip/layout/normalize -> spans + metrics via mapInPandas)."""
     docs = _t(spark, "/root/testdata/sf0.001", "documents")
-    turns = docs.select(
-        F.col("doc_id").cast("string").alias("conv_id"),
-        F.lit(0).cast("int").alias("turn_idx"),
-        F.lit("user").alias("role"),
-        F.lit(None).cast("string").alias("tool"),
-        F.lit(None).cast("timestamp").alias("ts"),
-        "text",
-    )
-    return build_extract_df(turns, partitions=8)
+    return build_extract_df(documents_as_turns(docs), partitions=8)
 
 
 # --------------------------------------------------------------------------
@@ -648,15 +644,7 @@ def q_extract_plain_docs(spark, sf_dir):
     to the SQL-checkable normalization semantics (fence/NFC edge semantics
     are exercised by tests/, not this corpus)."""
     d = _t(spark, sf_dir, "documents")
-    turns = d.select(
-        F.col("doc_id").cast("string").alias("conv_id"),
-        F.lit(0).cast("int").alias("turn_idx"),
-        F.lit("user").alias("role"),
-        F.lit(None).cast("string").alias("tool"),
-        F.lit(None).cast("timestamp").alias("ts"),
-        "text",
-    )
-    out = build_extract_df(turns)
+    out = build_extract_df(documents_as_turns(d))
     return (
         out.select(
             F.col("conv_id").cast("long").alias("doc_id"),
@@ -1845,15 +1833,7 @@ def x_extract_documents_full(spark, sf_dir):
     serialized with to_json for the contract (driver canonicalizer can't hash
     raw list cells — round-1 ERR); tests exercise the raw struct array."""
     d = _t(spark, sf_dir, "documents")
-    turns = d.select(
-        F.col("doc_id").cast("string").alias("conv_id"),
-        F.lit(0).cast("int").alias("turn_idx"),
-        F.lit("user").alias("role"),
-        F.lit(None).cast("string").alias("tool"),
-        F.lit(None).cast("timestamp").alias("ts"),
-        "text",
-    )
-    out = build_extract_df(turns, partitions=8)
+    out = build_extract_df(documents_as_turns(d), partitions=8)
     return out.withColumn("spans", F.to_json("spans"))
 
 
@@ -1917,7 +1897,7 @@ def x_streaming_extract(spark, sf_dir):
     dst = tempfile.mkdtemp(prefix="dex_stream_dst_") + "/out"
     ckpt = tempfile.mkdtemp(prefix="dex_stream_ckpt_") + "/ckpt"
     write_transcripts_parquet(src, n_convs=5, seed=31, rows_per_file=50)
-    run_extract_stream(spark, src, dst, ckpt).awaitTermination(300)
+    await_drained(run_extract_stream(spark, src, dst, ckpt))
     return (
         spark.read.parquet(dst)
         .withColumn("spans", F.to_json("spans"))
@@ -1975,7 +1955,7 @@ def x_stream_windowed_rates(spark, sf_dir):
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(300)
+    await_drained(q)
     return spark.table("win_rates").select(
         F.col("win.start").alias("win_start"),
         F.col("win.end").alias("win_end"),
@@ -1997,7 +1977,7 @@ def x_stream_conv_stats(spark, sf_dir):
     src = tempfile.mkdtemp(prefix="dex_convstream_src_")
     write_transcripts_parquet(src, n_convs=6, seed=53, rows_per_file=40)
     q = start_conversation_stats(read_transcript_stream(spark, src), "conv_stats")
-    q.awaitTermination(300)
+    await_drained(q)
     # update mode may emit one row per key per micro-batch: keep the final
     # (max n_turns) row per conversation
     t = spark.table("conv_stats")
@@ -2040,7 +2020,7 @@ def x_stream_dedup(spark, sf_dir):
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(300)
+    await_drained(q)
     return (
         spark.table("x_stream_dedup_t")
         .select("conv_id", "turn_idx", "role", F.length("text").alias("n_chars"))
@@ -2070,7 +2050,7 @@ def x_stream_sessions(spark, sf_dir):
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(300)
+    await_drained(q)
     return (
         spark.table("x_stream_sessions_t")
         .select(
@@ -2110,7 +2090,7 @@ def x_stream_join(spark, sf_dir):
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(300)
+    await_drained(q)
     return spark.table("x_stream_join_t").orderBy(
         "conv_id", "user_turn", "tool_turn"
     )

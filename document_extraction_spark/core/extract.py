@@ -87,13 +87,13 @@ def extract_one(raw: str | None) -> dict:
     return _finalize(kind, blocks, n_kept, n_dropped, failed, raw)
 
 
-def extract_batch_pdf(pdf: pd.DataFrame, text_col: str = "text",
-                      max_chars: int | None = None) -> pd.DataFrame:
+def extract_batch_pdf(pdf: pd.DataFrame, max_chars: int | None = None) -> pd.DataFrame:
     """Vectorized extraction over one pandas batch.
 
-    Returns ``pdf`` with :data:`RESULT_COLUMNS` replacing/extending the
-    payload column. Row order and index are preserved (stable turn ordering
-    is carried by (conv_id, turn_idx) key columns, not by physical order).
+    Returns ``pdf`` with the ``text`` payload column replaced by the
+    extracted text and the kernel's result columns added. Row order and
+    index are preserved (stable turn ordering is carried by (conv_id,
+    turn_idx) key columns, not by physical order).
 
     ``max_chars`` is the oversized-payload policy (SURVEY.md §7 "skew: a
     single 10 MB turn is the real skew unit"): payloads longer than the cap
@@ -101,7 +101,7 @@ def extract_batch_pdf(pdf: pd.DataFrame, text_col: str = "text",
     ``truncated`` — opt-in, off by default (the default preserves per-turn
     equality with the uncapped reference).
     """
-    raw = pdf[text_col].fillna("").astype("object")
+    raw = pdf["text"].fillna("").astype("object")
     # lineage metric: bytes_in reports the RAW input size, pre-truncation —
     # post-truncation it would under-report exactly the rows the cap hit
     bytes_in = raw.str.encode("utf-8").str.len().astype("int64")

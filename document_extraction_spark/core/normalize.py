@@ -69,10 +69,9 @@ def fence_strip_series(ser: pd.Series) -> pd.Series:
     return s.str.strip()
 
 
-def normalize_series(ser: pd.Series, fence: bool = True) -> pd.Series:
+def normalize_series(ser: pd.Series) -> pd.Series:
     """Vectorized span normalization over an Arrow batch column."""
-    s = fence_strip_series(ser) if fence else ser.fillna("")
-    s = s.str.normalize("NFC")
+    s = fence_strip_series(ser).str.normalize("NFC")
     s = s.str.replace("\r\n", "\n", regex=False).str.replace("\r", "\n", regex=False)
     s = s.str.replace(_RE_HWS_RUN, " ", regex=True)
     s = s.str.replace(_RE_LINE_TRIM, "\n", regex=True)

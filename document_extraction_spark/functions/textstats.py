@@ -7,9 +7,14 @@ whole-stage codegen, no Python in the hot path. Each function has an exact
 ANSI-SQL twin used as the DuckDB oracle (see __spark_entry__.oracle_sql);
 where semantics could diverge between engines (regex dialects, float
 rounding) the expressions are deliberately restricted to the common subset.
+The one Python function, ``py_tokens``, is the twin of ``tokens`` that the
+Arrow kernels tokenize with, so the tokenizer of all three engines lives
+here.
 """
 
 from __future__ import annotations
+
+import re
 
 from pyspark.sql import Column
 from pyspark.sql import functions as F
@@ -29,6 +34,17 @@ def tokens(col: Column) -> Column:
     """Whitespace tokenization with empty-token filtering (BPE-ish regex
     splits are layered on top where needed)."""
     return F.filter(F.split(col, r"\s+"), lambda t: t != "")
+
+
+# Java's regex \s is the ASCII class [ \t\n\x0B\f\r]; Python re's \s would
+# also match Unicode whitespace (a silent divergence on e.g. NBSP)
+_JAVA_WS = re.compile(r"[ \t\n\x0b\f\r]+")
+
+
+def py_tokens(text: str) -> list[str]:
+    """The Python twin of ``tokens(lower(col))`` for the Arrow kernels:
+    lowercase, split on Java's whitespace class, drop empty tokens."""
+    return [t for t in _JAVA_WS.split(text.lower()) if t]
 
 
 def token_count(col: Column) -> Column:

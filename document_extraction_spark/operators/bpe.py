@@ -30,19 +30,13 @@ this), so R rounds cost R bounded shuffles over vocabulary-sized data.
 
 from __future__ import annotations
 
-import re
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from document_extraction_spark.functions.textstats import tokens
+from document_extraction_spark.functions.textstats import py_tokens, tokens
 
 ROUNDS = 6
-
-# Python twin of the Java \s class behind textstats.tokens (Python re's \s
-# would additionally match Unicode whitespace — see operators/dedup.py)
-_JAVA_WS = re.compile(r"[ \t\n\x0b\f\r]+")
 
 
 def _wrap_chars(col):
@@ -196,11 +190,7 @@ def bpe_encode(docs: DataFrame, merges: list[tuple[int, str, int]],
             for doc_id, text in zip(pdf["_id"], pdf["_txt"]):
                 if text is None:
                     continue
-                toks = [
-                    t
-                    for t in _JAVA_WS.split(text.lower())
-                    if t and alpha.fullmatch(t)
-                ]
+                toks = [t for t in py_tokens(text) if alpha.fullmatch(t)]
                 enc = " ".join(encode_word(w) for w in toks)
                 for pair, merged in reps:
                     enc = enc.replace(pair, merged)

@@ -27,18 +27,13 @@ Plan shape, and why it holds at 100 TB:
 
 from __future__ import annotations
 
-import re
-
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-
-# Python twin of the Java \s class behind textstats.tokens (Python re's \s
-# would additionally match Unicode whitespace — see operators/dedup.py)
-_JAVA_WS = re.compile(r"[ \t\n\x0b\f\r]+")
+from document_extraction_spark.functions.textstats import py_tokens
 
 
 def _doc_grams(df: DataFrame, n: int, id_col: str, text_col: str) -> DataFrame:
@@ -66,7 +61,7 @@ def _doc_grams(df: DataFrame, n: int, id_col: str, text_col: str) -> DataFrame:
             for doc_id, text in zip(pdf["_id"], pdf["_txt"]):
                 if text is None:
                     continue
-                toks = [t for t in _JAVA_WS.split(text.lower()) if t]
+                toks = py_tokens(text)
                 if len(toks) < n:
                     continue
                 gs = dict.fromkeys(

@@ -40,7 +40,6 @@ from __future__ import annotations
 
 import hashlib
 import itertools
-import re
 from operator import itemgetter
 
 import numpy as np
@@ -49,17 +48,13 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.pandas.types import to_arrow_type
 
-from document_extraction_spark.functions.textstats import fingerprint
+from document_extraction_spark.functions.textstats import fingerprint, py_tokens
 
 SHINGLE_WIDTH = 3
 MINHASH_K = 8
 LSH_BANDS = 4  # rows per band = MINHASH_K // LSH_BANDS = 2
 SIMHASH_BITS = 32
 
-# Python twin of the Java regex \s used by F.split(col, r"\s+"): Java \s is
-# the ASCII class [ \t\n\x0B\f\r] (Python re's \s would additionally match
-# Unicode whitespace — a silent divergence on e.g. NBSP).
-_JAVA_WS = re.compile(r"[ \t\n\x0b\f\r]+")
 # Hash-cache bound for the per-task shingle->md5-window memo; cleared when
 # exceeded so a boilerplate-free 100 TB task cannot grow it unboundedly.
 _MD5_CACHE_CAP = 2_000_000
@@ -80,7 +75,7 @@ def _py_shingles(text: str | None, width: int) -> list[str] | None:
     stripped = text.strip(" ")
     if not stripped:
         return None
-    toks = [t for t in _JAVA_WS.split(stripped.lower()) if t]
+    toks = py_tokens(stripped)
     if len(toks) >= width:
         return list(dict.fromkeys(
             " ".join(toks[i : i + width]) for i in range(len(toks) - width + 1)

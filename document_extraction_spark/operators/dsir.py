@@ -27,8 +27,6 @@ ADVICE r4.
 
 from __future__ import annotations
 
-import re
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -37,9 +35,6 @@ from document_extraction_spark.functions import textstats as TS
 
 BUCKETS = 1024
 
-# Python twin of the Java \s class used by textstats.tokens (see
-# operators/dedup.py: Python re's \s would also match Unicode whitespace)
-_JAVA_WS = re.compile(r"[ \t\n\x0b\f\r]+")
 _BUCKET_CACHE_CAP = 2_000_000
 
 
@@ -60,7 +55,7 @@ def _py_bucket_counts(text: str | None, memo: dict) -> dict[int, int] | None:
 
     if text is None:
         return None
-    toks = [t for t in _JAVA_WS.split(text.lower()) if t]
+    toks = TS.py_tokens(text)
     counts: dict[int, int] = {}
     for i in range(len(toks) - 1):
         g = toks[i] + " " + toks[i + 1]

@@ -29,18 +29,13 @@ Plan shape at 100 TB:
 
 from __future__ import annotations
 
-import re
 import warnings
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from document_extraction_spark.functions.textstats import tokens
-
-# Python twin of the Java \s class behind textstats.tokens (Python re's \s
-# would additionally match Unicode whitespace — see operators/dedup.py)
-_JAVA_WS = re.compile(r"[ \t\n\x0b\f\r]+")
+from document_extraction_spark.functions.textstats import py_tokens
 
 
 def _myers_distances(pa_list, pb_list, width: int):
@@ -155,7 +150,7 @@ def blocked_levenshtein_pairs(
             for doc_id, text in zip(pdf["_id"], pdf["_txt"]):
                 if text is None:
                     continue
-                toks = [t for t in _JAVA_WS.split(text.lower()) if t]
+                toks = py_tokens(text)
                 if not toks:
                     continue
                 head = "h:" + " ".join(toks[:block_tokens])

@@ -26,8 +26,8 @@ pair is mutual iff the two argmaxes coincide. The kernel scores with a
 per-dimension loop that is bit-identical to ``similarity.cosine`` wherever
 both norms are non-zero (not the BLAS ``similarity._cosine_matrix``), so
 the verdict equals the window filter's over the candidate set, trading
-candidate recall for the quadratic. At a zero norm the loop gives NaN,
-ranked highest, where the Column gives NULL, which is never paired. At
+candidate recall for the quadratic. At a zero norm the loop gives NaN and
+the Column gives NULL; both paths rank it as no score and never pair it. At
 bands == n_planes (1 sign bit per band) the candidate set converges to all
 informative pairs and the output equals the exact path —
 test_mining_calibrate pins that equality on the sf0.001 embeddings.
@@ -94,22 +94,21 @@ def _mutual_filter(scored: DataFrame, min_cos: float | None) -> DataFrame:
     return out
 
 
-def _ieee_totkey(x: np.ndarray) -> np.ndarray:
-    """Map a float64 array to int64 keys whose ``<`` order is EXACTLY
-    ``java.lang.Double.compare`` — the comparator Spark's double sorts,
-    ``max``, and struct comparisons use: every NaN equal and above +inf,
-    -0.0 below +0.0.  The classic bit trick (flip the magnitude bits of
-    negatives, keep the sign bit) gives IEEE total order; canonicalising
-    NaN first collapses all payloads to one key, matching Java's
-    all-NaNs-are-equal rule.  ``argmax`` over these keys therefore picks
-    the same winner as ``F.max(F.struct(_raw, ...))``."""
-    x = np.where(np.isnan(x), np.float64("nan"), x)
+_KEY_MIN = np.int64(-0x8000000000000000)  # below every real score's key
+
+
+def _score_key(x: np.ndarray) -> np.ndarray:
+    """Map float64 scores to int64 keys whose ``<`` order is EXACTLY
+    ``java.lang.Double.compare`` on real values — the comparator Spark's
+    double sorts, ``max``, and struct comparisons use, -0.0 below +0.0 —
+    and a NaN (zero-norm cosine) to ``_KEY_MIN``: no score, ranked below
+    every real one, as the JVM cosine's NULL ranks last.  The classic bit
+    trick (flip the magnitude bits of negatives, keep the sign bit) gives
+    IEEE total order.  ``argmax`` over these keys therefore picks the same
+    winner as ``F.max(F.struct(_raw, ...))`` over the real scores."""
     b = np.ascontiguousarray(x).view(np.int64)
-    return b ^ ((b >> 63) & np.int64(0x7FFFFFFFFFFFFFFF))
-
-
-_KEY_MIN = np.int64(-0x8000000000000000)  # below every real key: the only
-# bit pattern mapping here is negative-payload NaN, canonicalised away.
+    key = b ^ ((b >> 63) & np.int64(0x7FFFFFFFFFFFFFFF))
+    return np.where(np.isnan(x), _KEY_MIN, key)
 
 _PARTIAL_SCHEMA = "_side tinyint, id bigint, other bigint, _raw double"
 
@@ -136,14 +135,16 @@ def _bucket_mutual_partials(lb: DataFrame, rb: DataFrame,
     ``mutual_top1_pairs`` bit for bit.
 
     Each emitted partial is the bucket's ``max(struct(_raw, -other_id))``
-    winner for one (side, id): NaN-high and smallest-other-id tie-break
-    replicated exactly by ``argmax`` over :func:`_ieee_totkey` keys with
-    ids sorted ascending (first-max wins).  Because that struct-max order
-    is total, the global argmax is the max of per-bucket winners, so the
-    downstream combine over these partials returns the verdict of the
-    window filter :func:`_mutual_filter` over the deduplicated candidate
-    pairs — duplicate collisions across bands carry identical raws and are
-    absorbed (pinned in test_mining_calibrate).
+    winner for one (side, id): the smallest-other-id tie-break is
+    replicated exactly by ``argmax`` over :func:`_score_key` keys with ids
+    sorted ascending (first-max wins).  A zero-norm vector has no score
+    (NaN, as the JVM cosine's NULL): it never wins, and an id with no real
+    score emits a NaN partial that the combine drops.  Because the
+    struct-max order is total, the global argmax is the max of per-bucket
+    winners, so the downstream combine over these partials returns the
+    verdict of the window filter :func:`_mutual_filter` over the
+    deduplicated candidate pairs — duplicate collisions across bands carry
+    identical raws and are absorbed (pinned in test_mining_calibrate).
 
     Resident memory per bucket group is O(occupancy x dim): the cogroup
     hands the kernel every left and right row of the bucket at once, as
@@ -156,11 +157,7 @@ def _bucket_mutual_partials(lb: DataFrame, rb: DataFrame,
     The kernel is ``applyInArrow`` (not pandas): Arrow list columns are one
     contiguous values buffer plus offsets and flatten zero-copy to an
     (n, dim) matrix, where pandas boxes every array cell into its own
-    ndarray; and a NaN ``_raw`` crosses back as a VALUE — the pandas path
-    would collapse NaN to null (pandas' null sentinel IS NaN), and a null
-    raw sorts SMALLEST in the downstream struct max where Spark ranks NaN
-    LARGEST, flipping verdicts for zero-norm vectors (caught by
-    test_bucket_partials_match_filter_agg_on_adversarial_pairs)."""
+    ndarray."""
     import pyarrow as pa
 
     def _mat(tbl: "pa.Table", vec: str, n: int) -> np.ndarray:
@@ -203,12 +200,13 @@ def _bucket_mutual_partials(lb: DataFrame, rb: DataFrame,
             nb += R[:, k] * R[:, k]
         sa = np.sqrt(na)
         sb = np.sqrt(nb)
+        # an id with no real score (all its candidates NaN) keeps raw NaN
         lkey = np.full(n, _KEY_MIN)
         lbj = np.zeros(n, np.int64)
-        lraw = np.zeros(n)
+        lraw = np.full(n, np.nan)
         rkey = np.full(m, _KEY_MIN)
         rbi = np.zeros(m, np.int64)
-        rraw = np.zeros(m)
+        rraw = np.full(m, np.nan)
         for i0 in range(0, n, chunk):
             i1 = min(i0 + chunk, n)
             Lc = L[i0:i1]
@@ -223,7 +221,7 @@ def _bucket_mutual_partials(lb: DataFrame, rb: DataFrame,
                     dot += Lc[:, k][:, None] * Rc[:, k][None, :]
                 with np.errstate(divide="ignore", invalid="ignore"):
                     raw = dot / (sac[:, None] * sb[j0:j1][None, :])
-                key = _ieee_totkey(raw)
+                key = _score_key(raw)  # NaN keys at the floor: never taken
                 # ids ascend with the index, blocks scan ascending, and the
                 # update is STRICT >, so ties keep the smallest other-id.
                 bj = key.argmax(axis=1)
@@ -258,15 +256,17 @@ def _mutual_from_partials(partials: DataFrame,
     each side's argmax is ``max(struct(_raw, -other))`` over its bucket
     winners (ties on _raw pick the SMALLEST other id, exactly the window
     filter's orderBy(_raw desc, id); struct max compares fields left to
-    right and Spark orders NaN above every double in both; max over bucket
-    winners == global max, the order is total), a pair is mutual iff the
-    two argmax rows coincide (a semi-join), and the score is rounded at the
-    edge.  Hash aggregation combines map-side, so the |L|+|R| rows per
-    bucket collapse to |corpus|-row tables before any exchange.
+    right; max over bucket winners == global max, the order is total), a
+    pair is mutual iff the two argmax rows coincide (a semi-join), and the
+    score is rounded at the edge.  A NaN partial is an id with no real
+    score in its bucket (zero norm): it is dropped before the max, where
+    Spark would rank it above every score, as the window filter drops a
+    NULL winner.  Hash aggregation combines map-side, so the |L|+|R| rows
+    per bucket collapse to |corpus|-row tables before any exchange.
     ``partials`` is materialized once (localCheckpoint — both directions
     consume the cogroup output, and a map-only lineage would re-run the
     scoring kernel per consumer: the dedup.py recipe)."""
-    p = partials.localCheckpoint(eager=False)
+    p = partials.where(~F.isnan("_raw")).localCheckpoint(eager=False)
     best_l = p.where(F.col("_side") == 0).groupBy(
         F.col("id").alias("left_id")
     ).agg(

@@ -22,17 +22,13 @@ Plan shape at 100 TB:
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from document_extraction_spark.functions.textstats import token_count
+from document_extraction_spark.operators.sampling import _HEX_WIDTH, _hash_hex
 
-_HEX_WIDTH = 8
 _SPACE = float(16**_HEX_WIDTH)
-
-
-def _hash_hex(key: Column, salt: str) -> Column:
-    return F.substring(F.md5(F.concat(F.lit(salt), key.cast("string"))), 1, _HEX_WIDTH)
 
 
 def sample_to_token_budget(

@@ -293,13 +293,6 @@ def decode_image(payload, mime: str | None = None) -> np.ndarray:
         raise ValueError(f"PIL decode failed: {e}") from None
 
 
-def real_decode(payload: bytes, mime: str | None = None) -> np.ndarray:
-    """The production decode kernel (kept under its historical name): now a
-    REAL pure-numpy decoder for PPM/PGM/BMP with PIL as the import-guarded
-    upgrade — see :func:`decode_image`."""
-    return decode_image(payload, mime)
-
-
 def encode_ppm(arr: np.ndarray) -> bytes:
     """(H, W, 3) uint8 -> binary P6 bytes (round-trips through _decode_ppm)."""
     arr = np.ascontiguousarray(arr, dtype=np.uint8)

@@ -17,15 +17,22 @@ Resume = ``left_anti`` join of the bucket universe against the manifest
 "Joins"). A crash between (3) and (4) is safe: the bucket is re-extracted and
 dynamically overwritten. A completed run resumes as a no-op.
 
-On Iceberg the same protocol maps to snapshot-atomic ``writeTo().append()``
-plus a metadata table; the parquet layout here emulates that without the
-runtime jar (SURVEY.md §7 "Iceberg absence").
+The output and manifest tables are reached only through the
+``sources/tableio.TableIO`` verbs: ``exists``/``read`` for the manifest,
+``overwrite_partitions`` for the wave write and ``append`` for the manifest
+rows. A path is split into the table's root (its parent directory) and its
+name. The parquet protocol runs on those three verbs today. On Iceberg the
+same verbs are a snapshot-atomic ``overwritePartitions()`` and
+``append()``, but an Iceberg table is named by a catalog identifier, not a
+path, so the resumable run does not take that branch yet (SURVEY.md §7
+"Iceberg absence").
 """
 
 from __future__ import annotations
 
+import posixpath
+
 import pandas as pd
-from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -35,7 +42,9 @@ from document_extraction_spark.plans.extract_pipeline import (
     METRICS_SCHEMA,
     build_extract_df,
     observe_metrics,
+    read_transcripts,
 )
+from document_extraction_spark.sources.tableio import TableIO
 
 MANIFEST_SCHEMA = T.StructType(
     [
@@ -52,17 +61,22 @@ def bucket_col(n_buckets: int):
     return F.pmod(F.xxhash64("conv_id"), F.lit(n_buckets)).cast("int")
 
 
+def _table(spark: SparkSession, path: str) -> tuple[TableIO, str]:
+    """The parquet table at ``path``: a ``TableIO`` over its parent
+    directory, and its name."""
+    root, name = posixpath.split(path.rstrip("/"))
+    return TableIO(spark, root or "."), name
+
+
 def read_manifest(spark: SparkSession, ckpt_path: str) -> DataFrame:
     """The committed manifest rows; a checkpoint path that does not exist
     yet reads as empty. Any other failure raises: an unreadable manifest
     read as empty would bypass the ``n_buckets`` guard and re-extract every
     bucket."""
-    try:
-        return spark.read.schema(MANIFEST_SCHEMA).parquet(ckpt_path)
-    except AnalysisException as ex:
-        if ex.getCondition() != "PATH_NOT_FOUND":
-            raise
-        return spark.createDataFrame([], MANIFEST_SCHEMA)
+    io, name = _table(spark, ckpt_path)
+    if io.exists(name):
+        return io.read(name)
+    return spark.createDataFrame([], MANIFEST_SCHEMA)
 
 
 def pending_buckets(spark: SparkSession, ckpt_path: str, n_buckets: int) -> list[int]:
@@ -81,7 +95,6 @@ def run_resumable(
     run_id: str,
     n_buckets: int = 16,
     wave_size: int = 8,
-    partitions_per_wave: int | None = None,
     max_waves: int | None = None,
 ) -> list[int]:
     """Process pending buckets in waves; returns buckets committed this call.
@@ -102,26 +115,23 @@ def run_resumable(
     if max_waves is not None:
         waves = waves[:max_waves]
 
-    src = spark.read.parquet(src_path).withColumn("bucket", bucket_col(n_buckets))
+    dst_io, dst_name = _table(spark, dst_path)
+    ckpt_io, ckpt_name = _table(spark, ckpt_path)
+    src = read_transcripts(spark, src_path).withColumn("bucket", bucket_col(n_buckets))
     for wave in waves:
         wave_df = src.filter(F.col("bucket").isin(wave))
-        extracted = build_extract_df(
-            wave_df.drop("bucket"), partitions=partitions_per_wave
-        ).withColumn("bucket", bucket_col(n_buckets))
+        extracted = build_extract_df(wave_df.drop("bucket")).withColumn(
+            "bucket", bucket_col(n_buckets)
+        )
         # the manifest metrics accumulate in the write itself: one
         # conditional aggregate per bucket, so an empty bucket totals 0
         observed, metrics = observe_metrics(
             extracted, {b: f"bucket = {b}" for b in wave}
         )
-        (
-            observed.sortWithinPartitions("conv_id", "turn_idx")
-            .write.mode("overwrite")
-            # pinned on the writer: relying on the session conf would wipe
-            # previously committed buckets under the default static mode
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("bucket")
-            .parquet(dst_path)
-        )  # dynamic mode: only buckets present in this wave are replaced
+        # only the buckets present in this wave are replaced
+        dst_io.overwrite_partitions(
+            observed.sortWithinPartitions("conv_id", "turn_idx"), dst_name, ["bucket"]
+        )
         # from pandas, as run() builds its metrics row: a local relation,
         # where a list of tuples becomes an RDD of one Python task per core;
         # the tz-aware commit time reads back as UTC whatever the host's zone
@@ -133,8 +143,8 @@ def run_resumable(
             ],
             columns=MANIFEST_SCHEMA.names,
         )
-        spark.createDataFrame(manifest_rows, MANIFEST_SCHEMA).coalesce(1).write.mode(
-            "append"
-        ).parquet(ckpt_path)
+        ckpt_io.append(
+            spark.createDataFrame(manifest_rows, MANIFEST_SCHEMA).coalesce(1), ckpt_name
+        )
         committed.extend(wave)
     return committed

@@ -32,7 +32,10 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from document_extraction_spark.functions import textstats as TS
-from document_extraction_spark.plans.extract_pipeline import build_extract_df
+from document_extraction_spark.plans.extract_pipeline import (
+    build_extract_df,
+    documents_as_turns,
+)
 
 
 # (SparkContext, min_quality, langs) -> the gate Columns built for them
@@ -98,14 +101,7 @@ def curate_documents(
     pairwise policy: a doc is dropped iff it is the larger id of a verified
     pair — for transitive-closure semantics run operators/dedup.dedup_clusters
     and keep one id per cluster)."""
-    turns = docs.select(
-        F.col(id_col).cast("string").alias("conv_id"),
-        F.lit(0).cast("int").alias("turn_idx"),
-        F.lit("user").alias("role"),
-        F.lit(None).cast("string").alias("tool"),
-        F.lit(None).cast("timestamp").alias("ts"),
-        F.col(text_col).alias("text"),
-    )
+    turns = documents_as_turns(docs, id_col, text_col)
     extracted = build_extract_df(turns).select(
         F.col("conv_id").cast("long").alias(id_col),
         F.col("text"),

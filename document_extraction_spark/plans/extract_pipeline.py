@@ -114,6 +114,22 @@ def read_transcripts(spark: SparkSession, path: str) -> DataFrame:
     return spark.read.parquet(path)
 
 
+def documents_as_turns(
+    docs: DataFrame, id_col: str = "doc_id", text_col: str = "text"
+) -> DataFrame:
+    """documents(id, text) -> the transcript-turn shape ``build_extract_df``
+    reads: one user turn per document, ``conv_id`` = the id as a string,
+    ``turn_idx`` 0."""
+    return docs.select(
+        F.col(id_col).cast("string").alias("conv_id"),
+        F.lit(0).cast("int").alias("turn_idx"),
+        F.lit("user").alias("role"),
+        F.lit(None).cast("string").alias("tool"),
+        F.lit(None).cast("timestamp").alias("ts"),
+        F.col(text_col).alias("text"),
+    )
+
+
 def build_extract_df(
     df: DataFrame,
     partitions: int | None = None,
@@ -274,7 +290,6 @@ def run(
     src_path: str,
     dst_path: str,
     partitions: int | None = None,
-    sort_within: bool = True,
     collect_metrics: bool = True,
 ) -> DataFrame | None:
     """Execute the full pipeline src -> dst (parquet dirs) in one pass: the
@@ -286,15 +301,15 @@ def run(
     per-partition view of the written table, use ``metrics_by_partition``
     on ``spark.read.parquet(dst_path)``."""
     df = read_transcripts(spark, src_path)
-    extracted = build_extract_df(df, partitions=partitions)
-    if sort_within:
-        # clustered output files: cheap local sort, no extra shuffle
-        extracted = extracted.sortWithinPartitions("conv_id", "turn_idx")
-    if not collect_metrics:
-        extracted.write.mode("overwrite").parquet(dst_path)
-        return None
-    extracted, metrics = observe_metrics(extracted)
+    # clustered output files: cheap local sort, no extra shuffle
+    extracted = build_extract_df(df, partitions=partitions).sortWithinPartitions(
+        "conv_id", "turn_idx"
+    )
+    if collect_metrics:
+        extracted, metrics = observe_metrics(extracted)
     extracted.write.mode("overwrite").parquet(dst_path)
+    if not collect_metrics:
+        return None
     # from pandas, the row becomes a local relation that collects without a
     # job; a list of tuples would run one Python task per core to decode it
     row = pd.DataFrame([metrics.get], columns=list(METRIC_NAMES))

@@ -50,7 +50,7 @@ def read_binary(spark: SparkSession, path: str, glob: str | None = None) -> Data
     return reader.load(path)
 
 
-def binary_to_turns(bin_df: DataFrame, paginate: bool = True) -> DataFrame:
+def binary_to_turns(bin_df: DataFrame) -> DataFrame:
     """Decode file bytes to text and fan out one turn per ``\\f``-delimited
     page: conv_id = full file path (scheme stripped), turn_idx = page
     ordinal, ts = file mtime.  The full path — not the basename — keys the
@@ -72,8 +72,7 @@ def binary_to_turns(bin_df: DataFrame, paginate: bool = True) -> DataFrame:
                 text = (bytes(content) if content is not None else b"").decode(
                     "utf-8", errors="replace"
                 )
-                pages = text.split("\f") if paginate else [text]
-                for i, page in enumerate(pages):
+                for i, page in enumerate(text.split("\f")):
                     rows.append((name, i, "doc", None, mtime, page))
             yield pd.DataFrame(
                 rows, columns=[f.name for f in TURNS_SCHEMA.fields]
@@ -83,16 +82,9 @@ def binary_to_turns(bin_df: DataFrame, paginate: bool = True) -> DataFrame:
     return pruned.mapInPandas(kernel, schema=TURNS_SCHEMA)
 
 
-def extract_binary_files(
-    spark: SparkSession,
-    path: str,
-    glob: str | None = None,
-    partitions: int | None = None,
-    paginate: bool = True,
-) -> DataFrame:
+def extract_binary_files(spark: SparkSession, path: str) -> DataFrame:
     """End-to-end: binary files -> per-page turns -> extraction pipeline
     (the reference's extract(pdf_path) loop, distributed)."""
     from document_extraction_spark.plans.extract_pipeline import build_extract_df
 
-    turns = binary_to_turns(read_binary(spark, path, glob), paginate=paginate)
-    return build_extract_df(turns, partitions=partitions)
+    return build_extract_df(binary_to_turns(read_binary(spark, path)))

@@ -12,8 +12,11 @@ Semantics kept identical across backends:
   present in ``df`` (Iceberg: ``overwritePartitions``; Parquet: dynamic
   partition overwrite)
 
-The checkpoint protocol (plans/checkpoint.py) only relies on these three
-verbs, so moving the engine onto a real lakehouse is a constructor change.
+The checkpoint protocol (plans/checkpoint.py) runs on these three verbs,
+plus ``exists`` to tell a missing manifest from a corrupt one: its parquet
+path goes through this class and writes nothing itself. Moving it onto
+Iceberg is not yet a constructor change, because an Iceberg table is named
+by a catalog identifier, while the resumable run takes paths.
 """
 
 from __future__ import annotations

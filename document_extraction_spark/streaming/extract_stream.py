@@ -15,8 +15,12 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.sql.streaming import StreamingQuery
 
 from document_extraction_spark.plans.extract_pipeline import build_extract_df
+
+# seconds a drained (availableNow) query may run before it counts as hung
+DRAIN_TIMEOUT_S = 300
 
 TRANSCRIPTS_SCHEMA = T.StructType(
     [
@@ -36,6 +40,18 @@ def read_transcript_stream(spark: SparkSession, src_dir: str,
     if max_files_per_trigger:
         reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
     return reader.parquet(src_dir)
+
+
+def await_drained(query: StreamingQuery) -> None:
+    """Block until ``query`` has terminated. A query still running after
+    ``DRAIN_TIMEOUT_S`` is stopped and raises ``TimeoutError`` naming it,
+    since its sink would hold only part of the rows."""
+    if not query.awaitTermination(DRAIN_TIMEOUT_S):
+        query.stop()
+        raise TimeoutError(
+            f"streaming query {query.name or query.id} did not drain within "
+            f"{DRAIN_TIMEOUT_S} s; stopped it"
+        )
 
 
 def extract_stream(sdf: DataFrame) -> DataFrame:

@@ -156,6 +156,26 @@ def test_token_count_regexp_equals_hof_split(docs):
     assert got and all(r["a"] == r["b"] for r in got)
 
 
+def test_py_tokens_equal_spark_tokens_on_whitespace_and_case_edges(spark):
+    """textstats.py_tokens, the tokenizer of every Python kernel, must equal
+    the JVM tokens(lower(col)) on each ASCII control char and space, the
+    Unicode spaces Python's \\s would match but Java's does not, and the
+    lowercasings that are not one char to one char (İ, word-final Σ)."""
+    from document_extraction_spark.functions.textstats import py_tokens, tokens
+
+    chars = [chr(c) for c in range(0x21)] + [
+        "\x85", "\xa0", "\u1680", *map(chr, range(0x2000, 0x200B)),
+        "\u2028", "\u2029", "\u202f", "\u205f", "\u3000", "\u0130",
+    ]
+    texts = [f"aA{c}Bb" for c in chars] + [
+        "".join(chars), f"x {''.join(chars)}y", "İstanbul ΟΔΟΣ ΣΑΣ. Σ",
+    ]
+    df = spark.createDataFrame(list(enumerate(texts)), "i int, t string")
+    got = {r["i"]: list(r["k"]) for r in
+           df.select("i", tokens(F.lower("t")).alias("k")).collect()}
+    assert {i: py_tokens(t) for i, t in enumerate(texts)} == got
+
+
 def test_myers_distances_match_spark_levenshtein(spark):
     """The vectorized Myers kernel must equal F.levenshtein exactly on
     adversarial strings: random ASCII, Unicode (incl. surrogates-adjacent

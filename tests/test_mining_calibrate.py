@@ -120,14 +120,27 @@ def test_srp_hub_property_holds(spark):
     assert got == {(0, 10)}
 
 
+def test_srp_zero_norm_vector_is_never_paired(spark):
+    """A zero vector has no cosine: it must not outrank real matches in the
+    SRP path, which then returns what the exact path returns."""
+    from document_extraction_spark.operators.mining import mutual_top1_srp
+
+    corpus = _vecs(spark, [(0, (0.0, 0.0)), (1, (1.0, 0.0)), (2, (0.0, 1.0))])
+    exact = sorted(tuple(r) for r in mutual_top1_pairs(corpus, corpus).collect())
+    srp = sorted(
+        tuple(r) for r in
+        mutual_top1_srp(corpus, corpus, n_planes=4, bands=4, dim=2).collect()
+    )
+    assert srp == exact == [(1, 1, 1.0), (2, 2, 1.0)]
+
+
 def test_bucket_partials_match_filter_agg_on_adversarial_pairs(spark):
     """The cogrouped per-bucket argmax partials + combine (the path
     mutual_top1_srp runs) must return the verdict of the window mutuality
     filter over the SAME candidate pairs — including the nasty cases: a
-    zero vector (NaN cosine — Spark ranks NaN above every double in both
-    the window sort and the struct max), duplicate right vectors (raw ties
-    break to the SMALLEST other id), and a pair colliding in two bands
-    (absorbed)."""
+    zero vector (no cosine: NULL in the JVM, ranked last and never paired),
+    duplicate right vectors (raw ties break to the SMALLEST other id), and
+    a pair colliding in two bands (absorbed)."""
     import numpy as np
 
     from document_extraction_spark.operators.mining import (
@@ -161,8 +174,8 @@ def test_bucket_partials_match_filter_agg_on_adversarial_pairs(spark):
 
     got = rows(_mutual_from_partials(_bucket_mutual_partials(lb, rb), None))
 
-    # reference scoring in numpy: the HOF cosine's per-dimension fold, NaN
-    # on zero norms (the HOF itself raises under ANSI division-by-zero)
+    # reference scoring in numpy: the HOF cosine's per-dimension fold, NULL
+    # on zero norms like the JVM cosine
     cand = lb.join(rb, "bucket").select("left_id", "right_id", "lvec", "rvec").collect()
     L = np.array([r["lvec"] for r in cand], np.float64)
     R = np.array([r["rvec"] for r in cand], np.float64)
@@ -174,7 +187,8 @@ def test_bucket_partials_match_filter_agg_on_adversarial_pairs(spark):
     with np.errstate(divide="ignore", invalid="ignore"):
         raw = dot / (np.sqrt(na) * np.sqrt(nb))
     scored = spark.createDataFrame(
-        [(r["left_id"], r["right_id"], float(x)) for r, x in zip(cand, raw)],
+        [(r["left_id"], r["right_id"], None if x != x else float(x))
+         for r, x in zip(cand, raw)],
         "left_id long, right_id long, _raw double",
     ).withColumn("cos", F.round("_raw", 4))
     want = rows(_mutual_filter(scored.dropDuplicates(["left_id", "right_id"]), None))
@@ -185,10 +199,11 @@ def test_bucket_partials_match_filter_agg_on_adversarial_pairs(spark):
     partials = {(p["_side"], p["id"]): p["other"]
                 for p in _bucket_mutual_partials(lb, rb).collect()}
     assert partials[(0, 2)] == 10
-    # NaN-high: the zero-vector left outranks left 2 for right 10, so the
-    # surviving pair for right 10 is the NaN one — present in BOTH paths
-    assert any(l == 0 and r == 10 for l, r, _ in got)
-    assert partials[(1, 10)] == 0
+    # no score: the zero-vector left never pairs, so right 10's argmax is
+    # left 2 and the two are mutual in BOTH paths
+    assert not any(l == 0 for l, _, _ in got)
+    assert (2, 10) in {(l, r) for l, r, _ in got}
+    assert partials[(1, 10)] == 2
 
 
 def test_bucket_partials_reject_unequal_vector_widths(spark):

@@ -45,7 +45,7 @@ def test_ppm_decode_known_bytes_exact():
     ppm = b"P6\n# a comment\n2 2\n255\n" + bytes(
         [255, 0, 0, 0, 255, 0, 0, 0, 255, 255, 255, 255]
     )
-    img = MM.real_decode(ppm, "image/x-portable-pixmap")
+    img = MM.decode_image(ppm, "image/x-portable-pixmap")
     want = np.array(
         [[[255, 0, 0], [0, 255, 0]], [[0, 0, 255], [255, 255, 255]]], dtype=np.uint8
     )

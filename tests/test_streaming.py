@@ -290,3 +290,24 @@ def test_streaming_dedup_within_watermark(spark, stream_src, tmp_path):
     assert n_raw == 2 * n_keys            # every key delivered twice
     assert out.count() == n_keys          # exactly once after dedup
     assert out.select("conv_id", "turn_idx").distinct().count() == n_keys
+
+
+def test_await_drained_stops_and_raises_on_a_stream_that_never_drains(
+    spark, monkeypatch
+):
+    """A query still running after DRAIN_TIMEOUT_S is stopped, and the
+    caller gets a TimeoutError naming it rather than a partial sink."""
+    monkeypatch.setattr(XS, "DRAIN_TIMEOUT_S", 2)
+    q = (
+        spark.readStream.format("rate").option("rowsPerSecond", 1).load()
+        .writeStream.format("memory")
+        .queryName("never_drains_t")
+        .trigger(processingTime="1 second")
+        .start()
+    )
+    try:
+        with pytest.raises(TimeoutError, match="never_drains_t"):
+            XS.await_drained(q)
+        assert not q.isActive
+    finally:
+        q.stop()
