@@ -1909,7 +1909,9 @@ def x_binary_extract(spark, sf_dir):
     """binaryFile source -> decode -> per-page turns -> extraction kernel
     (the reference's raw-PDF ingestion loop end-to-end, extractor.py:21-32;
     rows-only — page text equality vs the scalar oracle is pytest-pinned in
-    tests/test_binary_ingest.py)."""
+    tests/test_binary_ingest.py). The files live in a fresh temp directory,
+    so conv_id is made relative to it and ts (file mtime) is dropped: every
+    run returns the same rows."""
     import os
     import tempfile
 
@@ -1927,8 +1929,9 @@ def x_binary_extract(spark, sf_dir):
             f.write(body)
     out = extract_binary_files(spark, src)
     return (
-        out.withColumn("spans", F.to_json("spans"))
-        .drop("ts")  # file mtime: non-deterministic across runs
+        out.withColumn("conv_id", F.regexp_replace("conv_id", rf"^\Q{src}/\E", ""))
+        .withColumn("spans", F.to_json("spans"))
+        .drop("ts")
         .orderBy("conv_id", "turn_idx")
     )
 

@@ -19,6 +19,7 @@ repartitioning / Arrow batch size is a tested invariant (SURVEY.md §5.3).
 
 from __future__ import annotations
 
+import unicodedata
 from typing import Iterable
 
 import pandas as pd
@@ -139,7 +140,12 @@ def extract_batch_pdf(pdf: pd.DataFrame, max_chars: int | None = None) -> pd.Dat
         fail_l: list[bool] = []
         for s in raw[m]:
             blocks, nk, nd, pf = fn(s)
-            t, pf = _finalize_text(k, blocks, pf, s)
+            # both parsers emit whitespace-canonical blocks (HTML: words
+            # joined by one space; PDF: that, lines joined by one newline),
+            # so on NFC text normalize_one is the identity
+            t = "\n\n".join(blocks)
+            if pf or not t or not unicodedata.is_normalized("NFC", t):
+                t, pf = _finalize_text(k, blocks, pf, s)
             texts.append(t)
             kept_l.append(nk)
             drop_l.append(nd)

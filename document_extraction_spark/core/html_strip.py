@@ -15,14 +15,17 @@ Deterministic scoring rules (documented so the oracle is pinned):
 * link density  = anchor-text chars / total chars; ``> 0.33`` -> dropped;
 * text shorter than ``MIN_BLOCK_CHARS`` is dropped unless it is a heading.
 
-The parser is the stdlib ``html.parser`` streaming tokenizer — no DOM build,
-single pass, O(payload bytes); inside ``mapInPandas`` this runs batched over
-Arrow record batches.
+The one production tokenizer is a single regex pass over the payload that
+runs the block state machine in local variables — no DOM build, O(payload
+bytes); inside ``mapInPandas`` this runs batched over Arrow record batches.
+Its equality oracles, a stdlib ``html.parser`` tokenizer and the event-sink
+tokenizer it replaced, live in ``tests/html_oracles.py``.
 """
 
 from __future__ import annotations
 
-from html.parser import HTMLParser
+import re
+from html import unescape
 
 BOILERPLATE_TAGS = frozenset(
     {"nav", "footer", "header", "aside", "script", "style", "form", "noscript",
@@ -43,208 +46,108 @@ MIN_BLOCK_CHARS = 15
 
 
 _BLOCKISH = BLOCK_TAGS | BOILERPLATE_TAGS
+# end and start tags that never touch the block state: void elements, and a
+# stray script/style tag left by the rawtext strip below
+_INERT = VOID_TAGS | {"script", "style"}
 
-
-class _BlockSink:
-    """Shared block-building state machine: both the fast regex tokenizer and
-    the stdlib HTMLParser drive these three events, so scoring semantics are
-    identical by construction.
-
-    Hot-path bookkeeping is incremental: boilerplate ancestry and anchor
-    nesting are maintained as depth counters at push/pop time instead of
-    rescanning the open-tag stack per block/text node (the stack scan was
-    ~25% of kernel time in profiles)."""
-
-    def __init__(self) -> None:
-        self.stack: list[str] = []
-        self.blocks: list[dict] = []
-        self._cur: dict | None = None
-        self._boiler_depth = 0
-        self._anchor_depth = 0
-
-    def _flush(self) -> None:
-        if self._cur is not None:
-            self.blocks.append(self._cur)
-            self._cur = None
-
-    def _open_block(self, tag: str) -> None:
-        if self._cur is not None:
-            self.blocks.append(self._cur)
-        self._cur = {
-            "tag": tag,
-            "parts": [],
-            "anchor_chars": 0,
-            "boiler": self._boiler_depth > 0,
-        }
-
-    def start(self, tag: str) -> None:
-        if tag in VOID_TAGS:
-            if self._cur is not None and (tag == "br" or tag == "hr"):
-                self._cur["parts"].append("\n")
-            return
-        self.stack.append(tag)
-        if tag in BOILERPLATE_TAGS:
-            self._boiler_depth += 1
-        elif tag == "a":
-            self._anchor_depth += 1
-        if tag in _BLOCKISH:
-            self._open_block(tag)
-
-    def end(self, tag: str) -> None:
-        # pop to the matching open tag (tolerates misnesting deterministically)
-        stack = self.stack
-        if tag in stack:
-            while stack:
-                top = stack.pop()
-                if top in BOILERPLATE_TAGS:
-                    self._boiler_depth -= 1
-                elif top == "a":
-                    self._anchor_depth -= 1
-                if top == tag:
-                    break
-        if tag in _BLOCKISH:
-            self._flush()
-
-    def data(self, data: str) -> None:
-        stripped = data.strip()
-        if not stripped:
-            return
-        if self._cur is None:
-            self._open_block("_text")
-        self._cur["parts"].append(data)
-        if self._anchor_depth > 0:
-            self._cur["anchor_chars"] += len(stripped)
-
-
-class _BlockParser(HTMLParser):
-    """stdlib-tokenizer variant — kept as the differential-testing reference
-    for the fast regex tokenizer below. script/style elements are fully
-    invisible (tag AND content), matching the fast path's wholesale elision:
-    an inline ``<p>a <script>..</script> b</p>`` must not split the block."""
-
-    _RAWTEXT = ("script", "style")
-
-    def __init__(self) -> None:
-        super().__init__(convert_charrefs=True)
-        self.sink = _BlockSink()
-        self._suppress = 0
-
-    def handle_starttag(self, tag: str, attrs) -> None:  # noqa: ANN001
-        tag = tag.lower()
-        if tag in self._RAWTEXT:
-            self._suppress += 1
-            return
-        self.sink.start(tag)
-
-    def handle_endtag(self, tag: str) -> None:
-        tag = tag.lower()
-        if tag in self._RAWTEXT:
-            self._suppress = max(self._suppress - 1, 0)
-            return
-        self.sink.end(tag)
-
-    def handle_data(self, data: str) -> None:
-        if self._suppress:
-            return
-        self.sink.data(data)
-
-
-import re as _re
-from html import unescape as _unescape
-
-# raw-text elements removed wholesale (HTMLParser never emits their content
-# as data when they are suppressed above); comments likewise. An unterminated
-# rawtext element swallows to end-of-payload, matching the stdlib tokenizer's
-# suppress-to-EOF behavior.
-_RE_RAWTEXT = _re.compile(r"(?is)<(script|style)\b[^>]*>.*?</\1\s*>")
-_RE_RAWTEXT_OPEN = _re.compile(r"(?is)<(?:script|style)\b[^>]*>.*\Z")
-_RE_COMMENT = _re.compile(r"<!--.*?-->", _re.S)
-_RAWTEXT_NAMES = ("script", "style")
+# raw-text elements removed wholesale, comments likewise. An unterminated
+# rawtext element swallows to end-of-payload, like html.parser, which emits
+# none of its content as data.
+_RE_RAWTEXT = re.compile(r"(?is)<(script|style)\b[^>]*>.*?</\1\s*>")
+_RE_RAWTEXT_OPEN = re.compile(r"(?is)<(?:script|style)\b[^>]*>.*\Z")
+_RE_COMMENT = re.compile(r"<!--.*?-->", re.S)
 # one pass over the payload: a tag token or a text run. Attribute values may
 # contain '>' inside quotes — the attr body alternation respects quoting.
-_RE_TOKEN = _re.compile(
+_RE_TOKEN = re.compile(
     r"""<\s*(?P<close>/?)\s*(?P<name>[a-zA-Z][a-zA-Z0-9]*)"""
     r"""(?P<attrs>(?:"[^"]*"|'[^']*'|[^>"'])*)>"""
     r"""|(?P<text>[^<]+)""",
-    _re.S,
+    re.S,
 )
 
 
-def _tokenize_fast(payload: str, sink: _BlockSink) -> None:
+def _blocks(payload: str) -> list[list]:
+    """Tokenize one payload into blocks ``[tag, text parts, anchor chars,
+    inside boilerplate]``, in opening order.
+
+    A block opens at a block-level or boilerplate start tag, or at text
+    outside any open block (tag ``_text``), and ends at a block-level end
+    tag. An end tag pops the open-tag stack down to its match, which
+    tolerates misnesting deterministically. Boilerplate ancestry and anchor
+    nesting are depth counters kept at push/pop time. A self-closing
+    ``<tag/>`` pushes and pops at once, so all it leaves is a block-level
+    tag's end. Void tags add nothing: ``<br>`` would only add whitespace,
+    and scoring joins the parts on whitespace anyway."""
     payload = _RE_RAWTEXT_OPEN.sub("", _RE_COMMENT.sub("", _RE_RAWTEXT.sub("", payload)))
-    # bind hot callables once; fetch all four groups in one C call per token
-    # (profiles showed m.group() dominating the loop)
-    sink_data = sink.data
-    sink_start = sink.start
-    sink_end = sink.end
-    for m in _RE_TOKEN.finditer(payload):
-        close, name, attrs, text = m.group(1, 2, 3, 4)
-        if text is not None:
+    blocks: list[list] = []
+    stack: list[str] = []
+    cur: list | None = None
+    boiler = anchor = 0
+    for close, name, attrs, text in _RE_TOKEN.findall(payload):
+        if text:
             if "&" in text:
-                text = _unescape(text)
-            sink_data(text)
+                text = unescape(text)
+            text = text.strip()
+            if not text:
+                continue
+            if cur is None:
+                cur = ["_text", [], 0, boiler > 0]
+                blocks.append(cur)
+            cur[1].append(text)
+            if anchor:
+                cur[2] += len(text)
             continue
         name = name.lower()
-        if name in _RAWTEXT_NAMES:
-            continue  # stray </script> etc. — invisible, like the stdlib path
-        if close:
-            sink_end(name)
-        else:
-            sink_start(name)
-            if name not in VOID_TAGS and attrs.rstrip().endswith("/"):
-                sink_end(name)  # self-closing <tag/>
-
-
-def _score_blocks(blocks: list[dict]) -> tuple[list[str], int, int]:
-    kept: list[str] = []
-    n_kept = 0
-    n_dropped = 0
-    for blk in blocks:
-        text = " ".join(" ".join(blk["parts"]).split())
-        if not text:
+        if name in _INERT:
             continue
-        chars = len(text)
-        link_density = blk["anchor_chars"] / chars if chars else 0.0
-        drop = (
-            blk["boiler"]
-            or blk["tag"] in BOILERPLATE_TAGS
-            or link_density > MAX_LINK_DENSITY
-            or (chars < MIN_BLOCK_CHARS and blk["tag"] not in HEADING_TAGS)
-        )
-        if drop:
-            n_dropped += 1
+        if close:
+            if name in stack:
+                while True:
+                    top = stack.pop()
+                    if top in BOILERPLATE_TAGS:
+                        boiler -= 1
+                    elif top == "a":
+                        anchor -= 1
+                    if top == name:
+                        break
+            if name in _BLOCKISH:
+                cur = None
+        elif attrs.rstrip().endswith("/"):
+            if name in _BLOCKISH:
+                cur = None
         else:
-            n_kept += 1
-            kept.append(text)
-    return kept, n_kept, n_dropped
+            stack.append(name)
+            if name in BOILERPLATE_TAGS:
+                boiler += 1
+            elif name == "a":
+                anchor += 1
+            if name in _BLOCKISH:
+                cur = [name, [], 0, boiler > 0]
+                blocks.append(cur)
+    return blocks
 
 
 def html_strip_one(payload: str) -> tuple[list[str], int, int, bool]:
-    """Strip boilerplate from one HTML payload (fast regex tokenizer; the
-    stdlib-tokenizer variant html_strip_one_stdlib is the differential
-    reference — ~5x slower, same semantics on well-formed markup).
+    """Strip boilerplate from one HTML payload.
 
     Returns ``(kept_block_texts, n_kept, n_dropped, parse_failed)``.
+    The drop test needs no check of a block's own tag: a boilerplate tag
+    raises the boilerplate depth before it opens its block.
     """
-    sink = _BlockSink()
     try:
-        _tokenize_fast(payload, sink)
+        blocks = _blocks(payload)
     except Exception:
         return [], 0, 0, True
-    sink._flush()
-    kept, n_kept, n_dropped = _score_blocks(sink.blocks)
-    return kept, n_kept, n_dropped, False
-
-
-def html_strip_one_stdlib(payload: str) -> tuple[list[str], int, int, bool]:
-    """Differential reference using html.parser's tokenizer."""
-    parser = _BlockParser()
-    try:
-        parser.feed(payload)
-        parser.close()
-    except Exception:
-        return [], 0, 0, True
-
-    parser.sink._flush()
-    kept, n_kept, n_dropped = _score_blocks(parser.sink.blocks)
-    return kept, n_kept, n_dropped, False
+    kept: list[str] = []
+    n_dropped = 0
+    for tag, parts, anchor_chars, boiler in blocks:
+        text = " ".join(" ".join(parts).split())
+        if not text:
+            continue
+        chars = len(text)
+        if (boiler or anchor_chars / chars > MAX_LINK_DENSITY
+                or (chars < MIN_BLOCK_CHARS and tag not in HEADING_TAGS)):
+            n_dropped += 1
+        else:
+            kept.append(text)
+    return kept, len(kept), n_dropped, False

@@ -43,11 +43,14 @@ _NONEMPTY_LINE = re.compile(r"(?m)^[^\S\n]*\S")
 
 def _parse_tokens(page_text: str) -> tuple[list[tuple[str, float, float]], int]:
     """One-pass token parse; a non-empty line that isn't a well-formed
-    ``token@x,y`` counts as dropped (same semantics as per-line matching)."""
-    matches = _TOKEN_ML.findall(page_text)
-    tokens = [(w, float(x), float(y)) for w, x, y in matches]
-    bad = len(_NONEMPTY_LINE.findall(page_text)) - len(tokens)
-    return tokens, bad
+    ``token@x,y`` counts as dropped (same semantics as per-line matching).
+    A match spans one whole line, so when every line matched there is no
+    non-empty line left to count."""
+    tokens = [(w, float(x), float(y)) for w, x, y in _TOKEN_ML.findall(page_text)]
+    n = len(tokens)
+    if n == page_text.count("\n") + 1:
+        return tokens, 0
+    return tokens, len(_NONEMPTY_LINE.findall(page_text)) - n
 
 
 def _segments(tokens: list[tuple[str, float, float]]) -> list[dict]:

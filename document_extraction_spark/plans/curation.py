@@ -55,7 +55,11 @@ def _gate_columns(sc, min_quality: float, langs: tuple[str, ...]) -> tuple:
     The token array, its lowered form and the four hit counts are
     projection outputs because Catalyst only shares a subexpression that a
     projection names: inlined, the interpreted tokenize and filter HOFs ran
-    up to 9x per row. The ``_from`` variants apply the expression tails of
+    up to 9x per row. The keep predicate loses that sharing: the optimizer
+    pushes ``.filter(keep)`` below the four projections with their aliases
+    substituted, so the optimized plan's bottom ``Filter`` re-runs the
+    tokenize, lower and stopword HOFs (``size(filter(split(text…``) on
+    every row. The ``_from`` variants apply the expression tails of
     ``quality_score`` and ``lang_guess``, so every gate value is theirs."""
     key = (sc, min_quality, langs)
     cols = _GATE_COLUMNS.get(key)

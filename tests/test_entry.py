@@ -34,3 +34,23 @@ def test_queries_run_at_sf0001(spark, testdata_dir):
         df = fn(spark, sf)
         assert df.columns, name
         df.limit(1).collect()
+
+
+def test_binary_extract_rows_repeat(spark):
+    """conv_id is relative to the query's fresh temp directory, so two runs
+    return equal rows."""
+    first = E.x_binary_extract(spark, None).collect()
+    second = E.x_binary_extract(spark, None).collect()
+    assert first and first == second
+    assert {r["conv_id"] for r in first} == {"fenced.txt", "junk.bin", "note.txt", "report.txt"}
+
+
+def test_check_oracles_rejects_unknown_names():
+    import os
+    import subprocess
+
+    tool = os.path.join(os.path.dirname(E.__file__), "tools", "check_oracles.py")
+    res = subprocess.run([sys.executable, tool, "q_no_such_query", "--help"],
+                         capture_output=True, text=True, timeout=300, cwd="/")
+    assert res.returncode == 2
+    assert "--help q_no_such_query" in res.stderr

@@ -1,16 +1,17 @@
-"""Differential test: the fast regex tokenizer and the stdlib html.parser
-tokenizer produce identical block scoring on the engine's payload
-distribution (generator corpus) and on adversarial hand-written markup."""
+"""Differential test: the production tokenizer, the stdlib html.parser
+tokenizer and the event-sink regex tokenizer it replaced
+(tests/html_oracles.py) produce identical block scoring on the engine's
+payload distribution (generator corpus) and on adversarial hand-written
+markup."""
 
 from __future__ import annotations
 
 import numpy as np
 import pytest
 
-from document_extraction_spark.core.html_strip import (
-    html_strip_one,
-    html_strip_one_stdlib,
-)
+from html_oracles import html_strip_one_sink, html_strip_one_stdlib
+
+from document_extraction_spark.core.html_strip import html_strip_one
 from document_extraction_spark.sources.transcripts import _html_payload
 
 ADVERSARIAL = [
@@ -34,11 +35,26 @@ ADVERSARIAL = [
     # stray close tag without an opener is invisible in both
     "<p>text before a stray close</p></script><p>text after the stray close tag</p>",
 ]
+# misnested and self-closed markup: end tags pop to their match, <div/>
+# opens and closes at once
+MISNESTED = ["<p>a <b>b</p> c</b>", "<nav>x<a>y</nav> z</a>", "<div/>"]
 
 
-@pytest.mark.parametrize("payload", ADVERSARIAL)
+@pytest.mark.parametrize("payload", ADVERSARIAL + MISNESTED)
 def test_adversarial_markup_agrees(payload):
     assert html_strip_one(payload) == html_strip_one_stdlib(payload)
+
+
+@pytest.mark.parametrize("payload", ADVERSARIAL + MISNESTED)
+def test_state_machine_equals_sink_tokenizer(payload):
+    assert html_strip_one(payload) == html_strip_one_sink(payload)
+
+
+def test_state_machine_equals_sink_tokenizer_on_corpus():
+    rng = np.random.default_rng(321)
+    for _ in range(1000):
+        payload = _html_payload(rng)
+        assert html_strip_one(payload) == html_strip_one_sink(payload)
 
 
 def test_generator_corpus_agrees():

@@ -4,12 +4,15 @@ guarantee at the pure-kernel level."""
 
 from __future__ import annotations
 
+import re
+
 import pandas as pd
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
 from document_extraction_spark.core import classify as C
 from document_extraction_spark.core import normalize as N
+from document_extraction_spark.core import pdf_layout as PL
 from document_extraction_spark.core.extract import (
     _finalize_text,
     extract_batch_pdf,
@@ -48,12 +51,16 @@ def test_extract_batch_equals_rowwise_oracle(cases):
     pdf = pd.DataFrame({"conv_id": [str(i) for i in range(len(cases))], "text": cases})
     out = extract_batch_pdf(pdf)
     for i, raw in enumerate(cases):
-        exp = extract_one(raw)
-        assert out["text"].iloc[i] == exp["text"]
-        assert out["payload_kind"].iloc[i] == exp["payload_kind"]
-        assert bool(out["parse_failed"].iloc[i]) == exp["parse_failed"]
-        got_spans = list(zip(out["span_starts"].iloc[i], out["span_ends"].iloc[i]))
-        assert got_spans == [(s["start"], s["end"]) for s in exp["spans"]]
+        _assert_row_equals_oracle(out.iloc[i], extract_one(raw))
+
+
+def _assert_row_equals_oracle(row, exp):
+    """Every result field of one extract_batch_pdf row equals extract_one's."""
+    got_spans = list(zip(row["span_starts"], row["span_ends"]))
+    assert got_spans == [(s["start"], s["end"]) for s in exp["spans"]]
+    for k, v in exp.items():
+        if k != "spans":
+            assert row[k] == v, k
 
 
 @given(FENCY)
@@ -100,3 +107,66 @@ def test_finalize_text_equals_per_block_normalize(kind, blocks, parse_failed, ra
     assert _finalize_text(kind, blocks, parse_failed, raw) == _finalize_text_per_block(
         kind, blocks, parse_failed, raw
     )
+
+
+# parser payloads whose text comes from EDGY: FENCY almost never classifies
+# as HTML or PDF, so it cannot reach the parsed rows' skip of the second
+# normalize. Padding words let blocks pass the length gate and be kept.
+PARSED_TEXT = st.one_of(
+    EDGY,
+    st.tuples(EDGY, st.just(" enough words to keep "), EDGY).map("".join),
+    st.sampled_from(["&amp; &nbsp;x", "e&#769;", "caf&eacute; au lait long enough"]),
+)
+HTML_PAYLOAD = st.lists(
+    st.one_of(
+        PARSED_TEXT,
+        st.sampled_from(
+            ["<p>", "</p>", "<div>", "</div>", "<h2>", "</h2>", "<li>", "</li>",
+             "<b>", "</b>", "<a href='x'>", "</a>", "<nav>", "</nav>",
+             "<footer>", "</footer>", "<br>", "<hr/>", "<div/>", "<P>", "</P>",
+             "<script>x<p>y</p></script>", "<!-- c -->"]
+        ),
+    ),
+    max_size=16,
+).map(lambda pieces: "<p>" + "".join(pieces))
+# the first line makes the payload classify as PDF; later lines may be
+# malformed (a word with whitespace), blank, or page breaks
+PDF_LINE = st.one_of(
+    st.tuples(EDGY, st.integers(0, 400), st.integers(0, 200)).map(
+        lambda t: f"{t[0]}@{t[1]},{t[2]}"
+    ),
+    st.tuples(EDGY, st.integers(0, 400)).map(lambda t: f"{t[0]}x@{t[1]}.5,12"),
+    st.sampled_from(["", "\f", "  ", "not a token"]),
+)
+PDF_PAYLOAD = st.lists(PDF_LINE, max_size=20).map(lambda ls: "\n".join(["start@0,0", *ls]))
+
+
+@given(st.lists(st.one_of(HTML_PAYLOAD, PDF_PAYLOAD), min_size=1, max_size=8))
+@settings(max_examples=300, deadline=None)
+def test_parsed_rows_equal_rowwise_oracle(cases):
+    out = extract_batch_pdf(pd.DataFrame({"text": cases}))
+    for i, raw in enumerate(cases):
+        exp = extract_one(raw)
+        assert exp["payload_kind"] in (C.KIND_HTML, C.KIND_PDF)
+        _assert_row_equals_oracle(out.iloc[i], exp)
+
+
+_TOKEN_LINE = re.compile(r"[^\S\n]*(\S+)@(-?\d+(?:\.\d+)?),(-?\d+(?:\.\d+)?)[^\S\n]*")
+
+
+def _parse_tokens_per_line(page_text):
+    tokens, bad = [], 0
+    for line in page_text.split("\n"):
+        m = _TOKEN_LINE.fullmatch(line)
+        if m:
+            tokens.append((m[1], float(m[2]), float(m[3])))
+        elif line.strip():
+            bad += 1
+    return tokens, bad
+
+
+@given(PDF_PAYLOAD)
+@settings(max_examples=300, deadline=None)
+def test_parse_tokens_equals_per_line_match(payload):
+    for page in payload.split("\f"):
+        assert PL._parse_tokens(page) == _parse_tokens_per_line(page)

@@ -3,14 +3,16 @@ query on Spark and its oracle on DuckDB at sf0.01, compare row count, column
 names, and order-insensitive values. Exits nonzero on any mismatch.
 
 Usage: python tools/check_oracles.py [query ...]
+A name that matches no query exits 2 before anything runs.
 """
 
 from __future__ import annotations
 
 import math
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import duckdb  # noqa: E402
 import pandas as pd  # noqa: E402
@@ -119,6 +121,10 @@ def compare(name: str, sdf: pd.DataFrame, odf: pd.DataFrame) -> list[str]:
 def main() -> int:
     only = set(sys.argv[1:])
     qs = E.queries()
+    unknown = sorted(only - qs.keys())
+    if unknown:
+        print(f"unknown query name(s): {' '.join(unknown)}", file=sys.stderr)
+        return 2
     oracles = E.oracle_sql()
 
     con = duckdb.connect()
