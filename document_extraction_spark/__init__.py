@@ -13,9 +13,9 @@ Spark pipeline:
 * Span normalization incl. the reference's exact markdown-fence strip slice
   semantics (reference extractor.py:112-118).
 
-Executed as vectorized pandas/Arrow kernels inside ``mapInPandas`` over
-transcript tables ``(conv_id, turn_idx, role, text, tool, ts)``, with salted
-partitioning, checkpoint/resume, and per-partition lineage metrics.
+Executed as per-batch pandas/Arrow kernels inside ``mapInPandas`` over
+transcript tables ``(conv_id, turn_idx, role, text, tool, ts)``, with per-turn
+hash partitioning, checkpoint/resume, and per-partition lineage metrics.
 """
 
 __version__ = "0.1.0"

@@ -1,6 +1,6 @@
 """Payload classification (operator O23 in SURVEY.md §2.2).
 
-Cheap batched byte/pattern pass deciding ``html`` / ``pdf`` / ``plain`` per
+Cheap byte/pattern test deciding ``html`` / ``pdf`` / ``plain`` per
 turn — the engine's dispatch step replacing the reference's implicit "every
 input is a PDF" assumption (/root/reference/src/pdf_extractor/extractor.py:23).
 
@@ -10,6 +10,9 @@ Rules (checked in order, deterministic):
 2. ``pdf``   — first non-empty (stripped) line matches the deterministic
    textual page representation ``token@x,y`` (SURVEY.md §2.2 O21).
 3. ``plain`` — everything else (markdown, fenced JSON, prose, empty).
+
+:func:`classify_one` is the production classifier; :func:`classify_series`
+is its pandas equality oracle (and the ``x_pandas_udf_classify`` UDF body).
 """
 
 from __future__ import annotations
@@ -34,7 +37,7 @@ _FIRST_LINE = re.compile(r"\A\s*([^\n]*[^\s\n][^\n]*)\n?", re.S)
 
 
 def classify_one(s: str | None) -> str:
-    """Scalar oracle classifier."""
+    """Classify one payload."""
     if not s:
         return KIND_PLAIN
     if _HTML_TAG.search(s):
@@ -46,7 +49,7 @@ def classify_one(s: str | None) -> str:
 
 
 def classify_series(ser: pd.Series) -> pd.Series:
-    """Vectorized classifier over an Arrow batch column."""
+    """Pandas oracle of :func:`classify_one` over a column."""
     s = ser.fillna("")
     is_html = s.str.contains(_HTML_TAG, regex=True)
     first = s.str.extract(_FIRST_LINE, expand=False).fillna("").str.strip()

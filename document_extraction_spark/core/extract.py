@@ -7,11 +7,10 @@ client.py:37-38 orchestrated by extractor.py:40-132). Two implementations:
 * :func:`extract_one` — scalar, row-wise, simple Python. This is the
   **reference oracle** the Spark output must match byte-for-byte
   (north rule: per-turn text equality under stable turn ordering).
-* :func:`extract_batch_pdf` — vectorized over a pandas batch (one Arrow
-  record batch inside ``mapInPandas``). The plain path is fully vectorized
-  pandas ``str`` ops; the html/pdf paths run the streaming parsers per
-  payload (string parsing is inherently per-string) but batched, with all
-  surrounding bookkeeping vectorized.
+* :func:`extract_batch_pdf` — one pandas batch (one Arrow record batch
+  inside ``mapInPandas``) in one pass over its payloads, building the
+  result frame once. Parsed rows skip the oracle's second normalize where
+  it is the identity.
 
 Both must be **stateless across rows and batches**: equality under any
 repartitioning / Arrow batch size is a tested invariant (SURVEY.md §5.3).
@@ -88,8 +87,46 @@ def extract_one(raw: str | None) -> dict:
     return _finalize(kind, blocks, n_kept, n_dropped, failed, raw)
 
 
+# the kernel's result columns in output order, with their frame dtypes
+_RESULT_DTYPES = dict(
+    payload_kind=object, text=object, span_starts=object, span_ends=object,
+    n_blocks_kept="int64", n_blocks_dropped="int64", parse_failed=bool,
+    truncated=bool, bytes_in="int64", bytes_out="int64",
+)
+
+
+def _extract_row(raw: str | None, max_chars: int | None) -> tuple:
+    """One payload -> its result columns, in ``_RESULT_DTYPES`` order."""
+    raw = raw or ""
+    # lineage metric: bytes_in reports the RAW input size, pre-truncation —
+    # post-truncation it would under-report exactly the rows the cap hit
+    bytes_in = len(raw.encode("utf-8"))
+    truncated = max_chars is not None and len(raw) > max_chars
+    if truncated:
+        raw = raw[:max_chars]
+    kind = C.classify_one(raw)
+    if kind == C.KIND_PLAIN:
+        text = N.normalize_one(raw)
+        n_kept, n_dropped, failed = (1 if text else 0), 0, False
+    else:
+        parse = H.html_strip_one if kind == C.KIND_HTML else P.pdf_layout_one
+        blocks, n_kept, n_dropped, failed = parse(raw)
+        # both parsers emit whitespace-canonical blocks (HTML: words joined
+        # by one space; PDF: that, lines joined by one newline), so on NFC
+        # text normalize_one is the identity
+        text = "\n\n".join(blocks)
+        if failed or not text or not unicodedata.is_normalized("NFC", text):
+            text, failed = _finalize_text(kind, blocks, failed, raw)
+    # spans as primitive offset arrays: Arrow converts list<int32> an order
+    # of magnitude faster than list<struct>; the (kind,start,end) struct is
+    # assembled JVM-side in build_extract_df (measured ~33% kernel win)
+    starts, ends = _paragraph_offsets(text)
+    return (kind, text, starts, ends, n_kept, n_dropped, failed, truncated,
+            bytes_in, len(text.encode("utf-8")))
+
+
 def extract_batch_pdf(pdf: pd.DataFrame, max_chars: int | None = None) -> pd.DataFrame:
-    """Vectorized extraction over one pandas batch.
+    """Extraction over one pandas batch: one pass over its payloads.
 
     Returns ``pdf`` with the ``text`` payload column replaced by the
     extracted text and the kernel's result columns added. Row order and
@@ -102,85 +139,9 @@ def extract_batch_pdf(pdf: pd.DataFrame, max_chars: int | None = None) -> pd.Dat
     ``truncated`` — opt-in, off by default (the default preserves per-turn
     equality with the uncapped reference).
     """
-    raw = pdf["text"].fillna("").astype("object")
-    # lineage metric: bytes_in reports the RAW input size, pre-truncation —
-    # post-truncation it would under-report exactly the rows the cap hit
-    bytes_in = raw.str.encode("utf-8").str.len().astype("int64")
-    truncated = pd.Series(False, index=raw.index, dtype="bool")
-    if max_chars is not None:
-        lens = raw.str.len()
-        over = lens > max_chars
-        if over.any():
-            truncated[over] = True
-            raw = raw.mask(over, raw.str.slice(0, max_chars))
-    kind = C.classify_series(raw)
-
-    text = pd.Series("", index=raw.index, dtype="object")
-    n_kept = pd.Series(0, index=raw.index, dtype="int64")
-    n_dropped = pd.Series(0, index=raw.index, dtype="int64")
-    failed = pd.Series(False, index=raw.index, dtype="bool")
-
-    # --- plain path: fully vectorized pandas str ops ---------------------
-    m_plain = kind == C.KIND_PLAIN
-    if m_plain.any():
-        norm = N.normalize_series(raw[m_plain])
-        text.loc[m_plain] = norm
-        n_kept.loc[m_plain] = (norm.str.len() > 0).astype("int64")
-
-    # --- html / pdf paths: streaming parsers, batched ---------------------
-    # _finalize_text only: spans/byte metrics are computed vectorized below,
-    # so the per-row hot loop does no work that gets discarded
-    for m, fn, k in ((kind == C.KIND_HTML, H.html_strip_one, C.KIND_HTML),
-                     (kind == C.KIND_PDF, P.pdf_layout_one, C.KIND_PDF)):
-        if not m.any():
-            continue
-        texts: list[str] = []
-        kept_l: list[int] = []
-        drop_l: list[int] = []
-        fail_l: list[bool] = []
-        for s in raw[m]:
-            blocks, nk, nd, pf = fn(s)
-            # both parsers emit whitespace-canonical blocks (HTML: words
-            # joined by one space; PDF: that, lines joined by one newline),
-            # so on NFC text normalize_one is the identity
-            t = "\n\n".join(blocks)
-            if pf or not t or not unicodedata.is_normalized("NFC", t):
-                t, pf = _finalize_text(k, blocks, pf, s)
-            texts.append(t)
-            kept_l.append(nk)
-            drop_l.append(nd)
-            fail_l.append(pf)
-        idx = raw.index[m]
-        text.loc[m] = pd.Series(texts, index=idx, dtype="object")
-        n_kept.loc[m] = pd.Series(kept_l, index=idx, dtype="int64")
-        n_dropped.loc[m] = pd.Series(drop_l, index=idx, dtype="int64")
-        failed.loc[m] = pd.Series(fail_l, index=idx, dtype="bool")
-
-    # spans as primitive offset arrays: Arrow converts list<int32> an order
-    # of magnitude faster than list<struct>; the (kind,start,end) struct is
-    # assembled JVM-side in build_extract_df (measured ~33% kernel win)
-    starts_col: list[list[int]] = []
-    ends_col: list[list[int]] = []
-    for t in text:
-        starts, ends = _paragraph_offsets(t)
-        starts_col.append(starts)
-        ends_col.append(ends)
-
-    out = pd.DataFrame(index=pdf.index)
-    for c in pdf.columns:
-        if c != "text":
-            out[c] = pdf[c]
-    out["payload_kind"] = kind
-    out["text"] = text
-    out["span_starts"] = starts_col
-    out["span_ends"] = ends_col
-    out["n_blocks_kept"] = n_kept
-    out["n_blocks_dropped"] = n_dropped
-    out["parse_failed"] = failed
-    out["truncated"] = truncated
-    out["bytes_in"] = bytes_in
-    out["bytes_out"] = text.str.encode("utf-8").str.len().astype("int64")
-    return out
+    rows = [_extract_row(raw, max_chars) for raw in pdf["text"]]
+    res = pd.DataFrame(rows, index=pdf.index, columns=list(_RESULT_DTYPES))
+    return pd.concat([pdf.drop(columns="text"), res.astype(_RESULT_DTYPES)], axis=1)
 
 
 def _paragraph_offsets(text: str) -> tuple[list[int], list[int]]:

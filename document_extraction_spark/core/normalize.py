@@ -14,8 +14,9 @@ Pipeline per payload string:
 5. Collapse 3+ consecutive newlines to exactly 2 (paragraph break).
 6. Overall strip.
 
-Both a scalar (oracle) and a vectorized pandas implementation are provided;
-they must agree byte-for-byte.
+:func:`normalize_one` is the production implementation. The pandas
+:func:`normalize_series` / :func:`fence_strip_series` are its independent
+equality oracle, which no production path calls; they agree byte-for-byte.
 """
 
 from __future__ import annotations
@@ -58,7 +59,7 @@ def normalize_one(s: str | None, fence: bool = True) -> str:
 
 
 def fence_strip_series(ser: pd.Series) -> pd.Series:
-    """Vectorized fence strip; sequential masks replicate the scalar slices."""
+    """Pandas oracle of :func:`fence_strip_one` (masks replicate its slices)."""
     s = ser.fillna("").str.strip()
     m = s.str.startswith("```json")
     s = s.mask(m, s.str.slice(7))
@@ -70,7 +71,7 @@ def fence_strip_series(ser: pd.Series) -> pd.Series:
 
 
 def normalize_series(ser: pd.Series) -> pd.Series:
-    """Vectorized span normalization over an Arrow batch column."""
+    """Pandas oracle of :func:`normalize_one` over a column."""
     s = fence_strip_series(ser).str.normalize("NFC")
     s = s.str.replace("\r\n", "\n", regex=False).str.replace("\r", "\n", regex=False)
     s = s.str.replace(_RE_HWS_RUN, " ", regex=True)

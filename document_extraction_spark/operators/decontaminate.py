@@ -151,8 +151,8 @@ def semantic_decontaminate(
     ``similarity.MAX_BROADCAST_ROWS``, where the exact kernel refuses to
     collect them. Wherever the exact kernel runs it is the faster path, by
     about 11x: 1.52 s against the prefilter's 17.1 s at 1932 x 118 corpus x
-    eval rows (``bench/decon_bench.py --rep 1 1 --cpus 2``), and 2.23 s
-    against 20.8 s at 18870 x 1180 on 8 CPUs (BENCH/DECON_SRP.json).
+    eval rows on 2 CPUs (BENCH/COSINE_FOLD.json), and 2.23 s against 20.8 s
+    at 18870 x 1180 on 8 CPUs (BENCH/DECON_SRP.json).
 
     The prefilter gates the cosine behind banded signed-random-projection
     buckets (``similarity.srp_band_buckets``, ``prefilter_bands`` bands of

@@ -55,12 +55,14 @@ def _gate_columns(sc, min_quality: float, langs: tuple[str, ...]) -> tuple:
     The token array, its lowered form and the four hit counts are
     projection outputs because Catalyst only shares a subexpression that a
     projection names: inlined, the interpreted tokenize and filter HOFs ran
-    up to 9x per row. The keep predicate loses that sharing: the optimizer
-    pushes ``.filter(keep)`` below the four projections with their aliases
-    substituted, so the optimized plan's bottom ``Filter`` re-runs the
-    tokenize, lower and stopword HOFs (``size(filter(split(text…``) on
-    every row. The ``_from`` variants apply the expression tails of
-    ``quality_score`` and ``lang_guess``, so every gate value is theirs."""
+    up to 9x per row. The keep predicate would lose that sharing: the
+    optimizer pushes a filter below projections with their aliases
+    substituted, re-running the tokenize, lower and stopword HOFs inside
+    the ``Filter``. ``curate_documents`` stops it with a Generate between
+    the projections and the filter, so each row is tokenized once
+    (``tests/test_plan_shapes.py``). The ``_from`` variants apply the
+    expression tails of ``quality_score`` and ``lang_guess``, so every gate
+    value is theirs."""
     key = (sc, min_quality, langs)
     cols = _GATE_COLUMNS.get(key)
     if cols is None:
@@ -118,6 +120,9 @@ def curate_documents(
         .select(id_col, "text", *hits_in)
         .select(id_col, "text", "_ntok", *hits)
         .select(id_col, "text", *gates)
+        # a Generate the optimizer cannot push the filter through: below it
+        # the keep predicate would re-run the tokenize and stopword HOFs
+        .select(F.inline(F.array(F.struct(id_col, "text", "quality", "lang", "_fp"))))
         .filter(keep)
     )
     w = Window.partitionBy("_fp").orderBy(id_col)

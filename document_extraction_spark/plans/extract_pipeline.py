@@ -1,6 +1,6 @@
 """The extraction pipeline as one lazy DataFrame plan (SURVEY.md §3.4).
 
-``read -> (left_anti vs checkpoint) -> salted repartition -> mapInPandas ->
+``read -> (left_anti vs checkpoint) -> hash repartition -> mapInPandas ->
 write + metrics`` — the distributed analogue of the reference's eager
 per-document loop (/root/reference/main.py:74 -> extractor.py:40-74).
 
@@ -14,7 +14,7 @@ table.
 Scale notes (100 TB / 10^12 turns):
 
 * Extraction is **per-turn stateless**, so rows of one conversation need NOT
-  be co-located — we repartition on ``xxhash64(conv_id, turn_idx, salt)``
+  be co-located — we repartition on ``xxhash64(conv_id, turn_idx, 0)``
   which balances perfectly even when one conversation has 10^6 turns. The
   output *ordering metadata* (turn_idx) carries the stable turn ordering.
 * Column pruning: only (keys + text) flow into the Python worker; Catalyst
@@ -133,7 +133,6 @@ def documents_as_turns(
 def build_extract_df(
     df: DataFrame,
     partitions: int | None = None,
-    salt: int = 0,
     turn_filter=None,
     max_payload_chars: int | None = None,
 ) -> DataFrame:
@@ -150,10 +149,10 @@ def build_extract_df(
         plan = plan.filter(turn_filter)
     plan = plan.select(*[c for c in cols if c in df.columns])
     if partitions:
-        # salted hash repartition: per-turn keys => no conversation-skew;
-        # salt decorrelates reruns (SURVEY.md §4 "Partitioning / skew")
+        # per-turn hash repartition: no conversation-skew (SURVEY.md §4
+        # "Partitioning / skew"); the constant seed keeps the layout stable
         plan = plan.repartition(
-            partitions, F.xxhash64("conv_id", "turn_idx", F.lit(salt))
+            partitions, F.xxhash64("conv_id", "turn_idx", F.lit(0))
         )
     kernel_out = plan.mapInPandas(
         make_extract_kernel(max_payload_chars), schema=KERNEL_SCHEMA

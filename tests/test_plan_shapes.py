@@ -43,3 +43,20 @@ def test_column_pruning_drops_unused(spark, tmp_path):
     scan = spark.read.parquet(path).select("id")
     rs = _plan(scan).split("ReadSchema:")[1][:120]
     assert "id" in rs and '"a"' not in rs and "a:" not in rs
+
+
+def test_curation_gates_tokenize_each_row_once(spark):
+    """The keep filter stays above the gate projections: pushed below them
+    with the aliases substituted, it re-ran the tokenize (``split(``) and
+    stopword HOFs, 13 tokenizations per row instead of one. The filter
+    still runs map-side, before the fingerprint exchange."""
+    from document_extraction_spark.plans.curation import curate_documents
+
+    docs = spark.createDataFrame(
+        [(1, "the cat sat on the mat and the dog"), (2, "le chat est la")],
+        "doc_id long, text string",
+    )
+    out = curate_documents(docs)
+    assert out._jdf.queryExecution().optimizedPlan().toString().count("split(") == 1
+    below_exchange = _plan(out).split("Exchange hashpartitioning(_fp")[1]
+    assert "Filter" in below_exchange

@@ -45,13 +45,22 @@ def test_classify_scalar_equals_vectorized(cases):
     assert C.classify_series(ser).tolist() == [C.classify_one(c) for c in cases]
 
 
-@given(st.lists(FENCY, min_size=1, max_size=12))
-@settings(max_examples=60, deadline=None)
-def test_extract_batch_equals_rowwise_oracle(cases):
+@given(
+    st.lists(st.one_of(FENCY, st.none()), min_size=1, max_size=12),
+    st.one_of(st.none(), st.integers(1, 400)),
+)
+@settings(max_examples=100, deadline=None)
+def test_extract_batch_equals_rowwise_oracle(cases, max_chars):
+    """Each row is the oracle's over the payload cut to ``max_chars``;
+    ``truncated`` and ``bytes_in`` describe the uncut payload."""
     pdf = pd.DataFrame({"conv_id": [str(i) for i in range(len(cases))], "text": cases})
-    out = extract_batch_pdf(pdf)
+    out = extract_batch_pdf(pdf, max_chars=max_chars)
     for i, raw in enumerate(cases):
-        _assert_row_equals_oracle(out.iloc[i], extract_one(raw))
+        raw = raw or ""
+        exp = extract_one(raw[:max_chars])
+        exp["truncated"] = max_chars is not None and len(raw) > max_chars
+        exp["bytes_in"] = len(raw.encode("utf-8"))
+        _assert_row_equals_oracle(out.iloc[i], exp)
 
 
 def _assert_row_equals_oracle(row, exp):

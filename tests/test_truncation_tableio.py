@@ -160,6 +160,10 @@ def test_split_oversized_turns_roundtrip(spark):
     # map-only: no exchange in the plan
     plan = out._jdf.queryExecution().executedPlan().toString()
     assert "Exchange" not in plan
+    # oversized rows chunk in an Arrow kernel: the all-JVM
+    # transform(sequence, substr) chain is quadratic in the payload size
+    assert "MapInPandas" in plan
+    assert "sequence(" not in plan and "substring(" not in plan
 
 
 def test_split_oversized_turns_multibyte_and_null(spark):
